@@ -83,9 +83,9 @@ import graft.table.LakeTable
   *     sec applied at `local[cpus]`, input sized ~50 s at the probe rate
   *     (calm windows reproduce the old 16 M sizing; contended windows
   *     shrink it instead of starving the run);
-  *  5. state-heavy merge A/B (entry <0.86): fast vs merge-on-read vs
-  *     legacy union+reduce with shuffle-bytes meter — BOUNDED (~2-3 min
-  *     from the damped rate), so it runs before the open-ended extras;
+  *  5. state-heavy merge A/B (entry <0.86): copy-on-write vs
+  *     merge-on-read with shuffle-bytes meter — BOUNDED (~2-3 min from
+  *     the damped rate), so it runs before the open-ended extras;
   *  6. final adaptive pair extras (≤0.97): cheap 4N re-samples of the
   *     pair closest to the 0.8 rule, with a 2-stale plateau stop.
   *
@@ -184,7 +184,7 @@ object Bench {
     try {
       log.count()
       val t0 = System.nanoTime()
-      CdcPipeline.replay(spark, log, table, numBatches = 4, salt = 8, writeMetrics = false)
+      CdcPipeline.replay(spark, log, table, numBatches = 4, writeMetrics = false)
       table.snapshot(spark).foreach(_.count()) // force a converged read
       val sec = (System.nanoTime() - t0) / 1e9
       (sec, numEvents / sec)
@@ -201,21 +201,18 @@ object Bench {
   /** The state ≫ batch regime — the shape the 10^10-event north rule
     * actually lives in (a mature table takes small incremental batches).
     * Preloads `stateEvents` over as many keys (untimed), then measures
-    * `batches` incremental applies of `batchEvents` each. `legacy=true`
-    * forces the union+reduce merge (re-shuffles state) for the A/B delta
-    * against the storage-partitioned read.
+    * `batches` incremental applies of `batchEvents` each.
     */
   private def stateHeavy(
       spark: SparkSession,
       stateEvents: Long,
       batchEvents: Long,
       batches: Int,
-      legacy: Boolean,
       mor: Boolean = false): (Double, Double, Double) = {
     val root = tmpRoot("graft-bench-sh")
     val table = new LakeTable(root.toString, numBuckets = NumBuckets, mergeOnRead = mor)
     val init = SyntheticLog.generate(spark, stateEvents, numKeys = stateEvents, parts = SourceParts)
-    CdcPipeline.replay(spark, init, table, numBatches = 2, salt = 8, writeMetrics = false)
+    CdcPipeline.replay(spark, init, table, numBatches = 2, writeMetrics = false)
     // Shuffle-bytes meter: wall time barely moves in local mode (a shuffle
     // costs about as much as a tmpfs read), but on a cluster the exchange
     // is network-bound — bytes moved is the honest scale metric.
@@ -224,22 +221,19 @@ object Bench {
       override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
         shuffled.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
-    if (legacy) sys.props("graft.forceLegacyMerge") = "true"
     spark.sparkContext.addSparkListener(meter)
     try {
       val t0 = System.nanoTime()
       (0 until batches).foreach { i =>
         val b = SyntheticLog.generate(spark, batchEvents, numKeys = stateEvents,
           parts = SourceParts, startId = stateEvents + i * batchEvents)
-        graft.merge.CdcApply.applyBatch(spark, table, b, batchId = 2 + i, salt = 8,
-          writeMetrics = false)
+        graft.merge.CdcApply.applyBatch(spark, table, b, batchId = 2 + i, writeMetrics = false)
       }
       val sec = (System.nanoTime() - t0) / 1e9
       Thread.sleep(1500) // let the async listener bus drain
       (sec, batches.toLong * batchEvents / sec, shuffled.get / 1048576.0)
     } finally {
       spark.sparkContext.removeSparkListener(meter)
-      sys.props.remove("graft.forceLegacyMerge")
       deleteRecursively(root)
     }
   }
@@ -302,12 +296,12 @@ object Bench {
     try {
       writeInput(0L, half) // untimed input staging
       val t0 = System.nanoTime()
-      CdcPipeline.start(spark, inDir, ckpt, table, salt = 8, maxFilesPerTrigger = SourceParts / 2)
+      CdcPipeline.start(spark, inDir, ckpt, table, maxFilesPerTrigger = SourceParts / 2)
         .awaitTermination()
       val firstSec = (System.nanoTime() - t0) / 1e9
       writeInput(half, numEvents - half)
       val t1 = System.nanoTime()
-      CdcPipeline.start(spark, inDir, ckpt, table, salt = 8, maxFilesPerTrigger = SourceParts / 2)
+      CdcPipeline.start(spark, inDir, ckpt, table, maxFilesPerTrigger = SourceParts / 2)
         .awaitTermination()
       val sec = firstSec + (System.nanoTime() - t1) / 1e9
       table.snapshot(spark).foreach(_.count()) // converged read-back
@@ -747,8 +741,8 @@ object Bench {
     var replayRes: Option[(Long, Double, Double)] = None // events, sec, thr
     var streamRes: Option[(Long, Double, Double)] = None // events, sec, thr
     var pairStates: Seq[PairState] = Nil
-    // stateEv, batchEv, batches, thrFast, mbFast, thrLegacy, mbLegacy, thrMor
-    var stateHeavyRes: Option[(Long, Long, Int, Double, Double, Double, Double, Double)] = None
+    // stateEv, batchEv, batches, thrFast, mbFast, thrMor
+    var stateHeavyRes: Option[(Long, Long, Int, Double, Double, Double)] = None
     // (tables, events, thrSerial, thrParallel) — opt-in A/B (SPARK_GRAFT_MULTITABLE=1)
     var multiTableRes: Option[(Int, Long, Double, Double)] = None
 
@@ -833,13 +827,9 @@ object Bench {
             }
           ps + f""","scaling_best":{"n_cores":${best.n},"n4_cores":${best.n4},"efficiency":${best.eff}%.3f$bestMarg}$bestAcc"""
         }
-      val shJson = stateHeavyRes.fold("") { case (se, be, nb, thrF, mbF, thrL, mbL, thrM) =>
+      val shJson = stateHeavyRes.fold("") { case (se, be, nb, thrF, mbF, thrM) =>
         val morPart = if (thrM > 0) f""","events_per_sec_mor":$thrM%.0f,"mor_speedup":${thrM / thrF}%.1f""" else ""
-        val legacyPart =
-          if (thrL > 0)
-            f""","events_per_sec_legacy":$thrL%.0f,"shuffle_mb_legacy":$mbL%.1f,"shuffle_reduction":${mbL / math.max(mbF, 0.1)}%.1f"""
-          else ""
-        f""","state_heavy":{"state_events":$se,"batch_events":$be,"batches":$nb,"events_per_sec":$thrF%.0f,"shuffle_mb":$mbF%.1f$morPart$legacyPart}"""
+        f""","state_heavy":{"state_events":$se,"batch_events":$be,"batches":$nb,"events_per_sec":$thrF%.0f,"shuffle_mb":$mbF%.1f$morPart}"""
       }
       val mtJson = multiTableRes.fold("") { case (t, ev, ser, par) =>
         f""","multi_table":{"tables":$t,"events":$ev,"events_per_sec_serial":$ser%.0f,"events_per_sec_parallel":$par%.0f,"parallel_speedup":${par / ser}%.2f}"""
@@ -1126,21 +1116,15 @@ object Bench {
         val stateEv = sys.env.get("SPARK_GRAFT_STATE_EVENTS").map(_.toLong)
           .getOrElse(clamp(sizingThr * 12.0, 500000L, baseEvents))
         val (batchEv, nb) = (math.max(stateEv / 32, 10000L), 6)
-        val (_, thrFast, mbFast) = stateHeavy(s, stateEv, batchEv, nb, legacy = false)
+        val (_, thrFast, mbFast) = stateHeavy(s, stateEv, batchEv, nb)
         System.err.println(f"[bench] state-heavy fast: $thrFast%.0f ev/s, $mbFast%.1f MB shuffled")
         val thrMor =
           if (System.currentTimeMillis() < deadlineAt(0.92)) {
-            val (_, t, mb) = stateHeavy(s, stateEv, batchEv, nb, legacy = false, mor = true)
+            val (_, t, mb) = stateHeavy(s, stateEv, batchEv, nb, mor = true)
             System.err.println(f"[bench] state-heavy merge-on-read: $t%.0f ev/s, $mb%.1f MB shuffled")
             t
           } else -1.0
-        val (thrLegacy, mbLegacy) =
-          if (System.currentTimeMillis() < deadlineAt(0.97)) {
-            val (_, t, mb) = stateHeavy(s, stateEv, batchEv, nb, legacy = true)
-            System.err.println(f"[bench] state-heavy legacy: $t%.0f ev/s, $mb%.1f MB shuffled")
-            (t, mb)
-          } else (-1.0, -1.0)
-        stateHeavyRes = Some((stateEv, batchEv, nb, thrFast, mbFast, thrLegacy, mbLegacy, thrMor))
+        stateHeavyRes = Some((stateEv, batchEv, nb, thrFast, mbFast, thrMor))
       } finally s.stop()
       emit("partial")
     }

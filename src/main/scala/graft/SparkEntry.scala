@@ -44,13 +44,13 @@ object SparkEntry {
     "q03_cdc_apply_state" -> ((s, dir) =>
       withSha(Lww.applyState(ChangeLog.flat(s, dir)))),
     // §3/§7 full engine: microbatched replay into the transactional
-    // LakeTable (idempotent commits, tombstone retention, salted merge),
+    // LakeTable (idempotent commits, tombstone retention, LWW merge),
     // then read the converged snapshot back. Same oracle as q03 — proves
     // the engine's table state equals the declarative fold.
     "q04_cdc_replay_e2e" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-e2e").toString
       val table = new LakeTable(root, numBuckets = 16)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 6, salt = 4)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 6)
       withSha(table.snapshot(s).get)
     }),
     // Merge-on-read replay: apply appends only per-batch winner files
@@ -62,14 +62,14 @@ object SparkEntry {
     "q45_cdc_mor_replay" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-mor").toString
       val table = new LakeTable(root, numBuckets = 16, mergeOnRead = true, autoCompactDepth = 3)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 6, salt = 4)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 6)
       withSha(table.snapshot(s).get)
     }),
     // §7.0 item 9: per-partition lineage metrics of a replay.
     "q05_cdc_metrics" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-metrics").toString
       val table = new LakeTable(root, numBuckets = 16)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 1, salt = 4)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 1)
       s.read.parquet(s"$root/_metrics")
         .select(col("part"), col("freshEvents"), col("applied"), col("dedupDropped"))
     }),
@@ -188,7 +188,7 @@ object SparkEntry {
     "q16_cdc_compact" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-compact").toString
       val table = new LakeTable(root, numBuckets = 16)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4, salt = 4)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4)
       table.compact(s, tombstoneRetention = Some(graft.table.LogPos("~", Long.MaxValue)))
       withSha(table.snapshot(s).get)
     }),
@@ -566,11 +566,11 @@ object SparkEntry {
         Seq("repo"), "lang")
       val log = ChangeLog.flat(s, dir)
       val mid = maxLsn(log) / 2
-      CdcPipeline.replay(s, log.where(col("lsn") <= mid), table, numBatches = 2, salt = 4)
+      CdcPipeline.replay(s, log.where(col("lsn") <= mid), table, numBatches = 2)
       MaterializedView.maintain(s, table, avgDv)
       MaterializedView.maintain(s, table, langDv)
       CdcPipeline.replay(s, log.where(col("lsn") > mid), table,
-        numBatches = 2, startBatchId = 2, salt = 4)
+        numBatches = 2, startBatchId = 2)
       MaterializedView.maintain(s, table, avgDv)
       MaterializedView.maintain(s, table, langDv)
       val avgView = MaterializedView.withAvg(
@@ -591,7 +591,7 @@ object SparkEntry {
     "q123_cdc_multi_lookup" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-mlk").toString
       val table = new LakeTable(root, numBuckets = 8)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 2, salt = 2)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 2)
       val docId = regexp_extract(col("path"), "f([0-9]+)", 1).cast("int")
       val out = Seq("repo", "path", "commit", "lang", "content")
       val keys = table.snapshot(s).get
@@ -632,7 +632,7 @@ object SparkEntry {
     "q126_cdc_lookup_join" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-lkj").toString
       val table = new LakeTable(root, numBuckets = 8)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 2, salt = 2)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 2)
       val docId = regexp_extract(col("path"), "f([0-9]+)", 1).cast("int")
       val out = Seq("repo", "path", "commit", "lang", "content")
       val keys = table.snapshot(s).get
@@ -655,8 +655,7 @@ object SparkEntry {
       val chain: Seq[DataFrame => DataFrame] = Seq(
         df => Transforms.truncateColumn(df, "content", 40),
         df => Transforms.hashColumn(df, "lang", salt = "s1"))
-      CdcPipeline.start(s, s"$root/in", s"$root/ckpt", table, salt = 2,
-        postProcessors = chain).awaitTermination()
+      CdcPipeline.start(s, s"$root/in", s"$root/ckpt", table, postProcessors = chain).awaitTermination()
       table.snapshot(s).get.select(
         col("repo"), col("path"), col("commit"), col("lang").as("lang_hash"),
         col("content"))
@@ -927,7 +926,7 @@ object SparkEntry {
     "q62_cdc_rebucket" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-rebucket").toString
       val table = new LakeTable(root, numBuckets = 8)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4, salt = 4)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4)
       val next = table.rebucket(s, 32).get
       withSha(graft.table.LakeTable.open(next.root).snapshot(s).get)
     }),
@@ -938,7 +937,7 @@ object SparkEntry {
     "q63_cdc_time_travel" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-tt").toString
       val table = new LakeTable(root, numBuckets = 16)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4, salt = 4)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4)
       withSha(table.snapshotAt(s, 2L).get)
     }),
     // §2.4 point lookup: one key's live row via a driver-computed bucket —
@@ -946,7 +945,7 @@ object SparkEntry {
     "q64_cdc_point_lookup" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-lkp").toString
       val table = new LakeTable(root, numBuckets = 16)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4, salt = 4)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4)
       withSha(table.lookup(s, Seq("repo01", "src/f1.txt")).get)
     }),
 
@@ -958,7 +957,7 @@ object SparkEntry {
     "q112_cdc_change_feed" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-cdf").toString
       val table = new LakeTable(root, numBuckets = 16)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4, salt = 4)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4)
       table.changeFeed(s, 2L, 4L).get
         .select(col("repo"), col("path"), col("commit"), col("lang"),
           sha2(col("content"), 256).as("content_sha"), col("lsn"), col("op"),
@@ -974,7 +973,7 @@ object SparkEntry {
     "q115_cdc_ivm" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-ivm").toString
       val table = new LakeTable(root, numBuckets = 16)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4, salt = 4)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4)
       val m = length(col("content"))
       val view2 = MaterializedView.build(s, table, 2L, Seq("repo"), m, "total_chars").get
       MaterializedView.refresh(view2, table.changeFeed(s, 2L, 4L).get,
@@ -988,7 +987,7 @@ object SparkEntry {
     "q116_cdc_ivm_minmax" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-ivmx").toString
       val table = new LakeTable(root, numBuckets = 16)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4, salt = 4)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4)
       val m = length(col("content"))
       var view = MaterializedView.buildMax(s, table, 2L, Seq("repo"), m, "max_chars").get
       (3L to 4L).foreach { v =>
@@ -1194,7 +1193,7 @@ object SparkEntry {
       graft.streaming.Lineage.replayWithLineage(s, ChangeLog.flat(s, dir), table,
         graft.streaming.Lineage.Job("graft", "files-cdc"),
         inputName = "documents_changelog", outputName = "files_state",
-        numBatches = 4, salt = 4)
+        numBatches = 4)
       graft.streaming.Lineage.feed(s, root)
     }),
 
@@ -1540,10 +1539,10 @@ object SparkEntry {
       def stage(f: DataFrame): Unit =
         Envelope.wrap(f).repartition(4).write.mode("append").parquet(inDir)
       stage(flat.where(col("part") % 2 === 0))
-      CdcPipeline.start(s, inDir, ckpt, table, salt = 4, maxFilesPerTrigger = 3)
+      CdcPipeline.start(s, inDir, ckpt, table, maxFilesPerTrigger = 3)
         .awaitTermination()
       stage(flat.where(col("part") % 2 === 1))
-      CdcPipeline.start(s, inDir, ckpt, table, salt = 4, maxFilesPerTrigger = 3)
+      CdcPipeline.start(s, inDir, ckpt, table, maxFilesPerTrigger = 3)
         .awaitTermination()
       withSha(table.snapshot(s).get)
     }),
@@ -1564,10 +1563,10 @@ object SparkEntry {
       def stage(f: DataFrame): Unit =
         Envelope.wrap(f).repartition(4).write.mode("append").parquet(inDir)
       stage(flat.where(col("part") % 2 === 0))
-      CdcPipeline.start(s, inDir, ckpt, table, salt = 4, maxFilesPerTrigger = 3,
+      CdcPipeline.start(s, inDir, ckpt, table, maxFilesPerTrigger = 3,
         views = Seq(dv)).awaitTermination()
       stage(flat.where(col("part") % 2 === 1))
-      CdcPipeline.start(s, inDir, ckpt, table, salt = 4, maxFilesPerTrigger = 3,
+      CdcPipeline.start(s, inDir, ckpt, table, maxFilesPerTrigger = 3,
         views = Seq(dv)).awaitTermination()
       viewTable.snapshot(s).get.select("repo", "n_rows", "total_chars")
     }),
@@ -1578,7 +1577,7 @@ object SparkEntry {
     "q118_cdc_delete_where" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-delw").toString
       val table = new LakeTable(root, numBuckets = 16)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4, salt = 4)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4)
       merge.Dml.deleteWhere(s, table, col("lang") === "de")
       withSha(table.snapshot(s).get)
     }),
@@ -1589,7 +1588,7 @@ object SparkEntry {
     "q119_cdc_update_where" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-updw").toString
       val table = new LakeTable(root, numBuckets = 16)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4, salt = 4)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4)
       merge.Dml.updateWhere(s, table, col("lang") === "de",
         Seq("content" -> concat(col("content"), lit(" [redacted]"))))
       withSha(table.snapshot(s).get)
@@ -1601,7 +1600,7 @@ object SparkEntry {
     "q120_cdc_restore" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-restore").toString
       val table = new LakeTable(root, numBuckets = 16)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4, salt = 4)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 4)
       table.restore(2L)
       withSha(table.snapshot(s).get)
     }),

@@ -2,25 +2,22 @@ package graft.core
 
 /** Guardrail validation at engine bootstrap — the
   * `pipeline/GuardrailValidator.java:30-35` analog: enforce configured
-  * limits (captured-table count, per-table bucket count, salt factor)
-  * BEFORE any work starts. `warnOnly` downgrades violations to stderr
-  * warnings, mirroring the reference's warn-vs-fail guardrail modes.
+  * limits (captured-table count, per-table bucket count) BEFORE any work
+  * starts. `warnOnly` downgrades violations to stderr warnings, mirroring
+  * the reference's warn-vs-fail guardrail modes.
   */
 final case class Guardrails(
     maxTables: Int = 256,
     maxBucketsPerTable: Int = 65536,
-    maxSaltFactor: Int = 256,
     warnOnly: Boolean = false)
 
 object Guardrails {
 
-  /** Validate a capture configuration. Returns the violation messages
-    * (empty = clean); throws IllegalStateException unless `warnOnly`.
+  /** Validate a capture configuration, `tables` as (name, numBuckets).
+    * Returns the violation messages (empty = clean); throws
+    * IllegalStateException unless `warnOnly`.
     */
-  def validate(
-      g: Guardrails,
-      tables: Seq[(String, Int)], // (name, numBuckets)
-      saltFactor: Int = 1): Seq[String] = {
+  def validate(g: Guardrails, tables: Seq[(String, Int)]): Seq[String] = {
     val v = Seq.newBuilder[String]
     if (tables.size > g.maxTables)
       v += s"captured table count ${tables.size} exceeds guardrail maxTables=${g.maxTables}"
@@ -30,8 +27,6 @@ object Guardrails {
     tables.filter(_._2 < 1).foreach { case (n, b) =>
       v += s"table '$n' bucket count $b must be >= 1"
     }
-    if (saltFactor > g.maxSaltFactor)
-      v += s"salt factor $saltFactor exceeds guardrail maxSaltFactor=${g.maxSaltFactor}"
     val out = v.result()
     if (out.nonEmpty) {
       if (g.warnOnly) out.foreach(m => System.err.println(s"[graft guardrail] $m"))

@@ -37,17 +37,19 @@ import graft.table.{CommitInfo, LakeTable, LogPos, SchemaEvolution}
   *    touched buckets — all as conditional aggregates of a single
   *    `groupBy(part)`. The fences themselves are driver-known literals
   *    (`element_at(<watermark map literal>, part)`), so no join is needed.
-  *  - Job 2 (merge+stage): the batch reduces to one winner per key in ONE
-  *    shuffle — `repartition(numBuckets, key)` whose HashPartitioning both
-  *    satisfies the aggregate's distribution (no second exchange) and
-  *    equals the bucket function, so each task writes exactly its own
-  *    bucket file. Copy-on-write tables then full-outer-join the winners
-  *    against the STORAGE-PARTITIONED state read (bucketed scan, zero
-  *    state-side exchange — `LakeTable.bucketedState` +
-  *    `Lww.mergeCoPartitioned`); merge-on-read tables skip the state scan
-  *    entirely and append the winner files (readers resolve per bucket).
-  *    Optional salted pre-reduce (hot-key level 1) adds one
-  *    batch-side-only shuffle.
+  *  - Job 2 (merge+stage): the batch reduces to one winner per key with
+  *    `Lww.reduceBucketed` — partial aggregate (map-side combine, which
+  *    bounds a hot key at one row per map task) → ONE key exchange whose
+  *    partition id equals the bucket function when the session's shuffle
+  *    partition count is `numBuckets` and AQE coalescing is off;
+  *    otherwise one more `repartition(numBuckets, key)` of the winners.
+  *    Each task then writes exactly its own bucket file. Copy-on-write
+  *    tables full-outer-join the winners against the STORAGE-PARTITIONED
+  *    state read (bucketed scan, zero state-side exchange —
+  *    `LakeTable.bucketedState` + `Lww.mergeCoPartitioned`), or — when
+  *    the batch rivals the state — reduce state ∪ batch in one aggregate;
+  *    merge-on-read tables skip the state scan entirely and append the
+  *    winner files (readers resolve per bucket).
   *  - Job 3 (metrics, optional): per-partition applied counts from the
   *    merged winners' `__src` tag (1 = batch side won), joined driver-side
   *    with the stats vector.
@@ -93,7 +95,6 @@ object CdcApply {
       table: LakeTable,
       batch: DataFrame,
       batchId: Long,
-      salt: Int = 1,
       writeMetrics: Boolean = true,
       fenceByWatermark: Boolean = true,
       cacheBatch: Boolean = true,
@@ -203,9 +204,8 @@ object CdcApply {
         if (batchFence.isDefined) (0 until table.numBuckets).toSet
         else stats.flatMap(_.getSeq[Int](stats.head.fieldIndex("bks"))).toSet
 
-      // Job 2: storage-partitioned merge. Batch side: optional salted
-      // pre-reduce, then ONE key-shuffle LWW reduce laid out
-      // one-partition-per-bucket (reducePartitioned: partition-id ==
+      // Job 2: storage-partitioned merge. Batch side: ONE LWW reduce laid
+      // out one-partition-per-bucket (Lww.reduceBucketed: partition-id ==
       // bucket-id, see LakeTable.stage contract). State side: bucketed
       // scan of the touched buckets' files — NO shuffle (the scan reports
       // the on-disk HashPartitioning; LakeTable.bucketedState). The
@@ -217,9 +217,6 @@ object CdcApply {
       val alignedFenced = batchFence.fold(aligned)(f => aligned.where(posCol > posLit(f)))
 
       val hasStateFiles = last.exists(_.files.exists(f => touched.contains(f.bucket)))
-      // -Dgraft.forceLegacyMerge=true disables the storage-partitioned
-      // state read — bench/A-B escape hatch, never set in production.
-      val forceLegacy = sys.props.get("graft.forceLegacyMerge").contains("true")
       // Physical-path choice from EXACT cardinalities (state rows come
       // from the manifest's footer counts; batch rows from the stats
       // pass): the storage-partitioned join saves shuffling the state but
@@ -232,27 +229,12 @@ object CdcApply {
       val stateRows = if (stateRowCounts.exists(_ < 0)) Long.MaxValue else stateRowCounts.sum
       val preferJoin = stateRows > 2 * freshCount
       val fastState: Option[DataFrame] =
-        if (!hasStateFiles || forceLegacy || table.mergeOnRead || !preferJoin) None
+        if (!hasStateFiles || table.mergeOnRead || !preferJoin) None
         else last.flatMap(ci => table.bucketedState(spark, ci, Some(touched), evolved))
           .map(st => batchFence.fold(st)(f => st.where(posCol > posLit(f))))
 
-      // Bucket-layout LWW reduce: prefer the single-exchange plan with
-      // native map-side combine (Lww.reduceBucketedExact — partial agg
-      // bounds hot keys at one row per map task, no salt stage needed);
-      // fall back to salted-level-1 + repartition when the session's
-      // shuffle-partition count or AQE coalescing can't guarantee the
-      // partition-id==bucket contract.
-      // `exactIn` feeds the partial-agg plan; `fallbackIn` (lazy) feeds the
-      // repartition plan and is where the caller pre-salts ONLY the batch
-      // side (state already holds ≤1 row/key — salting it would add a
-      // pointless state shuffle).
-      def layoutReduce(
-          exactIn: org.apache.spark.sql.DataFrame,
-          fallbackIn: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-        Lww.reduceBucketedExact(exactIn, table.keyCols, table.numBuckets)
-          .getOrElse(Lww.reducePartitioned(fallbackIn, table.keyCols, table.numBuckets))
-      def salted(in: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-        if (salt > 1) Lww.saltedPartial(in, table.keyCols, salt) else in
+      def reduceBucketed(in: DataFrame): DataFrame =
+        Lww.reduceBucketed(in, table.keyCols, table.numBuckets)
 
       // Winners carry __src (1 = the batch side won the key) so the
       // applied-winner metric falls out of the merged result.
@@ -263,24 +245,24 @@ object CdcApply {
           // file stack (LakeTable.resolved). O(batch) apply regardless of
           // table size — the incremental-regime answer to copy-on-write
           // amplification.
-          layoutReduce(alignedFenced, salted(alignedFenced)).withColumn("__src", lit(1))
+          reduceBucketed(alignedFenced).withColumn("__src", lit(1))
         } else if (!hasStateFiles || fastState.isDefined) {
-          val batchW = layoutReduce(alignedFenced, salted(alignedFenced))
+          val batchW = reduceBucketed(alignedFenced)
           fastState match {
-            case Some(st) => Lww.mergeCoPartitioned(st, batchW, table.keyCols, smj = table.sortedBuckets)
+            case Some(st) => Lww.mergeCoPartitioned(st, batchW, table.keyCols)
             case None     => batchW.withColumn("__src", lit(1))
           }
         } else {
           // Union+reduce: chosen when the batch rivals the state (see
           // preferJoin above), or as the fallback when an old file schema
-          // needs a non-native widen (e.g. →String) this batch — shuffles
-          // state once; the rewrite puts those buckets back on the
-          // join path.
+          // needs a non-native widen (e.g. →String) this batch or the
+          // bucketed registration's hardlinks fail — shuffles state once;
+          // the rewrite puts those buckets back on the join path.
           val tagged = alignedFenced.withColumn("__src", lit(1))
           val st = last.flatMap(ci => table.snapshotRaw(spark, ci, Some(touched))).get
           val stAligned = SchemaEvolution.align(st, evolved).withColumn("__src", lit(0))
           val stFenced = batchFence.fold(stAligned)(f => stAligned.where(posCol > posLit(f)))
-          layoutReduce(stFenced.unionAll(tagged), stFenced.unionAll(salted(tagged)))
+          reduceBucketed(stFenced.unionAll(tagged))
         }
       val merged = if (writeMetrics) merged0.persist(StorageLevel.MEMORY_AND_DISK) else merged0
 

@@ -61,8 +61,7 @@ object Dml {
   def deleteWhere(
       spark: SparkSession,
       table: LakeTable,
-      pred: Column,
-      salt: Int = 1): BatchResult = {
+      pred: Column): BatchResult = {
     val state = table.snapshot(spark) match {
       case Some(s) => s
       case None    => return noop(table, "dml-empty-table")
@@ -75,7 +74,7 @@ object Dml {
     val events = tombstones
       .withColumn("commit", bump(col("commit")))
       .withColumn("op", lit("d"))
-    CdcApply.applyBatch(spark, table, events, batchId = 0L, salt = salt,
+    CdcApply.applyBatch(spark, table, events, batchId = 0L,
       writeMetrics = false, fenceByWatermark = false, fenceByBatchId = false)
   }
 
@@ -93,8 +92,7 @@ object Dml {
       spark: SparkSession,
       table: LakeTable,
       pred: Column,
-      sets: Seq[(String, Column)],
-      salt: Int = 1): BatchResult = {
+      sets: Seq[(String, Column)]): BatchResult = {
     val bad = sets.map(_._1).filter(table.keyCols.contains)
     require(bad.isEmpty, s"cannot SET key column(s) ${bad.mkString(", ")} — " +
       "delete and re-insert instead (the key IS the row's identity and bucket)")
@@ -118,7 +116,7 @@ object Dml {
     val events = updated
       .withColumn("commit", bump(col("commit")))
       .withColumn("op", lit("u"))
-    CdcApply.applyBatch(spark, table, events, batchId = 0L, salt = salt,
+    CdcApply.applyBatch(spark, table, events, batchId = 0L,
       writeMetrics = false, fenceByWatermark = false, fenceByBatchId = false)
   }
 }

@@ -1,5 +1,7 @@
 package graft.merge
 
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -139,7 +141,6 @@ object MultiTable {
       batch: DataFrame,
       routeCol: String,
       batchId: Long,
-      salt: Int = 1,
       writeMetrics: Boolean = false,
       fenceByWatermark: Boolean = true,
       parallelism: Int = 1): Map[String, CdcApply.BatchResult] = {
@@ -147,7 +148,7 @@ object MultiTable {
     def applyOne(d: TableDef): CdcApply.BatchResult = {
       val slice = cached.where(col(routeCol) === d.name).drop(routeCol)
       val processed = d.postProcessors.foldLeft(slice)((df, p) => p(df))
-      CdcApply.applyBatch(spark, registry(d.name), processed, batchId, salt,
+      CdcApply.applyBatch(spark, registry(d.name), processed, batchId,
         writeMetrics, fenceByWatermark, cacheBatch = false)
     }
     try {
@@ -237,13 +238,32 @@ object MultiTable {
     new graft.table.FileCommitStore(java.nio.file.Paths.get(registry.root, "_catalog"))
 
   private val CatalogName = "c(\\d+)\\.json".r
+
+  /** Manifest JSON via the commit log's Jackson mapper: field order,
+    * extra fields and quoting in table names are the parser's problem, and
+    * a malformed manifest throws instead of misparsing.
+    */
   private def parseCatalog(text: String): CatalogCommit = {
-    val seq = """"seq"\s*:\s*(\d+)""".r.findFirstMatchIn(text).get.group(1).toLong
-    val batchId = """"batchId"\s*:\s*(-?\d+)""".r.findFirstMatchIn(text).get.group(1).toLong
-    val vs = """"([^"]+)"\s*:\s*(\d+)""".r.findAllMatchIn(
-      text.substring(text.indexOf("versions"))).map(m => m.group(1) -> m.group(2).toLong).toMap
-    CatalogCommit(seq, batchId, vs)
+    val o = LakeTable.mapper.readTree(text)
+    def long(n: JsonNode, what: String): Long =
+      if (n != null && n.isIntegralNumber) n.asLong()
+      else throw new IllegalStateException(s"catalog manifest: $what is not an integer in $text")
+    val vs = o.get("versions")
+    if (vs == null || !vs.isObject)
+      throw new IllegalStateException(s"catalog manifest: no 'versions' object in $text")
+    CatalogCommit(long(o.get("seq"), "seq"), long(o.get("batchId"), "batchId"),
+      vs.properties().asScala.map(e => e.getKey -> long(e.getValue, s"version of '${e.getKey}'")).toMap)
   }
+
+  private def catalogJson(cc: CatalogCommit): String = {
+    val o = LakeTable.mapper.createObjectNode()
+    o.put("seq", cc.seq)
+    o.put("batchId", cc.batchId)
+    val vs = o.putObject("versions")
+    cc.versions.toSeq.sortBy(_._1).foreach { case (n, v) => vs.put(n, v) }
+    LakeTable.mapper.writeValueAsString(o)
+  }
+
   private def catalogNames(store: graft.table.CommitStore): Seq[String] =
     store.listNames().filter(CatalogName.matches).sorted
 
@@ -283,10 +303,7 @@ object MultiTable {
     }
     val seq = last.map(_.seq + 1).getOrElse(1L)
     val cc = CatalogCommit(seq, batchId, versions)
-    val vJson = versions.toSeq.sortBy(_._1)
-      .map { case (n, v) => s""""$n":$v""" }.mkString("{", ",", "}")
-    try store.create(f"c$seq%020d.json",
-      s"""{"seq":$seq,"batchId":$batchId,"versions":$vJson}""")
+    try store.create(f"c$seq%020d.json", catalogJson(cc))
     catch {
       case e: graft.table.CommitStore.AlreadyExists =>
         throw new java.util.ConcurrentModificationException(
@@ -310,11 +327,10 @@ object MultiTable {
       batch: DataFrame,
       routeCol: String,
       batchId: Long,
-      salt: Int = 1,
       writeMetrics: Boolean = false,
       fenceByWatermark: Boolean = true,
       parallelism: Int = 1): Map[String, CdcApply.BatchResult] = {
-    val res = applyBatch(spark, registry, batch, routeCol, batchId, salt,
+    val res = applyBatch(spark, registry, batch, routeCol, batchId,
       writeMetrics, fenceByWatermark, parallelism)
     commitCatalog(registry, batchId)
     res

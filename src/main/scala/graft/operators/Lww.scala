@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Envelope
 
@@ -12,22 +11,14 @@ import graft.core.Envelope
   * per key Struct (`debezium-connector-jdbc/.../ReducedRecordBuffer.java:48-115`);
   * the position total order is `BinlogHistoryRecordComparator.java:109-137`.
   *
-  * Spark-first design — two physical strategies, same semantics:
+  * One plan: `groupBy(key).agg(max_by(row, (commit, lsn)))`. Catalyst
+  * plans a partial aggregate BEFORE the shuffle (map-side combine), so with
+  * duplication factor d the shuffle moves ~1/d of the events, and a hot
+  * key's events collapse to one row per map task before the exchange — the
+  * partial combine is what bounds skew (the DS2 argument, PAPERS.md).
   *
-  *  - [[reduce]] (default): `groupBy(key).agg(max_by(row, (commit, lsn)))`.
-  *    This is the scale path: Catalyst plans a partial aggregate BEFORE the
-  *    shuffle (map-side combine), so with duplication factor d the shuffle
-  *    moves ~1/d of the events — a hot key's events collapse inside each
-  *    map task first, which is the built-in answer to skew. With salt > 1
-  *    the aggregate runs in two levels, (key, lsn%salt) then key — useful
-  *    when single hot keys dominate entire input partitions.
-  *  - [[reduceWindow]]: `row_number() OVER (PARTITION BY key ORDER BY
-  *    commit DESC, lsn DESC) = 1`, with optional salted pre-pass. Shuffles
-  *    every event, then sorts. Kept for comparison and for consumers that
-  *    want rank > 1 (history), but the agg path wins at scale.
-  *
-  * Both are deterministic: the (commit, lsn) struct order is total per
-  * key, and ties can only be exact duplicate replays (identical rows).
+  * Deterministic: the (commit, lsn) struct order is total per key, and ties
+  * can only be exact duplicate replays (identical rows).
   */
 object Lww {
 
@@ -36,117 +27,94 @@ object Lww {
   /** Reduce a flat change log (key cols + commit/lsn + payload) to the
     * winning event per key. Aggregate-based: map-side partial combine.
     */
-  def reduce(df: DataFrame, keyCols: Seq[String] = Envelope.keyCols, salt: Int = 1): DataFrame = {
-    def winnerOf(d: DataFrame): Column = max_by(struct(d.columns.map(col): _*), pos).as("__w")
-    val pre =
-      if (salt > 1)
-        df.groupBy(keyCols.map(col) :+ pmod(col("lsn"), lit(salt.toLong)).as("__salt"): _*)
-          .agg(winnerOf(df))
-          .select(col("__w.*"))
-      else df
-    pre.groupBy(keyCols.map(col): _*).agg(winnerOf(pre)).select(col("__w.*"))
-  }
-
-  /** Level-1 of the salted two-level reduce alone: winners per
-    * (key, lsn % salt). The caller completes the reduction with a final
-    * per-key aggregate — lets the merge path fuse level 2 into its own
-    * key-partitioned aggregate, paying the salt with ONE extra shuffle
-    * total instead of two.
-    */
-  def saltedPartial(df: DataFrame, keyCols: Seq[String] = Envelope.keyCols, salt: Int): DataFrame =
-    df.groupBy(keyCols.map(col) :+ pmod(col("lsn"), lit(salt.toLong)).as("__salt"): _*)
+  def reduce(df: DataFrame, keyCols: Seq[String] = Envelope.keyCols): DataFrame =
+    df.groupBy(keyCols.map(col): _*)
       .agg(max_by(struct(df.columns.map(col): _*), pos).as("__w"))
       .select(col("__w.*"))
 
-  /** Reduce with the output laid out as exactly `numPartitions` hash-by-key
-    * partitions: an explicit `repartition(n, key)` whose HashPartitioning
-    * already satisfies the aggregate's required distribution, so Catalyst
-    * plans NO second exchange — partition id == pmod(hash(key), n), i.e.
-    * the LakeTable bucket. One shuffle for reduce + bucket layout combined
-    * (vs reduce-shuffle + repartition-shuffle when done separately).
+  /** [[reduce]] with the output laid out as exactly `numBuckets` hash-by-key
+    * partitions: partition id == `pmod(hash(keys), numBuckets)`, the
+    * [[graft.table.LakeTable]] bucket — the [[graft.table.LakeTable.stage]]
+    * contract.
+    *
+    * The plan is always HashAggregate(partial) → Exchange(keys,
+    * `spark.sql.shuffle.partitions`) → HashAggregate(final). When that
+    * exchange provably IS the bucket layout ([[bucketAligned]]) the
+    * winners are returned as they are: one shuffle for reduce + bucket
+    * layout combined. Otherwise a `repartition(numBuckets, keys)` of the
+    * winners (≤1 row per key, after the partial combine) enforces the
+    * layout by construction. In that case `hash(keys)` joins the grouping
+    * keys: a function of the key, so the groups are unchanged, but the
+    * reduce exchange can then never equal `HashPartitioning(keys,
+    * numBuckets)` — Spark elides a repartition whose input already has
+    * that exact partitioning, and under AQE the surviving reduce exchange
+    * may be coalesced, which would break partition id == bucket.
     */
-  def reducePartitioned(df: DataFrame, keyCols: Seq[String] = Envelope.keyCols, numPartitions: Int): DataFrame = {
-    val pre = df.repartition(numPartitions, keyCols.map(col): _*)
-    // Key columns pass through the aggregate as the grouping attributes
-    // (NOT re-extracted from the winner struct): the output then still
-    // carries the repartition's HashPartitioning, so a downstream
-    // co-partitioned join/write needs no further exchange. Extracting keys
-    // from the struct would mint fresh attributes and silently discard the
-    // partitioning (one extra shuffle).
-    val others = pre.columns.filterNot(keyCols.contains)
-    pre.groupBy(keyCols.map(col): _*)
-      .agg(max_by(struct(others.map(col): _*), pos).as("__w"))
-      .select(pre.columns.map(c => if (keyCols.contains(c)) col(c) else col(s"__w.$c").as(c)).toIndexedSeq: _*)
+  def reduceBucketed(df: DataFrame, keyCols: Seq[String], numBuckets: Int): DataFrame = {
+    val winners = reduceKeyed(df, keyCols)
+    if (bucketAligned(winners, keyCols, numBuckets)) winners
+    else
+      reduceKeyed(df.withColumn("__h", hash(keyCols.map(col): _*)), keyCols :+ "__h")
+        .drop("__h")
+        .repartition(numBuckets, keyCols.map(col): _*)
   }
 
-  /** Reduce landing directly in the bucket layout WITH native map-side
-    * combine — the strictly better plan when the session allows it.
+  /** `groupBy(keyCols).agg(max_by)` in the input's column order. Key
+    * columns pass through the aggregate as the grouping attributes (NOT
+    * re-extracted from the winner struct): the output then still carries
+    * the exchange's HashPartitioning, so a downstream co-partitioned
+    * join/write needs no further exchange. Extracting keys from the struct
+    * would mint fresh attributes and silently discard the partitioning
+    * (one extra shuffle).
+    */
+  private def reduceKeyed(df: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val others = df.columns.filterNot(keyCols.contains)
+    df.groupBy(keyCols.map(col): _*)
+      .agg(max_by(struct(others.map(col): _*), pos).as("__w"))
+      .select(df.columns.map(c => if (keyCols.contains(c)) col(c) else col(s"__w.$c").as(c)).toIndexedSeq: _*)
+  }
+
+  /** Whether `winners`' partition id is provably the bucket id.
     *
-    * [[reducePartitioned]]'s explicit `repartition(n, keys)` satisfies the
-    * aggregate's distribution, so Catalyst plans ONE complete-mode
-    * aggregate after the exchange — and therefore NO partial aggregate
-    * before it: the exchange carries every raw event, and a hot key's
-    * whole event stream lands on one reducer (why the salted level-1
-    * exists). A plain `groupBy(keys)` instead plans
-    * HashAggregate(partial) → Exchange(keys, spark.sql.shuffle.partitions)
-    * → HashAggregate(final): the partial combine caps any key's shuffle
-    * contribution at one row per map task — the bound salting buys,
-    * without salt's second exchange — and when `shuffle.partitions ==
-    * numBuckets` the exchange's HashPartitioning partition id IS the
-    * bucket id, so the output still honors [[graft.table.LakeTable.stage]]'s
-    * partition-id==bucket contract.
-    *
-    * Returns None when the contract cannot be guaranteed: shuffle
-    * partition count ≠ numBuckets, AQE partition coalescing active (an
-    * AQEShuffleRead merging post-shuffle partitions would break
-    * partition-id==bucket), or — checked against the PHYSICAL plan, not
-    * inferred from conf — the result's outputPartitioning is anything but
+    * False when the session cannot guarantee it: shuffle partition count
+    * ≠ numBuckets, or AQE partition coalescing active (an AQEShuffleRead
+    * merging post-shuffle partitions would break partition-id==bucket).
+    * Otherwise checked against the PHYSICAL plan, not inferred from conf:
+    * the result's outputPartitioning must be exactly
     * `HashPartitioning(keyCols, numBuckets)`. The plan check is the real
     * guard: a groupBy plans NO exchange when its input already satisfies
     * ClusteredDistribution (Catalyst accepts a hash layout on any SUBSET
     * of the grouping keys at ANY partition count), in which case the
     * partition id is not the bucket function and writing it as buckets
-    * would silently corrupt every later co-partitioned merge. Callers
-    * fall back to the salted repartition shape, whose explicit
-    * `repartition(n, keys)` enforces the contract by construction.
+    * would silently corrupt every later co-partitioned merge.
     * Cost note: the check plans the reduce subtree once on the driver
     * (single-digit ms on the shallow cached-batch lineages of the apply
     * path; the composed merge re-plans at action time regardless) —
     * accepted: it is the only guard that cannot drift from what Spark
     * actually executes.
     */
-  def reduceBucketedExact(df: DataFrame, keyCols: Seq[String], numBuckets: Int): Option[DataFrame] = {
-    val conf = df.sparkSession.sessionState.conf
+  private def bucketAligned(winners: DataFrame, keyCols: Seq[String], numBuckets: Int): Boolean = {
+    val conf = winners.sparkSession.sessionState.conf
     val aqeCoalesce = conf.getConfString("spark.sql.adaptive.enabled", "true").toBoolean &&
       conf.getConfString("spark.sql.adaptive.coalescePartitions.enabled", "true").toBoolean
     val shufflePartitions = conf.getConfString("spark.sql.shuffle.partitions", "200").toInt
-    if (shufflePartitions != numBuckets || aqeCoalesce) None
-    else {
-      val others = df.columns.filterNot(keyCols.contains)
-      // Grouping attributes pass through (not re-extracted from the
-      // winner struct) for the same reason as reducePartitioned: the
-      // output must keep the exchange's HashPartitioning.
-      val res = df.groupBy(keyCols.map(col): _*)
-        .agg(max_by(struct(others.map(col): _*), pos).as("__w"))
-        .select(df.columns.map(c => if (keyCols.contains(c)) col(c) else col(s"__w.$c").as(c)).toIndexedSeq: _*)
-      res.queryExecution.executedPlan.outputPartitioning match {
-        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-            if h.numPartitions == numBuckets &&
-              h.expressions.length == keyCols.length &&
-              h.expressions.zip(keyCols).forall {
-                case (a: org.apache.spark.sql.catalyst.expressions.Attribute, k) => a.name == k
-                case _ => false
-              } =>
-          Some(res)
-        case _ => None
-      }
-    }
+    shufflePartitions == numBuckets && !aqeCoalesce &&
+      (winners.queryExecution.executedPlan.outputPartitioning match {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+          h.numPartitions == numBuckets &&
+            h.expressions.length == keyCols.length &&
+            h.expressions.zip(keyCols).forall {
+              case (a: org.apache.spark.sql.catalyst.expressions.Attribute, k) => a.name == k
+              case _ => false
+            }
+        case _ => false
+      })
   }
 
   /** Merge per-key state against per-key batch winners when BOTH sides are
     * already hash-clustered on the key with the same partition count —
     * state from a bucketed scan ([[graft.table.LakeTable.bucketedState]]),
-    * batch from [[reducePartitioned]]. Catalyst then plans the full-outer
+    * batch from [[reduceBucketed]]. Catalyst then plans the full-outer
     * join with ZERO additional exchanges (storage-partitioned-join shape):
     * the only shuffle in the whole merge is the batch side's reduce.
     *
@@ -154,54 +122,27 @@ object Lww {
     * output; batchWinners is a completed LWW reduce). The batch wins ties
     * (a tie is an exact duplicate replay, so either row is identical).
     *
-    * Join strategy per the table's physical layout:
-    *  - default (`smj = false`): SHUFFLE_HASH — keeps the big state side
-    *    unsorted (hash-join with the small batch as build side) instead of
-    *    SMJ sorting millions of state rows per bucket every microbatch;
-    *  - `smj = true` (sorted-bucket tables): SORT-MERGE — the state scan
-    *    already reports per-bucket key ordering (files written sorted,
-    *    ≤1 file per bucket), so the SMJ plans NO state-side sort and only
-    *    sorts the small batch side. Trades the SHJ build's O(batch
-    *    winners/partition) memory for streaming merge — the escape valve
-    *    when executor memory pressure shows up at scale (SURVEY §9 item 3).
+    * SHUFFLE_HASH join: keeps the big state side unsorted (hash-join with
+    * the small batch as build side) instead of sort-merge sorting millions
+    * of state rows per bucket every microbatch.
     */
   def mergeCoPartitioned(
       state: DataFrame,
       batchWinners: DataFrame,
-      keyCols: Seq[String] = Envelope.keyCols,
-      smj: Boolean = false): DataFrame = {
+      keyCols: Seq[String] = Envelope.keyCols): DataFrame = {
     val fields = state.columns.toSeq
     require(fields == batchWinners.columns.toSeq,
       s"state/batch schemas must align: $fields vs ${batchWinners.columns.toSeq}")
     val s = state.alias("s")
     val b = batchWinners.alias("b")
     val cond = keyCols.map(k => col(s"s.$k") === col(s"b.$k")).reduce(_ && _)
-    val joined = s.join(b.hint(if (smj) "merge" else "shuffle_hash"), cond, "full_outer")
+    val joined = s.join(b.hint("shuffle_hash"), cond, "full_outer")
     val batchWins = col(s"b.${keyCols.head}").isNotNull &&
       (col(s"s.${keyCols.head}").isNull ||
         struct(col("b.commit"), col("b.lsn")) >= struct(col("s.commit"), col("s.lsn")))
     joined.select(
       fields.map(f => when(batchWins, col(s"b.$f")).otherwise(col(s"s.$f")).as(f)) :+
         when(batchWins, lit(1)).otherwise(lit(0)).as("__src"): _*)
-  }
-
-  /** Window/row_number variant (the literal ReducedRecordBuffer shape). */
-  def reduceWindow(df: DataFrame, keyCols: Seq[String] = Envelope.keyCols, salt: Int = 1): DataFrame = {
-    val keys = keyCols.map(col)
-    val ordering = Seq(col("commit").desc, col("lsn").desc)
-    val pre =
-      if (salt > 1) {
-        // Salt on lsn: uniform, deterministic, independent of the key.
-        val w1 = Window.partitionBy(keys :+ col("__salt"): _*).orderBy(ordering: _*)
-        df.withColumn("__salt", pmod(col("lsn"), lit(salt.toLong)))
-          .withColumn("__rn", row_number().over(w1))
-          .where(col("__rn") === 1)
-          .drop("__salt", "__rn")
-      } else df
-    val w2 = Window.partitionBy(keys: _*).orderBy(ordering: _*)
-    pre.withColumn("__rn", row_number().over(w2))
-      .where(col("__rn") === 1)
-      .drop("__rn")
   }
 
   /** Apply semantics after reduction: winners with op 'd' disappear
@@ -216,14 +157,14 @@ object Lww {
     * (null-value markers trailing a delete) carry no state and are
     * dropped before reduction, as the reference's sink does.
     */
-  def applyState(log: DataFrame, keyCols: Seq[String] = Envelope.keyCols, salt: Int = 1): DataFrame = {
+  def applyState(log: DataFrame, keyCols: Seq[String] = Envelope.keyCols): DataFrame = {
     require(log.columns.contains("op"), "applyState expects an 'op' column")
     val log0 = log.where(col("op") =!= Envelope.OpTombstone)
     // Fence: max (commit, lsn) among truncate events, as a 1-row DF
     // cross-joined (broadcast, tiny) — avoids a driver collect.
     val fence = log0.where(col("op") === Envelope.OpTruncate)
       .agg(max(struct(col("commit"), col("lsn"))).as("__fence"))
-    val winners = reduce(log0.where(col("op") =!= Envelope.OpTruncate), keyCols, salt)
+    val winners = reduce(log0.where(col("op") =!= Envelope.OpTruncate), keyCols)
     winners
       .crossJoin(broadcast(fence))
       .where(col("__fence").isNull || struct(col("commit"), col("lsn")) > col("__fence"))

@@ -90,7 +90,6 @@ object CdcPipeline {
       inputDir: String,
       checkpointDir: String,
       table: LakeTable,
-      salt: Int = 1,
       maxFilesPerTrigger: Int = 16,
       orderedInput: Boolean = false,
       signalChannel: Option[String] = None,
@@ -220,8 +219,7 @@ object CdcPipeline {
         }
         val flat = Envelope.unwrap(envBatch).drop("__deleted")
         val processed = postProcessors.foldLeft(flat)((d, p) => p(d))
-        CdcApply.applyBatch(sp, table, processed, batchId, salt,
-          fenceByWatermark = orderedInput)
+        CdcApply.applyBatch(sp, table, processed, batchId, fenceByWatermark = orderedInput)
         views.foreach(v => MaterializedView.maintain(sp, table, v))
         // join views catch BOTH their bases up (version-pair fenced), so
         // the pipeline's table being either side — or the other side
@@ -252,7 +250,6 @@ object CdcPipeline {
       checkpointDir: String,
       registry: graft.merge.MultiTable.Registry,
       routeExpr: String,
-      salt: Int = 1,
       maxFilesPerTrigger: Int = 16,
       orderedInput: Boolean = false,
       parallelism: Int = 1,
@@ -273,10 +270,10 @@ object CdcPipeline {
         // txmetadata + transactional-sink pairing, lake-native.
         if (atomicCatalog)
           graft.merge.MultiTable.applyBatchAtomic(sp, registry, flat, "__route", batchId,
-            salt, fenceByWatermark = orderedInput, parallelism = parallelism)
+            fenceByWatermark = orderedInput, parallelism = parallelism)
         else
           graft.merge.MultiTable.applyBatch(sp, registry, flat, "__route", batchId,
-            salt, fenceByWatermark = orderedInput, parallelism = parallelism)
+            fenceByWatermark = orderedInput, parallelism = parallelism)
         ()
       }
       .start()
@@ -291,7 +288,6 @@ object CdcPipeline {
       log: DataFrame,
       table: LakeTable,
       numBatches: Int = 4,
-      salt: Int = 1,
       startBatchId: Long = 0L,
       writeMetrics: Boolean = true,
       onBatch: BatchResult => Unit = _ => ()): Seq[BatchResult] = {
@@ -306,7 +302,7 @@ object CdcPipeline {
       (0 until numBatches).map { i =>
         val (a, b) = (lo + i * width, lo + (i + 1) * width)
         val slice = cachedLog.where(col("lsn") >= a && col("lsn") < b)
-        val r = CdcApply.applyBatch(spark, table, slice, startBatchId + i, salt, writeMetrics,
+        val r = CdcApply.applyBatch(spark, table, slice, startBatchId + i, writeMetrics,
           cacheBatch = false)
         onBatch(r) // observers (e.g. the lineage feed) see each commit as it lands
         r

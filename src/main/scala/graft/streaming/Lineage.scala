@@ -131,14 +131,13 @@ object Lineage {
       job: Job,
       inputName: String,
       outputName: String,
-      numBatches: Int = 4,
-      salt: Int = 1): Seq[CdcApply.BatchResult] = {
+      numBatches: Int = 4): Seq[CdcApply.BatchResult] = {
     val inputs = Seq((inputName, log, TypeStream))
     val outputs = Seq((outputName, graft.operators.Lww.applyState(log, table.keyCols), TypeTable))
     emitStart(spark, table.root, job, inputs, outputs)
     var seq = inputs.size + outputs.size
     try {
-      val results = CdcPipeline.replay(spark, log, table, numBatches, salt,
+      val results = CdcPipeline.replay(spark, log, table, numBatches,
         onBatch = r => { emitRunning(spark, table.root, job, seq, r.batchId, r.eventsIn); seq += 1 })
       val live = table.snapshot(spark).map(_.count()).getOrElse(0L)
       emitTerminal(spark, table.root, job, seq, Complete, live)

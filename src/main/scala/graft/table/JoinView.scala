@@ -119,7 +119,6 @@ object JoinView {
       rightOn: String,
       leftCols: Seq[String],
       rightCols: Seq[String],
-      applySalt: Int = 1,
       joinType: String = "inner") {
     require(Seq("inner", "left_outer", "right_outer", "full_outer").contains(joinType),
       s"joinType must be inner, left_outer, right_outer or full_outer, got $joinType")
@@ -432,12 +431,9 @@ object JoinView {
           outer += partnerEv(lastVals, "u", 1L)
         }
 
-        // applySalt > 1: a HOT join value (one dimension row matching many
-        // rows) concentrates its pairs in few view keys' buckets — the
-        // engine's salted pre-reduce flattens that skew before the merge.
         graft.merge.CdcApply.applyBatch(spark, jv.view,
           (Seq(retracts, upserts) ++ outer.result()).reduce(_ unionAll _),
-          batchId = batchId, salt = jv.applySalt, writeMetrics = false)
+          batchId = batchId, writeMetrics = false)
       } finally {
         delta.unpersist()
         prunedProbe.foreach(_.unpersist())

@@ -90,18 +90,11 @@ final class LakeTable(
     val numBuckets: Int = 32,
     val keyCols: Seq[String] = Envelope.keyCols,
     val mergeOnRead: Boolean = false,
-    val sortedBuckets: Boolean = false,
     val autoCompactDepth: Int = 0,
     val maxFileRows: Long = 0L,
     val bloomKeyNdv: Int = 0,
     val writerOptions: Map[String, String] = Map.empty,
     val commitStore: Option[CommitStore] = None) {
-  require(!(sortedBuckets && mergeOnRead),
-    "sortedBuckets needs the ≤1-file-per-bucket CoW invariant (Spark only " +
-      "reports bucket sort order for single-file buckets); merge-on-read stacks files")
-  require(!(sortedBuckets && maxFileRows > 0),
-    "sortedBuckets needs the ≤1-file-per-bucket CoW invariant; " +
-      "maxFileRows splits a bucket write into size-bounded files")
   private def commitsDir: Path = Paths.get(root, "_commits")
 
   /** The commit log's storage backend (schema history + offset store in
@@ -937,24 +930,10 @@ final class LakeTable(
     gcBucketedDirs(keepFrom = ci.version)
 
     spark.sql(s"DROP TABLE IF EXISTS $catalogName")
-    // SORTED BY: with sortedBuckets, stage() wrote every bucket file sorted
-    // by the key, and CoW keeps ≤1 file per bucket, so the scan also
-    // reports per-bucket outputOrdering — an SMJ against it needs neither
-    // an exchange NOR a sort on the state side (SURVEY §9 item 3: trades
-    // the SHJ hash-build memory for a one-time sort at write). Scan-side
-    // ordering is gated behind a conf (off by default since SPARK-28632
-    // because it costs a files-per-bucket check at planning); Spark still
-    // independently verifies exactly-one-file-per-bucket before trusting
-    // the order, so enabling it is safe — and free for non-sorted tables.
-    val sortedClause =
-      if (sortedBuckets) {
-        spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-        s"SORTED BY (${keyCols.map(k => s"`$k`").mkString(", ")}) "
-      } else ""
     spark.sql(
       s"""CREATE TABLE $catalogName (${StructType(readSchema.fields.map(_.copy(nullable = true))).toDDL})
          |USING parquet
-         |CLUSTERED BY (${keyCols.map(k => s"`$k`").mkString(", ")}) ${sortedClause}INTO $numBuckets BUCKETS
+         |CLUSTERED BY (${keyCols.map(k => s"`$k`").mkString(", ")}) INTO $numBuckets BUCKETS
          |LOCATION '${dir.toAbsolutePath}'""".stripMargin)
     registrations += 1
     registeredState = Some(cacheKey)
@@ -1035,9 +1014,7 @@ final class LakeTable(
         // of admitting every split file. Order never affects correctness
         // (bucket membership and LWW are order-independent); skipped when
         // no consumer of the order exists — single-file buckets have
-        // whole-bucket bounds regardless. (sortedBuckets sorts in stage()
-        // and is mutually exclusive with maxFileRows per the constructor
-        // require, so this branch is the only sorting writer here.)
+        // whole-bucket bounds regardless.
         val laid =
           if (maxFileRows > 0) laid0.sortWithinPartitions(keyCols.map(col): _*)
           else laid0
@@ -1099,10 +1076,14 @@ final class LakeTable(
     * disk where other hosts cannot see it). With an injected backend the
     * entries live alongside the commits, namespaced `ref_<name>.json`
     * (the commit-name filter `v\d+\.json` cannot collide); the file
-    * default keeps its own `_refs/` directory.
+    * default keeps its own `_refs/` directory, where tables tagged before
+    * the rename hold `<name>.json` entries — still read and dropped, so
+    * their retention pins survive.
     */
   private val refsStore: CommitStore = commitStore.getOrElse(new FileCommitStore(refsDir))
   private def refEntry(name: String): String = s"ref_$name.json"
+  private def refEntries(name: String): Seq[String] =
+    if (commitStore.isEmpty) Seq(s"$name.json", refEntry(name)) else Seq(refEntry(name))
 
   /** Pin `version` under `name`. Tags are immutable by default — retagging
     * an existing name requires `replace = true` (the Iceberg
@@ -1113,29 +1094,33 @@ final class LakeTable(
     require(commitVersions().contains(version), s"no commit at version $version")
     val json = s"""{"name":"$name","version":$version,"tsMs":${System.currentTimeMillis()}}"""
     if (replace) refsStore.replace(refEntry(name), json)
-    else
+    else {
+      require(!tags().contains(name), s"tag '$name' exists (use replace = true)")
       try refsStore.create(refEntry(name), json)
       catch {
         case e: CommitStore.AlreadyExists =>
           throw new IllegalArgumentException(
             s"requirement failed: tag '$name' exists (use replace = true)", e)
       }
+    }
   }
 
-  def tags(): Map[String, Long] =
-    refsStore.listNames()
-      .filter(n => n.startsWith("ref_") && n.endsWith(".json"))
-      .map { n =>
-        val o = LakeTable.mapper.readTree(refsStore.read(n))
-        o.get("name").asText() -> o.get("version").asLong()
-      }.toMap
+  def tags(): Map[String, Long] = {
+    val (current, legacy) = refsStore.listNames().filter(_.endsWith(".json")).partition(_.startsWith("ref_"))
+    // legacy entries first: a `ref_` entry for the same tag wins
+    ((if (commitStore.isEmpty) legacy else Nil) ++ current).map { n =>
+      val o = LakeTable.mapper.readTree(refsStore.read(n))
+      o.get("name").asText() -> o.get("version").asLong()
+    }.toMap
+  }
 
   def dropTag(name: String): Boolean = {
     // same validation as tag(): a separator-bearing name would resolve
     // outside the ref namespace and delete arbitrary json (e.g. a commit)
     require(refName.matches(name), s"invalid tag name '$name'")
-    val existed = refsStore.listNames().contains(refEntry(name))
-    refsStore.delete(refEntry(name))
+    val entries = refEntries(name)
+    val existed = refsStore.listNames().exists(entries.contains)
+    entries.foreach(refsStore.delete)
     existed
   }
 
@@ -1224,7 +1209,7 @@ final class LakeTable(
     lastCommit().flatMap { ci =>
       resolved(spark, ci, None).map { df =>
         val next = new LakeTable(root, newNumBuckets, keyCols, mergeOnRead,
-          sortedBuckets, autoCompactDepth, maxFileRows, bloomKeyNdv, writerOptions)
+          autoCompactDepth, maxFileRows, bloomKeyNdv, writerOptions, commitStore)
         val laid = df.repartition(newNumBuckets, keyCols.map(col): _*)
         val staged = next.stage(laid, ci.batchId, ci.schemaIdx, attempt = ci.version + 1)
         next.commit(ci.copy(version = ci.version + 1, files = staged,
@@ -1237,7 +1222,7 @@ final class LakeTable(
     *
     * CONTRACT: the input must be laid out one-partition-per-bucket —
     * physical partition id == `pmod(hash(repo, path), numBuckets)` — which
-    * is exactly what `Lww.reducePartitioned(_, numBuckets)` produces
+    * is exactly what `Lww.reduceBucketed(_, _, numBuckets)` produces
     * (Spark's HashPartitioning partition-id expression IS the bucket
     * function). The bucket of each file is then recovered from its
     * `part-NNNNN` index, so the write is a plain parquet write: no
@@ -1251,12 +1236,6 @@ final class LakeTable(
   def stage(df: DataFrame, batchId: Long, schemaIdx: Int, attempt: Long = 0L): Seq[FileEntry] = {
     val dir = f"data/b$batchId%06d-a$attempt"
     val abs = s"$root/$dir"
-    // sortedBuckets: each bucket file is written key-sorted (a narrow
-    // per-partition sort — the bucket layout is untouched) so the bucketed
-    // scan can declare SORTED BY. When the input is already key-ordered
-    // (e.g. the output of a sort-merge join), Catalyst's EliminateSorts
-    // drops this node.
-    val out = if (sortedBuckets) df.sortWithinPartitions(keyCols.map(col): _*) else df
     // maxFileRows > 0: size-bounded files per bucket (SURVEY §9 round-3
     // item — at 100 TB one bucket is many GB; one multi-GB parquet file
     // per bucket makes every downstream task, retry, and compaction move
@@ -1266,7 +1245,7 @@ final class LakeTable(
     // bucketed-state registration (which already reads multi-file buckets
     // for MoR stacks) are unchanged; there are just ≥1 entries per bucket.
     // writerOptions first, engine-owned options after (engine wins).
-    val writerU = writerOptions.foldLeft(out.write) { case (w, (k, v)) => w.option(k, v) }
+    val writerU = writerOptions.foldLeft(df.write) { case (w, (k, v)) => w.option(k, v) }
     val writer0 = if (maxFileRows > 0) writerU.option("maxRecordsPerFile", maxFileRows) else writerU
     // bloomKeyNdv > 0: every staged file carries a parquet BLOOM FILTER
     // per key column (standard parquet metadata, written by the normal
@@ -1372,7 +1351,7 @@ final class LakeTable(
   * source of truth, so the codec is deliberately explicit).
   */
 object LakeTable {
-  private val mapper = new ObjectMapper()
+  private[graft] val mapper = new ObjectMapper()
 
   /** One shared read-only Hadoop conf for footer reads (XML parsing per
     * `new Configuration()` costs more than the read itself).
@@ -1446,7 +1425,6 @@ object LakeTable {
       root: String,
       keyCols: Seq[String] = Envelope.keyCols,
       mergeOnRead: Boolean = false,
-      sortedBuckets: Boolean = false,
       autoCompactDepth: Int = 0,
       maxFileRows: Long = 0L,
       bloomKeyNdv: Int = 0,
@@ -1465,7 +1443,7 @@ object LakeTable {
       case Left(d)     => d.numBuckets
     }
     require(n > 0, s"commit log at $root predates bucket-layout tracking")
-    new LakeTable(root, n, keyCols, mergeOnRead, sortedBuckets, autoCompactDepth, maxFileRows,
+    new LakeTable(root, n, keyCols, mergeOnRead, autoCompactDepth, maxFileRows,
       bloomKeyNdv, writerOptions)
   }
 

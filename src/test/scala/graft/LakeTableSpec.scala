@@ -41,6 +41,29 @@ class LakeTableSpec extends SparkSpec {
     }
   }
 
+  /** Reduce `batch` into the bucket layout and merge it against the
+    * bucketed `state` read, asserting for both reduce plans that the state
+    * scan reports the bucket layout and only the batch side shuffles: one
+    * exchange in the exact plan (AQE off, shuffle partitions ==
+    * numBuckets), reduce + repartition in the fallback. Returns the merge
+    * planned in the session's own regime.
+    */
+  private def mergeOnlyBatchShuffles(
+      state: org.apache.spark.sql.DataFrame,
+      batch: org.apache.spark.sql.DataFrame,
+      schema: StructType,
+      numBuckets: Int): org.apache.spark.sql.DataFrame = {
+    def merge() = graft.operators.Lww.mergeCoPartitioned(state,
+      graft.operators.Lww.reduceBucketed(SchemaEvolution.align(batch, schema), Seq("repo", "path"), numBuckets))
+    for ((conf, exchanges) <- Seq(exactReduceConf(numBuckets) -> 1, Nil -> 2)) withConf(conf: _*) {
+      val plan = merge().queryExecution.executedPlan.toString
+      assert(plan.contains("Bucketed: true"), s"state scan must report the bucket layout:\n$plan")
+      assert("Exchange".r.findAllMatchIn(plan).size === exchanges,
+        s"only the batch reduce shuffles; state must not re-shuffle:\n$plan")
+    }
+    merge()
+  }
+
   test("replay converges to the fold oracle across microbatches") {
     val log = randomLog(1, 400)
     val table = new LakeTable(tmp(), numBuckets = 8)
@@ -281,13 +304,7 @@ class LakeTableSpec extends SparkSpec {
     val ci = table.lastCommit().get
     val state = table.bucketedState(spark, ci, None, ci.schema).get
     val upd = FlatEvent.mk(("repo0", "p0.txt"), 999, "u")
-    val batchW = graft.operators.Lww.reducePartitioned(
-      graft.table.SchemaEvolution.align(Seq(upd).toDF(), ci.schema), numPartitions = 8)
-    val merged = graft.operators.Lww.mergeCoPartitioned(state, batchW)
-    val plan = merged.queryExecution.executedPlan.toString
-    assert(plan.contains("Bucketed: true"), s"state scan must report the bucket layout:\n$plan")
-    assert("Exchange".r.findAllMatchIn(plan).size === 1,
-      s"exactly one exchange — the batch reduce; state must not re-shuffle:\n$plan")
+    val merged = mergeOnlyBatchShuffles(state, Seq(upd).toDF(), ci.schema, 8)
     // and the merge picks the right winners
     val out = merged.collect()
     val byKey = out.map(r => (r.getAs[String]("repo"), r.getAs[String]("path")) -> r).toMap
@@ -295,30 +312,6 @@ class LakeTableSpec extends SparkSpec {
     assert(byKey(("repo0", "p0.txt")).getAs[Int]("__src") === 1)
     val stateRows = state.collect().map(r => (r.getAs[String]("repo"), r.getAs[String]("path"))).toSet
     assert(out.length === (stateRows + (("repo0", "p0.txt"))).size, "full-outer key coverage")
-  }
-
-  test("sorted buckets: SMJ merge converges, state side plans neither exchange nor sort") {
-    val log = randomLog(21, 300)
-    val table = new LakeTable(tmp(), numBuckets = 8, sortedBuckets = true)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
-    assert(tableState(table) === foldOracle(log), "sorted-bucket table converges to the fold oracle")
-
-    val ci = table.lastCommit().get
-    val state = table.bucketedState(spark, ci, None, ci.schema).get
-    val upd = FlatEvent.mk(("repo0", "p0.txt"), 999, "u")
-    val batchW = graft.operators.Lww.reducePartitioned(
-      graft.table.SchemaEvolution.align(Seq(upd).toDF(), ci.schema), numPartitions = 8)
-    val merged = graft.operators.Lww.mergeCoPartitioned(state, batchW, smj = true)
-    val plan = merged.queryExecution.executedPlan.toString
-    assert(plan.contains("SortMergeJoin"), s"sorted-bucket merge must plan SMJ:\n$plan")
-    assert(plan.contains("Bucketed: true"), s"state scan must report the bucket layout:\n$plan")
-    assert("Exchange".r.findAllMatchIn(plan).size === 1,
-      s"exactly one exchange — the batch reduce; state must not re-shuffle:\n$plan")
-    assert("(?m)^\\s*[+:]?-? ?\\*?\\(?\\d*\\)? ?Sort ".r.findAllMatchIn(plan).size === 1,
-      s"exactly one Sort — the batch side; the sorted bucket scan provides state ordering:\n$plan")
-    val out = merged.collect()
-    val byKey = out.map(r => (r.getAs[String]("repo"), r.getAs[String]("path")) -> r).toMap
-    assert(byKey(("repo0", "p0.txt")).getAs[Long]("lsn") === 999L, "batch winner applied")
   }
 
   test("bucketedState: hardlink failure (cross-device _bucketed) copies NOTHING and merges still converge") {
@@ -466,13 +459,7 @@ class LakeTableSpec extends SparkSpec {
 
     val state = table.bucketedState(spark, ci, None, ci.schema).get
     val upd = FlatEvent.mk(("repo0", "p0.txt"), 999, "u")
-    val batchW = graft.operators.Lww.reducePartitioned(
-      graft.table.SchemaEvolution.align(Seq(upd).toDF(), ci.schema), numPartitions = 4)
-    val merged = graft.operators.Lww.mergeCoPartitioned(state, batchW)
-    val plan = merged.queryExecution.executedPlan.toString
-    assert(plan.contains("Bucketed: true"), s"multi-file state scan must report the bucket layout:\n$plan")
-    assert("Exchange".r.findAllMatchIn(plan).size === 1,
-      s"exactly one exchange — the batch reduce; multi-file state must not re-shuffle:\n$plan")
+    val merged = mergeOnlyBatchShuffles(state, Seq(upd).toDF(), ci.schema, 4)
     val byKey = merged.collect().map(r => (r.getAs[String]("repo"), r.getAs[String]("path")) -> r).toMap
     assert(byKey(("repo0", "p0.txt")).getAs[Long]("lsn") === 999L, "batch winner applied")
   }
@@ -647,6 +634,28 @@ class LakeTableSpec extends SparkSpec {
     assert(graft.table.LakeTable.open(table.root).tags() === Map.empty)
   }
 
+  test("tags: legacy _refs/<name>.json entries resolve, clamp expiry, and drop") {
+    val log = randomLog(54, 300)
+    val table = new LakeTable(tmp(), numBuckets = 4)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3, writeMetrics = false)
+    // a tag as tables wrote it before refs were namespaced `ref_<name>.json`
+    val refs = java.nio.file.Paths.get(table.root, "_refs")
+    Files.createDirectories(refs)
+    Files.writeString(refs.resolve("old.json"), """{"name":"old","version":1,"tsMs":0}""")
+    val atV1 = table.snapshotAt(spark, 1L).get.as[FlatEvent].collect().toSet
+
+    assert(table.tags() === Map("old" -> 1L))
+    assert(table.snapshotAtTag(spark, "old").get.as[FlatEvent].collect().toSet === atV1)
+    intercept[IllegalArgumentException](table.tag("old", 2L)) // still immutable
+    assert(table.expireSnapshots(keepLast = 1) === ((0, 0)), "the legacy pin must clamp expiry")
+    assert(table.commitVersions() === Seq(1L, 2L, 3L))
+    assert(table.snapshotAtTag(spark, "old").get.as[FlatEvent].collect().toSet === atV1)
+
+    assert(table.dropTag("old"))
+    assert(!Files.exists(refs.resolve("old.json")) && table.tags().isEmpty)
+    assert(table.expireSnapshots(keepLast = 1)._1 === 2)
+  }
+
   test("removeOrphanFiles deletes only unreferenced data files") {
     val log = randomLog(38, 200)
     val table = new LakeTable(tmp(), numBuckets = 4)
@@ -755,6 +764,22 @@ class LakeTableSpec extends SparkSpec {
     val past = opened.snapshotAt(spark, preVersion).get.as[FlatEvent].collect()
       .map(e => (e.repo, e.path) -> e).toMap
     assert(past === before, "pre-rebucket version must read correctly after the layout change")
+  }
+
+  test("rebucket commits through the injected CommitStore; the stale handle fails fast") {
+    val log = randomLog(30, 300)
+    val store = new graft.table.InMemoryCommitStore
+    val table = new LakeTable(tmp(), numBuckets = 4, commitStore = Some(store))
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 2, writeMetrics = false)
+    val next = table.rebucket(spark, 8).get
+    assert(store.listNames().count(_.matches("v\\d+\\.json")) === 3,
+      "the rebucket commit must land in the injected store")
+    assert(!Files.isDirectory(java.nio.file.Paths.get(table.root, "_commits")),
+      "no commit may fall back to a _commits/ file store")
+    assert(next.commitStore.contains(store))
+    assert(next.lastCommit().get.numBuckets === 8)
+    assert(tableState(next) === foldOracle(log))
+    intercept[IllegalStateException] { table.lastCommit() }
   }
 
   test("structured streaming with checkpoint: two waves + restart, exactly-once") {

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import graft.core.Envelope
 import graft.operators.Lww
@@ -30,8 +35,8 @@ class LwwSpec extends SparkSpec {
       }
     }
 
-  private def engineState(events: Seq[FlatEvent], salt: Int): Map[(String, String), FlatEvent] =
-    Lww.applyState(events.toDF(), salt = salt).as[FlatEvent].collect()
+  private def engineState(events: Seq[FlatEvent]): Map[(String, String), FlatEvent] =
+    Lww.applyState(events.toDF()).as[FlatEvent].collect()
       .map(e => (e.repo, e.path) -> e).toMap
 
   private def randomLog(seed: Int, n: Int, withTruncate: Boolean): Seq[FlatEvent] = {
@@ -47,32 +52,56 @@ class LwwSpec extends SparkSpec {
     evs ++ evs.filter(_ => rnd.nextInt(5) == 0)
   }
 
-  test("reduceBucketedExact: plan-verified partition contract; subset-partitioned input falls back") {
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val events = randomLog(7, 120, withTruncate = false).toDF()
-      val exact = Lww.reduceBucketedExact(events, Seq("repo", "path"), 4)
-      assert(exact.isDefined, "fresh input must plan the exchange and qualify")
-      val plan = exact.get.queryExecution.executedPlan.toString
-      assert("Exchange".r.findAllMatchIn(plan).size === 1)
-      // max_by over a struct buffer plans SortAggregate; the partial
-      // (map-side combine) phase below the exchange is the point.
-      assert(plan.contains("partial_max_by"),
-        s"partial aggregate (map-side combine) must run below the exchange:\n$plan")
-      // same winners as the repartition-shaped reduce
-      val viaExact = exact.get.as[FlatEvent].collect().map(e => (e.repo, e.path) -> e).toMap
-      val viaRepart = Lww.reducePartitioned(events, Seq("repo", "path"), 4)
-        .as[FlatEvent].collect().map(e => (e.repo, e.path) -> e).toMap
-      assert(viaExact === viaRepart)
+  /** The physical plan Spark will run (AQE's initial plan when adaptive). */
+  private def physicalPlan(df: org.apache.spark.sql.DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p                        => p
+    }
 
-      // input already hash-partitioned on a SUBSET of the keys at the
-      // right count: Catalyst plans NO exchange (ClusteredDistribution
-      // accepts subsets), so partition-id != bucket — must fall back.
-      val pre = events.repartition(4, col("repo"))
-      assert(Lww.reduceBucketedExact(pre, Seq("repo", "path"), 4).isEmpty,
-        "exchange-elided plan must be rejected (partition-id==bucket unprovable)")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  test("reduceBucketed: partition id == bucket, partial combine, both plans") {
+    val n = 8
+    val keys = Seq("repo", "path")
+    // hot-key input: half the events land on one key
+    val hot = (1 to 300).map(i => FlatEvent.mk(("repo0", "p0.txt"), 1000L + i, "u"))
+    val log = randomLog(7, 300, withTruncate = false) ++ hot
+    val maxByKey = log.groupBy(e => (e.repo, e.path)).map { case (k, es) => k -> es.maxBy(e => (e.commit, e.lsn)) }
+    val regimes = Seq(
+      ("exact (AQE off, shuffle.partitions == numBuckets)", exactReduceConf(n), 1),
+      ("fallback (AQE on, shuffle.partitions != numBuckets)",
+        Seq("spark.sql.adaptive.enabled" -> "true", "spark.sql.shuffle.partitions" -> "4"), 2))
+    for ((regime, conf, exchanges) <- regimes) withConf(conf: _*) {
+      val out = Lww.reduceBucketed(log.toDF(), keys, n)
+      val misplaced = out.where(spark_partition_id() =!= pmod(hash(keys.map(col): _*), lit(n))).count()
+      assert(misplaced === 0, s"$regime: partition id must be the bucket")
+      assert(out.as[FlatEvent].collect().map(e => (e.repo, e.path) -> e).toMap === maxByKey, regime)
+
+      val plan = physicalPlan(out)
+      val shuffles = plan.collect { case e: ShuffleExchangeLike => e }
+      assert(shuffles.size === exchanges, s"$regime:\n$plan")
+      // the first exchange to run is the one with no exchange below it;
+      // the partial (map-side combine) max_by must feed it, capping the
+      // hot key at one row per map task
+      val first = shuffles.filter(_.child.find(_.isInstanceOf[ShuffleExchangeLike]).isEmpty)
+      assert(first.size === 1, s"$regime:\n$plan")
+      val partialBelow = first.head.child.find {
+        case a: BaseAggregateExec =>
+          a.aggregateExpressions.exists(e => e.mode == Partial && e.aggregateFunction.prettyName == "max_by")
+        case _ => false
+      }
+      assert(partialBelow.isDefined, s"$regime: partial_max_by must run below the first exchange:\n$plan")
+    }
+
+    // input already hash-partitioned on a SUBSET of the keys at the right
+    // count: Catalyst plans NO reduce exchange (ClusteredDistribution
+    // accepts subsets), so the plan check must reject it and the winners
+    // get repartitioned into the bucket layout
+    withConf(exactReduceConf(n): _*) {
+      val pre = log.toDF().repartition(n, col("repo"))
+      val out = Lww.reduceBucketed(pre, keys, n)
+      assert(out.where(spark_partition_id() =!= pmod(hash(keys.map(col): _*), lit(n))).count() === 0)
+      assert(out.as[FlatEvent].collect().map(e => (e.repo, e.path) -> e).toMap === maxByKey)
+    }
   }
 
   test("reduce keeps exactly one winner per key, the max (commit,lsn)") {
@@ -88,32 +117,14 @@ class LwwSpec extends SparkSpec {
   test("applyState converges to the sequential fold oracle (no truncate)") {
     for (seed <- 1 to 5) {
       val log = randomLog(seed, 300, withTruncate = false)
-      assert(engineState(log, salt = 1) === foldOracle(log), s"seed=$seed")
+      assert(engineState(log) === foldOracle(log), s"seed=$seed")
     }
   }
 
   test("applyState converges with truncate events (table-scoped fence)") {
     for (seed <- 10 to 14) {
       val log = randomLog(seed, 300, withTruncate = true)
-      assert(engineState(log, salt = 1) === foldOracle(log), s"seed=$seed")
-    }
-  }
-
-  test("salted reduction is equivalent to unsalted") {
-    for (seed <- 20 to 22) {
-      val log = randomLog(seed, 300, withTruncate = true)
-      assert(engineState(log, salt = 8) === engineState(log, salt = 1), s"seed=$seed")
-    }
-  }
-
-  test("aggregate reduce (max_by) and window reduce (row_number) are equivalent") {
-    for (seed <- 25 to 27) {
-      val log = randomLog(seed, 300, withTruncate = false)
-      val agg = Lww.reduce(log.toDF()).as[FlatEvent].collect().sortBy(_.lsn)
-      val win = Lww.reduceWindow(log.toDF()).as[FlatEvent].collect().sortBy(_.lsn)
-      val winSalted = Lww.reduceWindow(log.toDF(), salt = 4).as[FlatEvent].collect().sortBy(_.lsn)
-      assert(agg.toSeq === win.toSeq, s"seed=$seed")
-      assert(agg.toSeq === winSalted.toSeq, s"seed=$seed")
+      assert(engineState(log) === foldOracle(log), s"seed=$seed")
     }
   }
 

@@ -183,6 +183,31 @@ class MultiTableSpec extends SparkSpec {
       "re-publishing an identical manifest must not append a new one")
   }
 
+  test("catalog manifests parse as JSON: fields after versions, quoted names; malformed throws") {
+    val reg = new Registry(Files.createTempDirectory("multi-manifest").toString, Seq(
+      TableDef("kv", Seq("repo", "path"), numBuckets = 4)))
+    // the writer's own manifest round-trips
+    val c1 = MultiTable.commitCatalog(reg, 0)
+    assert(MultiTable.lastCatalogCommit(reg) === Some(c1))
+    assert(c1.versions === Map("kv" -> 0L))
+
+    val dir = java.nio.file.Paths.get(reg.root, "_catalog")
+    def put(seq: Int, json: String): Unit = Files.writeString(dir.resolve(f"c$seq%020d.json"), json)
+    // a field AFTER versions, whose nested keys look like versions, and a
+    // table name carrying an escaped quote
+    put(2, """{"seq":2,"batchId":7,"versions":{"kv":3,"b\"q":4},"note":{"x":9}}""")
+    assert(MultiTable.lastCatalogCommit(reg) ===
+      Some(MultiTable.CatalogCommit(2L, 7L, Map("kv" -> 3L, "b\"q" -> 4L))))
+    assert(MultiTable.catalogCommits(reg).map(_.seq) === Seq(1L, 2L))
+
+    put(3, """{"seq":3,"batchId":8,"versions":{"kv":""")
+    intercept[com.fasterxml.jackson.core.JsonProcessingException](MultiTable.lastCatalogCommit(reg))
+    put(3, """{"seq":3,"batchId":8,"versions":{"kv":"5"}}""")
+    intercept[IllegalStateException](MultiTable.lastCatalogCommit(reg))
+    put(3, """{"seq":3,"batchId":8}""")
+    intercept[IllegalStateException](MultiTable.lastCatalogCommit(reg))
+  }
+
   test("schema evolution stays per-table: a slice that routes zero rows does not evolve") {
     val reg = new Registry(Files.createTempDirectory("multi-evo").toString, Seq(
       TableDef("a", Seq("repo", "path"), 2),

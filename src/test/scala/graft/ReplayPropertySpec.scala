@@ -56,21 +56,26 @@ class ReplayPropertySpec extends SparkSpec {
       .map(e => (e.repo, e.path) -> e).toMap
 
   test("replay under ANY batching converges to the fold oracle (both table modes)") {
-    check("any-batching", Prop.forAll(genLog(withTruncate = true),
-      Gen.listOfN(3, Gen.choose(0.0, 1.0)), Gen.oneOf(false, true),
-      Gen.oneOf(0L, 3L)) { (log, cutsRaw, mor, maxRows) =>
-      log.isEmpty || {
-        val table = new LakeTable(Files.createTempDirectory("prop").toString,
-          numBuckets = 4, mergeOnRead = mor, maxFileRows = maxRows)
-        val cuts = cutsRaw.map(c => (c * log.size).toInt).sorted
-        val batches = (0 +: cuts :+ log.size).sliding(2).collect { case Seq(a, b) => log.slice(a, b) }.toSeq
-        batches.zipWithIndex.foreach { case (b, i) =>
-          // empty slices skipped: batchId gaps are legal (Spark can skip ids)
-          if (b.nonEmpty) CdcApply.applyBatch(spark, table, b.toDF(), batchId = i, salt = 2)
+    // both reduce plans: the shared session's repartition fallback, and the
+    // single-exchange plan of AQE-off sessions with shuffle partitions ==
+    // numBuckets (the benchmark's and tuned deployments' plan)
+    for (exactPlan <- Seq(false, true)) {
+      check(s"any-batching exactPlan=$exactPlan", Prop.forAll(genLog(withTruncate = true),
+        Gen.listOfN(3, Gen.choose(0.0, 1.0)), Gen.oneOf(false, true),
+        Gen.oneOf(0L, 3L)) { (log, cutsRaw, mor, maxRows) =>
+        log.isEmpty || withConf((if (exactPlan) exactReduceConf(4) else Nil): _*) {
+          val table = new LakeTable(Files.createTempDirectory("prop").toString,
+            numBuckets = 4, mergeOnRead = mor, maxFileRows = maxRows)
+          val cuts = cutsRaw.map(c => (c * log.size).toInt).sorted
+          val batches = (0 +: cuts :+ log.size).sliding(2).collect { case Seq(a, b) => log.slice(a, b) }.toSeq
+          batches.zipWithIndex.foreach { case (b, i) =>
+            // empty slices skipped: batchId gaps are legal (Spark can skip ids)
+            if (b.nonEmpty) CdcApply.applyBatch(spark, table, b.toDF(), batchId = i)
+          }
+          tableState(table) == foldOracle(log)
         }
-        tableState(table) == foldOracle(log)
-      }
-    }, cases = 8)
+      }, cases = 8)
+    }
   }
 
   test("ANY arrival order preserving per-partition order converges; re-replay is a no-op") {

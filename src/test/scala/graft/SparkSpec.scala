@@ -10,6 +10,28 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = () // shared session; never stop it
 
+  /** Run `f` with the given session confs set, restoring the previous
+    * values afterwards (the session is shared across specs).
+    */
+  protected def withConf[T](kvs: (String, String)*)(f: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** The confs under which `Lww.reduceBucketed`'s single exchange IS the
+    * `numBuckets` bucket layout (AQE off, shuffle partitions ==
+    * numBuckets) — the session shape of the benchmark and tuned
+    * deployments. The shared test session (AQE on) takes the
+    * repartition fallback instead.
+    */
+  protected def exactReduceConf(numBuckets: Int): Seq[(String, String)] =
+    Seq("spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> numBuckets.toString)
+
   /** Sum of `metric` over the task metrics of every stage completed
     * during `action`. The listener bus posts asynchronously, so the
     * counter is polled until stable instead of sleeping a fixed time — a

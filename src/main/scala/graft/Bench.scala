@@ -184,7 +184,7 @@ object Bench {
     try {
       log.count()
       val t0 = System.nanoTime()
-      CdcPipeline.replay(spark, log, table, numBatches = 4, writeMetrics = false)
+      CdcPipeline.replay(spark, log, table, numBatches = 4)
       table.snapshot(spark).foreach(_.count()) // force a converged read
       val sec = (System.nanoTime() - t0) / 1e9
       (sec, numEvents / sec)
@@ -212,7 +212,7 @@ object Bench {
     val root = tmpRoot("graft-bench-sh")
     val table = new LakeTable(root.toString, numBuckets = NumBuckets, mergeOnRead = mor)
     val init = SyntheticLog.generate(spark, stateEvents, numKeys = stateEvents, parts = SourceParts)
-    CdcPipeline.replay(spark, init, table, numBatches = 2, writeMetrics = false)
+    CdcPipeline.replay(spark, init, table, numBatches = 2)
     // Shuffle-bytes meter: wall time barely moves in local mode (a shuffle
     // costs about as much as a tmpfs read), but on a cluster the exchange
     // is network-bound — bytes moved is the honest scale metric.
@@ -227,7 +227,7 @@ object Bench {
       (0 until batches).foreach { i =>
         val b = SyntheticLog.generate(spark, batchEvents, numKeys = stateEvents,
           parts = SourceParts, startId = stateEvents + i * batchEvents)
-        graft.merge.CdcApply.applyBatch(spark, table, b, batchId = 2 + i, writeMetrics = false)
+        graft.merge.CdcApply.applyBatch(spark, table, b, batchId = 2 + i)
       }
       val sec = (System.nanoTime() - t0) / 1e9
       Thread.sleep(1500) // let the async listener bus drain
@@ -591,6 +591,19 @@ object Bench {
   private val LegGrid = Seq(250000L, 500000L, 1000000L, 1500000L, 2000000L, 3000000L, 4000000L)
   private def snapToGrid(ev: Long): Long = LegGrid.minBy(g => math.abs(g - ev))
 
+  /** Scaling-pair leg input: `target` clamped to [100000, baseEvents / 2]
+    * and snapped to the nearest grid point INSIDE that range (runs in
+    * different windows then share an accumulated-walls key), or kept as
+    * clamped when no grid point fits. `pinned` (SPARK_GRAFT_PAIR_EVENTS,
+    * evidence hunts at one grid point) is only snapped.
+    */
+  private[graft] def pairEvents(target: Double, baseEvents: Long, pinned: Option[Long] = None): Long =
+    pinned.map(snapToGrid).getOrElse {
+      val (lo, hi) = (100000L, baseEvents / 2)
+      val clamped = clamp(target, lo, hi)
+      LegGrid.filter(g => g >= lo && g <= hi).minByOption(g => math.abs(g - clamped)).getOrElse(clamped)
+    }
+
   private def pairWallsPath: java.nio.file.Path =
     java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_PAIR_WALLS", "pair_walls.json"))
 
@@ -889,13 +902,9 @@ object Bench {
     // buy the sweep its slot back at the cost of slope-denominator noise
     // the best-of reps absorb.
     val targetLegSec = math.max(10.0, math.min(60.0, budgetS / 55.0))
-    // snapped to the fixed grid so runs in different windows land on the
-    // same accumulated-walls key (see pairWalls above);
-    // SPARK_GRAFT_PAIR_EVENTS pins the leg size outright (targeted
-    // evidence hunts banking minima at a specific grid point)
-    def pairEvents(n: Int): Long =
-      snapToGrid(sys.env.get("SPARK_GRAFT_PAIR_EVENTS").map(_.toLong)
-        .getOrElse(clamp(rateAt(n) * targetLegSec, 100000L, baseEvents / 2)))
+    def legEvents(n: Int): Long =
+      pairEvents(rateAt(n) * targetLegSec, baseEvents,
+        sys.env.get("SPARK_GRAFT_PAIR_EVENTS").map(_.toLong))
     currentSfId = sfId(sfDir)
     loadPairWalls()
     val pairs = (scaling match {
@@ -904,7 +913,7 @@ object Bench {
       case "28"  => Seq((2, 8)) // single-pair local evidence hunts
       case "14"  => Seq((1, 4))
       case _     => Seq((2, 8), (1, 4))
-    }).map { case (n, n4) => new PairState(n, n4, pairEvents(n)) }
+    }).map { case (n, n4) => new PairState(n, n4, legEvents(n)) }
     pairStates = pairs
     if (pairs.nonEmpty) {
       pairBaseline(pairs, reps = math.max(reps, 2), mandatoryRounds = 2,

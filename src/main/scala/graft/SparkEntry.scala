@@ -70,7 +70,7 @@ object SparkEntry {
       val root = java.nio.file.Files.createTempDirectory("graft-metrics").toString
       val table = new LakeTable(root, numBuckets = 16)
       CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 1)
-      s.read.parquet(s"$root/_metrics")
+      table.metrics(s)
         .select(col("part"), col("freshEvents"), col("applied"), col("dedupDropped"))
     }),
 
@@ -165,10 +165,9 @@ object SparkEntry {
       val half = maxLsn(log) / 2
       val root = java.nio.file.Files.createTempDirectory("graft-evo").toString
       val table = new LakeTable(root, numBuckets = 16)
-      merge.CdcApply.applyBatch(s, table, log.where(col("lsn") <= half), 0L, writeMetrics = false)
+      merge.CdcApply.applyBatch(s, table, log.where(col("lsn") <= half), 0L)
       merge.CdcApply.applyBatch(s, table,
-        log.where(col("lsn") > half).withColumn("n_chars", length(col("content"))),
-        1L, writeMetrics = false)
+        log.where(col("lsn") > half).withColumn("n_chars", length(col("content"))), 1L)
       table.snapshot(s).get
         .select(payload :+ col("n_chars").cast("long").as("n_chars"): _*)
     }),
@@ -455,15 +454,11 @@ object SparkEntry {
         .select(col("repo"), col("lang"), col("commit"), lit("u").as("op"),
           col("part"), col("lsn"), col("ts_ms"))
       val mid = maxLsn(log) / 2
-      CdcPipeline.replay(s, log.where(col("lsn") <= mid), left,
-        numBatches = 1, writeMetrics = false)
-      CdcPipeline.replay(s, dim.where(col("lsn") <= mid), right,
-        numBatches = 1, writeMetrics = false)
+      CdcPipeline.replay(s, log.where(col("lsn") <= mid), left, numBatches = 1)
+      CdcPipeline.replay(s, dim.where(col("lsn") <= mid), right, numBatches = 1)
       JoinView.maintain(s, jv)
-      CdcPipeline.replay(s, log.where(col("lsn") > mid), left,
-        numBatches = 1, startBatchId = 1, writeMetrics = false)
-      CdcPipeline.replay(s, dim.where(col("lsn") > mid), right,
-        numBatches = 1, startBatchId = 1, writeMetrics = false)
+      CdcPipeline.replay(s, log.where(col("lsn") > mid), left, numBatches = 1, startBatchId = 1)
+      CdcPipeline.replay(s, dim.where(col("lsn") > mid), right, numBatches = 1, startBatchId = 1)
       JoinView.maintain(s, jv)
       view.snapshot(s).get.select(
         col("l_repo"), col("l_path"), col("l_lang"), col("l_content"),
@@ -492,15 +487,11 @@ object SparkEntry {
         .select(col("repo"), col("lang"), col("commit"), lit("u").as("op"),
           col("part"), col("lsn"), col("ts_ms"))
       val mid = maxLsn(log) / 2
-      CdcPipeline.replay(s, log.where(col("lsn") <= mid), left,
-        numBatches = 1, writeMetrics = false)
-      CdcPipeline.replay(s, dim.where(col("lsn") <= mid), right,
-        numBatches = 1, writeMetrics = false)
+      CdcPipeline.replay(s, log.where(col("lsn") <= mid), left, numBatches = 1)
+      CdcPipeline.replay(s, dim.where(col("lsn") <= mid), right, numBatches = 1)
       JoinView.maintain(s, jv)
-      CdcPipeline.replay(s, log.where(col("lsn") > mid), left,
-        numBatches = 1, startBatchId = 1, writeMetrics = false)
-      CdcPipeline.replay(s, dim.where(col("lsn") > mid), right,
-        numBatches = 1, startBatchId = 1, writeMetrics = false)
+      CdcPipeline.replay(s, log.where(col("lsn") > mid), left, numBatches = 1, startBatchId = 1)
+      CdcPipeline.replay(s, dim.where(col("lsn") > mid), right, numBatches = 1, startBatchId = 1)
       JoinView.maintain(s, jv)
       jv.nullExtended(view.snapshot(s).get).select(
         col("l_repo"), col("l_path"), col("l_lang"), col("l_content"),
@@ -534,15 +525,11 @@ object SparkEntry {
         dimBase.where(pmod(regexp_extract(col("repo"), "([0-9]+)", 1).cast("int"), lit(3)) === 1)
           .withColumn("repo", concat(col("repo"), lit("#x"))))
       val mid = maxLsn(log) / 2
-      CdcPipeline.replay(s, log.where(col("lsn") <= mid), left,
-        numBatches = 1, writeMetrics = false)
-      CdcPipeline.replay(s, dim.where(col("lsn") <= mid), right,
-        numBatches = 1, writeMetrics = false)
+      CdcPipeline.replay(s, log.where(col("lsn") <= mid), left, numBatches = 1)
+      CdcPipeline.replay(s, dim.where(col("lsn") <= mid), right, numBatches = 1)
       JoinView.maintain(s, jv)
-      CdcPipeline.replay(s, log.where(col("lsn") > mid), left,
-        numBatches = 1, startBatchId = 1, writeMetrics = false)
-      CdcPipeline.replay(s, dim.where(col("lsn") > mid), right,
-        numBatches = 1, startBatchId = 1, writeMetrics = false)
+      CdcPipeline.replay(s, log.where(col("lsn") > mid), left, numBatches = 1, startBatchId = 1)
+      CdcPipeline.replay(s, dim.where(col("lsn") > mid), right, numBatches = 1, startBatchId = 1)
       JoinView.maintain(s, jv)
       jv.nullExtended(view.snapshot(s).get).select(
         col("l_repo"), col("l_path"), col("l_lang"), col("l_content"),
@@ -614,12 +601,11 @@ object SparkEntry {
       val half = maxLsn(log) / 2
       val root = java.nio.file.Files.createTempDirectory("graft-evodef").toString
       val table = new LakeTable(root, numBuckets = 16)
-      merge.CdcApply.applyBatch(s, table, log.where(col("lsn") <= half), 0L, writeMetrics = false)
+      merge.CdcApply.applyBatch(s, table, log.where(col("lsn") <= half), 0L)
       merge.CdcApply.applyBatch(s, table,
         log.where(col("lsn") > half).select(col("*"),
           graft.table.SchemaEvolution.withDefault(
-            length(col("content")).cast("long"), "n_chars", "-1")),
-        1L, writeMetrics = false)
+            length(col("content")).cast("long"), "n_chars", "-1")), 1L)
       table.snapshot(s).get
         .select(payload :+ col("n_chars").cast("long").as("n_chars"): _*)
     }),
@@ -1117,7 +1103,7 @@ object SparkEntry {
     "q82_cdc_expire_maintenance" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-expire").toString
       val table = new LakeTable(root, numBuckets = 16)
-      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 3, writeMetrics = false)
+      CdcPipeline.replay(s, ChangeLog.flat(s, dir), table, numBatches = 3)
       table.expireSnapshots(keepLast = 1)
       table.removeOrphanFiles()
       table.snapshot(s).get

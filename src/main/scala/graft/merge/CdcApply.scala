@@ -1,11 +1,11 @@
 package graft.merge
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.Envelope
 import graft.operators.Lww
-import graft.table.{CommitInfo, LakeTable, LogPos, SchemaEvolution}
+import graft.table.{BatchMetrics, CommitInfo, LakeTable, LogPos, PartMetrics, SchemaEvolution}
 
 /** One microbatch of the CDC apply loop: fence → reduce → merge → commit.
   *
@@ -50,9 +50,9 @@ import graft.table.{CommitInfo, LakeTable, LogPos, SchemaEvolution}
   *    the batch rivals the state — reduce state ∪ batch in one aggregate;
   *    merge-on-read tables skip the state scan entirely and append the
   *    winner files (readers resolve per bucket).
-  *  - Job 3 (metrics, optional): per-partition applied counts from the
-  *    merged winners' `__src` tag (1 = batch side won), joined driver-side
-  *    with the stats vector.
+  *  - Metrics ride in the commit ([[graft.table.BatchMetrics]]): Job 1's
+  *    stats plus per-partition applied counts, observed in Job 2's result
+  *    stage from the winners' `__src` tag (1 = batch side won).
   */
 object CdcApply {
 
@@ -62,7 +62,7 @@ object CdcApply {
       batchId: Long,
       eventsIn: Long,
       fresh: Long,
-      winners: Long, // applied batch winners; -1 when not computed (writeMetrics=false)
+      winners: Long, // applied batch winners (keys the batch side won)
       reason: String)
 
   private def posCol: Column = struct(col("commit"), col("lsn"))
@@ -95,7 +95,6 @@ object CdcApply {
       table: LakeTable,
       batch: DataFrame,
       batchId: Long,
-      writeMetrics: Boolean = true,
       fenceByWatermark: Boolean = true,
       cacheBatch: Boolean = true,
       fenceByBatchId: Boolean = true): BatchResult = {
@@ -172,6 +171,12 @@ object CdcApply {
       val newWm = (wm.keySet ++ wmAdvance.keySet).map { p =>
         p -> math.max(wm.getOrElse(p, Long.MinValue), wmAdvance.getOrElse(p, Long.MinValue))
       }.toMap
+      def summary(applied: Map[Int, Long]): Option[BatchMetrics] =
+        Some(BatchMetrics(t0, validStats.map { r =>
+          val part = r.getAs[Int]("part")
+          part -> PartMetrics(r.getAs[Long]("n"), r.getAs[Long]("freshN"), r.getAs[Long]("badN"),
+            applied.getOrElse(part, 0L), Option(r.getAs[java.lang.Long]("maxTs")).map(_.toLong))
+        }.toMap))
 
       // Schema reconciliation at the batch boundary (flush-on-schema-change,
       // ReducedRecordBuffer.java:57-62 → our microbatch boundary).
@@ -193,8 +198,7 @@ object CdcApply {
         // reference evolves on records, not on batch shape.
         table.commit(CommitInfo(version, commitBatchId, newWm, newFence,
           last.map(_.schemas).getOrElse(schemas), last.map(_.schemaIdx).getOrElse(schemaIdx),
-          last.map(_.files).getOrElse(Nil)), prev = last)
-        if (writeMetrics) appendMetrics(spark, table, batchId, version, validStats, Map.empty, t0)
+          last.map(_.files).getOrElse(Nil)), prev = last, metrics = summary(Map.empty))
         return BatchResult(committed = true, version, batchId, eventsIn, 0, 0, "metadata-only")
       }
 
@@ -238,7 +242,7 @@ object CdcApply {
 
       // Winners carry __src (1 = the batch side won the key) so the
       // applied-winner metric falls out of the merged result.
-      val merged0 =
+      val merged =
         if (table.mergeOnRead) {
           // Merge-on-read: append ONLY the batch's winners — no state
           // scan, no rewrite; readers resolve LWW across each bucket's
@@ -264,20 +268,29 @@ object CdcApply {
           val stFenced = batchFence.fold(stAligned)(f => stAligned.where(posCol > posLit(f)))
           reduceBucketed(stFenced.unionAll(tagged))
         }
-      val merged = if (writeMetrics) merged0.persist(StorageLevel.MEMORY_AND_DISK) else merged0
+      // Applied winners per source partition, counted in the write's result
+      // stage (after the exchange: a retried task cannot count twice). A
+      // fresh event always has a part, so there is one to count.
+      val parts = validStats.map(_.getAs[Int]("part")).toSeq
+      val appliedObs = Observation()
+      val counted = parts.map(p =>
+        count(when(col("__src") === 1 && col("part") === p, 1)).as(s"p$p"))
+      val observed = merged.observe(appliedObs, counted.head, counted.tail: _*)
 
       // attempt = version keeps the staging directory unique per commit:
       // an out-of-band apply (fenceByBatchId=false) shares the stream's
       // batchId, and mode(overwrite) on a shared dir would delete files the
       // other commit's manifest still references.
-      val staged = table.stage(merged.drop("__src"), batchId, schemaIdx, attempt = version)
+      val staged = table.stage(observed.drop("__src"), batchId, schemaIdx, attempt = version)
+      val appliedRow = appliedObs.get
+      val applied = parts.map(p => p -> appliedRow(s"p$p").asInstanceOf[Long]).toMap
       // CoW replaces the touched buckets' files; MoR appends (prior files
       // stay live and are shadowed per key at read time until compaction).
       val untouchedFiles =
         if (table.mergeOnRead) last.map(_.files).getOrElse(Nil)
         else last.map(_.files.filterNot(f => touched.contains(f.bucket))).getOrElse(Nil)
       table.commit(CommitInfo(version, commitBatchId, newWm, newFence, schemas, schemaIdx,
-        untouchedFiles ++ staged), prev = last)
+        untouchedFiles ++ staged), prev = last, metrics = summary(applied))
 
       // Between-batch maintenance (single-writer slot): depth-triggered
       // partial compaction keeps MoR read fan-in bounded by rewriting only
@@ -285,43 +298,9 @@ object CdcApply {
       if (table.autoCompactDepth > 0)
         table.compactDeepBuckets(spark, table.autoCompactDepth)
 
-      var winnersCount = -1L
-      if (writeMetrics) {
-        // Job 3: applied batch winners per source partition, off the cached
-        // merged result (one row per touched key — small).
-        val applied = merged.where(col("__src") === 1)
-          .groupBy(col("part")).agg(count(lit(1)).as("c")).collect()
-          .map(r => r.getAs[Int]("part") -> r.getAs[Long]("c")).toMap
-        winnersCount = applied.values.sum
-        appendMetrics(spark, table, batchId, version, validStats, applied, t0)
-        merged.unpersist()
-      }
-      BatchResult(committed = true, version, batchId, eventsIn, freshCount, winnersCount, "merged")
+      BatchResult(committed = true, version, batchId, eventsIn, freshCount, applied.values.sum, "merged")
     } finally {
       if (cacheBatch) cached.unpersist()
     }
-  }
-
-  /** Per-partition lineage: events seen, fresh after fencing, winners
-    * applied, dedup drops, commit lag (SURVEY.md §7.0 item 9). Built from
-    * the driver-side stats vector — no extra pass over the data.
-    */
-  private def appendMetrics(
-      spark: SparkSession, table: LakeTable, batchId: Long, version: Long,
-      stats: Array[Row], applied: Map[Int, Long], t0: Long): Unit = {
-    import spark.implicits._
-    val now = System.currentTimeMillis()
-    val rows = stats.toSeq.map { r =>
-      val part = r.getAs[Int]("part")
-      val freshN = r.getAs[Long]("freshN")
-      val a = applied.getOrElse(part, 0L)
-      val maxTs = Option(r.getAs[java.lang.Long]("maxTs")).map(_.toLong)
-      (batchId, version, part, freshN, a, freshN - a,
-        maxTs.map(now - _).getOrElse(0L), now - t0)
-    }
-    rows.toDF("batchId", "commitVersion", "part", "freshEvents",
-      "applied", "dedupDropped", "commitLagMs", "batchWallMs")
-      .coalesce(1)
-      .write.mode("append").parquet(s"${table.root}/_metrics")
   }
 }

@@ -74,8 +74,7 @@ object Dml {
     val events = tombstones
       .withColumn("commit", bump(col("commit")))
       .withColumn("op", lit("d"))
-    CdcApply.applyBatch(spark, table, events, batchId = 0L,
-      writeMetrics = false, fenceByWatermark = false, fenceByBatchId = false)
+    CdcApply.applyBatch(spark, table, events, batchId = 0L, fenceByWatermark = false, fenceByBatchId = false)
   }
 
   /** `UPDATE table SET <sets> WHERE pred`: matching rows re-emit with the
@@ -116,7 +115,6 @@ object Dml {
     val events = updated
       .withColumn("commit", bump(col("commit")))
       .withColumn("op", lit("u"))
-    CdcApply.applyBatch(spark, table, events, batchId = 0L,
-      writeMetrics = false, fenceByWatermark = false, fenceByBatchId = false)
+    CdcApply.applyBatch(spark, table, events, batchId = 0L, fenceByWatermark = false, fenceByBatchId = false)
   }
 }

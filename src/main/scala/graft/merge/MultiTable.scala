@@ -141,7 +141,6 @@ object MultiTable {
       batch: DataFrame,
       routeCol: String,
       batchId: Long,
-      writeMetrics: Boolean = false,
       fenceByWatermark: Boolean = true,
       parallelism: Int = 1): Map[String, CdcApply.BatchResult] = {
     val cached = batch.persist(StorageLevel.MEMORY_AND_DISK)
@@ -149,7 +148,7 @@ object MultiTable {
       val slice = cached.where(col(routeCol) === d.name).drop(routeCol)
       val processed = d.postProcessors.foldLeft(slice)((df, p) => p(df))
       CdcApply.applyBatch(spark, registry(d.name), processed, batchId,
-        writeMetrics, fenceByWatermark, cacheBatch = false)
+        fenceByWatermark, cacheBatch = false)
     }
     try {
       val done: Seq[(String, scala.util.Try[CdcApply.BatchResult])] =
@@ -282,8 +281,11 @@ object MultiTable {
     catalogNames(store).lastOption.map(n => parseCatalog(store.read(n)))
   }
 
-  /** Publish the catalog manifest for `batchId`: every table's CURRENT
-    * head version, CAS-published through the [[graft.table.CommitStore]]
+  /** Publish the catalog manifest for `batchId`: the version each table's
+    * apply of the batch committed (`committed`, as [[applyBatchAtomic]]
+    * passes it), or its CURRENT head version for a table the batch did not
+    * touch — a commit landing out of band after the apply must not be
+    * published under this batch. CAS-published through the [[graft.table.CommitStore]]
     * seam (create fails loudly on a lost race, the
     * [[graft.table.LakeTable.commit]] pattern). Idempotent per
     * batch: a replayed batch whose applies all no-op'd publishes a
@@ -292,11 +294,12 @@ object MultiTable {
     * than [[KeepCatalogManifests]] are pruned after a successful publish
     * (each manifest is self-contained; the head is never touched).
     */
-  def commitCatalog(registry: Registry, batchId: Long): CatalogCommit = {
+  def commitCatalog(registry: Registry, batchId: Long,
+      committed: Map[String, Long] = Map.empty): CatalogCommit = {
     val store = catalogStore(registry)
     val last = lastCatalogCommit(registry)
-    val versions = registry.defs.map(d =>
-      d.name -> registry(d.name).lastCommit().map(_.version).getOrElse(0L)).toMap
+    val versions = registry.defs.map(d => d.name -> committed.getOrElse(d.name,
+      registry(d.name).lastCommit().map(_.version).getOrElse(0L))).toMap
     last match {
       case Some(c) if c.batchId == batchId && c.versions == versions => return c
       case _ =>
@@ -327,12 +330,11 @@ object MultiTable {
       batch: DataFrame,
       routeCol: String,
       batchId: Long,
-      writeMetrics: Boolean = false,
       fenceByWatermark: Boolean = true,
       parallelism: Int = 1): Map[String, CdcApply.BatchResult] = {
     val res = applyBatch(spark, registry, batch, routeCol, batchId,
-      writeMetrics, fenceByWatermark, parallelism)
-    commitCatalog(registry, batchId)
+      fenceByWatermark, parallelism)
+    commitCatalog(registry, batchId, res.map { case (n, r) => n -> r.version })
     res
   }
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * chunk n-of-m applied / completed / paused / resumed / aborted" table.
   *
   * Spark-first shape: instead of a notification topic, rows append to
-  * `<table root>/_notifications` parquet (like `_metrics`) — driver-side,
+  * `<table root>/_notifications` parquet (like `_lineage`) — driver-side,
   * O(1) rows per chunk boundary, emitted AFTER the chunk's commit so the
   * feed never claims progress a crash could roll back. Columns mirror the
   * reference's Notification record (id→(chunk, chunks), aggregateType,

@@ -289,7 +289,6 @@ object CdcPipeline {
       table: LakeTable,
       numBatches: Int = 4,
       startBatchId: Long = 0L,
-      writeMetrics: Boolean = true,
       onBatch: BatchResult => Unit = _ => ()): Seq[BatchResult] = {
     // Materialize the log once; every batch slice then reads the cache
     // instead of recomputing the source derivation per slice.
@@ -302,8 +301,7 @@ object CdcPipeline {
       (0 until numBatches).map { i =>
         val (a, b) = (lo + i * width, lo + (i + 1) * width)
         val slice = cachedLog.where(col("lsn") >= a && col("lsn") < b)
-        val r = CdcApply.applyBatch(spark, table, slice, startBatchId + i, writeMetrics,
-          cacheBatch = false)
+        val r = CdcApply.applyBatch(spark, table, slice, startBatchId + i, cacheBatch = false)
         onBatch(r) // observers (e.g. the lineage feed) see each commit as it lands
         r
       }

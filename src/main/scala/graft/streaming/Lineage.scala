@@ -13,9 +13,10 @@ import graft.table.LakeTable
   * and the run-state machine START → RUNNING → COMPLETE/FAIL emitted on
   * connector state transitions). Semantics studied, not copied.
   *
-  * Spark-first shape: like `_metrics` and `_notifications`, run events
-  * append to `<table root>/_lineage` parquet — a queryable feed instead
-  * of an HTTP transport. Every column is DETERMINISTIC (run ids are
+  * Spark-first shape: like `_notifications`, run events append to
+  * `<table root>/_lineage` parquet — a queryable feed instead of an HTTP
+  * transport (per-batch metrics, by contrast, ride in the commit JSON:
+  * `LakeTable.metrics`). Every column is DETERMINISTIC (run ids are
   * content hashes of job identity, not UUIDs; no wall-clock), so the
   * feed is replay-stable and oracle-checkable. Schema facets serialize
   * as OpenLineage-style `[{"name":…,"type":…}]` JSON built from the

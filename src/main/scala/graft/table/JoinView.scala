@@ -432,8 +432,7 @@ object JoinView {
         }
 
         graft.merge.CdcApply.applyBatch(spark, jv.view,
-          (Seq(retracts, upserts) ++ outer.result()).reduce(_ unionAll _),
-          batchId = batchId, writeMetrics = false)
+          (Seq(retracts, upserts) ++ outer.result()).reduce(_ unionAll _), batchId = batchId)
       } finally {
         delta.unpersist()
         prunedProbe.foreach(_.unpersist())

@@ -31,6 +31,14 @@ final case class LogPos(commit: String, lsn: Long) {
 final case class FileEntry(path: String, bucket: Int, schemaIdx: Int, rows: Long,
     stats: Map[String, (String, String)] = Map.empty)
 
+/** One source partition's share of an applied batch; `maxTs` = newest fresh `ts_ms`. */
+final case class PartMetrics(events: Long, fresh: Long, quarantined: Long, applied: Long, maxTs: Option[Long])
+
+/** Per-batch metrics inside an apply's commit — the Iceberg snapshot summary
+  * / Delta `commitInfo.operationMetrics` analog; `startMs` = apply start.
+  */
+final case class BatchMetrics(startMs: Long, parts: Map[Int, PartMetrics])
+
 final case class CommitInfo(
     version: Long,
     batchId: Long,
@@ -40,7 +48,8 @@ final case class CommitInfo(
     schemaIdx: Int,                    // current table schema
     files: Seq[FileEntry],
     numBuckets: Int = 0,               // bucket layout at this commit (0 = pre-layout-tracking commit)
-    tsMs: Long = 0L) {                 // wall-clock commit stamp (0 = pre-stamp commit); set by commit()
+    tsMs: Long = 0L,                   // wall-clock commit stamp (0 = pre-stamp commit); set by commit()
+    metrics: Option[BatchMetrics] = None) { // the applying batch's metrics; set by commit()
   def schema: StructType = DataType.fromJson(schemas(schemaIdx)).asInstanceOf[StructType]
 }
 
@@ -51,8 +60,9 @@ final case class CommitInfo(
   * {{{
   *   <root>/_commits/v<zero-padded>.json   // the commit log (source of truth)
   *   <root>/data/<batch-dir>/__bucket=N/part-....parquet
-  *   <root>/_metrics/part-....parquet      // per-batch per-partition lineage
   * }}}
+  * Per-batch metrics ride in each apply's commit JSON ([[metrics]] also
+  * reads the `<root>/_metrics` parquet feed of older tables).
   *
   * Properties:
   *  - snapshot isolation: readers resolve the latest commit file and read
@@ -173,11 +183,11 @@ final class LakeTable(
       case Right(full) =>
         resolved.put(full.version, full); trimMemo(full.version); full
       case Left(d) =>
-        Option(resolved.get(d.version)).getOrElse {
+        Option(resolved.get(d.head.version)).getOrElse {
           val base = Option(resolved.get(d.base)).getOrElse(
             materialize(f"v${d.base}%020d.json"))
-          val files = base.files.filterNot(f => d.removedPaths.contains(f.path)) ++ d.added
-          val ci = CommitInfo(d.version, d.batchId, d.watermark, d.fence, d.schemas, d.schemaIdx, files, d.numBuckets, d.tsMs)
+          val files = base.files.filterNot(f => d.removedPaths.contains(f.path)) ++ d.head.files
+          val ci = d.head.copy(files = files)
           resolved.put(ci.version, ci); trimMemo(ci.version); ci
         }
     }
@@ -200,6 +210,32 @@ final class LakeTable(
         (c.version, c.batchId, c.schemaIdx, c.schemas(c.schemaIdx))
     }
     rows.toDF("version", "batchId", "schemaIdx", "schemaJson")
+  }
+
+  /** Per-batch, per-source-partition lineage (SURVEY.md §7.0 item 9),
+    * derived from the apply commits' metrics like [[schemaLog]]:
+    * `dedupDropped = freshEvents − applied`, `fenced = events −
+    * freshEvents − quarantined` (rows with a null `part` are quarantined
+    * but counted in no partition), `commitLagMs = tsMs − maxTs` (0 when
+    * nothing fresh arrived), `batchWallMs = tsMs − startMs`. Metrics live
+    * as long as their commit ([[expireSnapshots]] drops them with it).
+    * Rows of a legacy `<root>/_metrics` feed come first, with null
+    * `events`, `quarantined` and `fenced`.
+    */
+  def metrics(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val rows = for {
+      c <- commits()
+      m <- c.metrics.toSeq
+      (p, pm) <- m.parts.toSeq.sortBy(_._1)
+    } yield (c.batchId, c.version, p, pm.fresh, pm.applied, pm.fresh - pm.applied,
+      pm.maxTs.fold(0L)(c.tsMs - _), c.tsMs - m.startMs,
+      pm.events, pm.quarantined, pm.events - pm.fresh - pm.quarantined)
+    val current = rows.toDF("batchId", "commitVersion", "part", "freshEvents", "applied",
+      "dedupDropped", "commitLagMs", "batchWallMs", "events", "quarantined", "fenced")
+    val legacy = Paths.get(root, "_metrics")
+    if (!Files.isDirectory(legacy)) current
+    else spark.read.parquet(legacy.toString).unionByName(current, allowMissingColumns = true)
   }
 
   /** Register an externally-supplied schema into the table's schema
@@ -281,6 +317,10 @@ final class LakeTable(
 
   /** Atomically publish a commit. Single-writer (the streaming driver).
     *
+    * `metrics` come only from the caller's apply: a commit copied from an
+    * older one (schema patch, restore, compaction, rebucket) never
+    * re-publishes the metrics of the commit it copied.
+    *
     * Incremental manifests: when the predecessor is supplied, the commit
     * FILE stores only the file-set delta (added entries + removed paths) —
     * O(touched buckets), not O(table files) — with a full manifest rolled
@@ -288,18 +328,16 @@ final class LakeTable(
     * resolution chain (Iceberg manifest-list analog). Keeps the driver's
     * per-batch commit cost flat as the table and the batch count grow.
     */
-  def commit(ci0: CommitInfo, prev: Option[CommitInfo] = None): CommitInfo = {
+  def commit(ci0: CommitInfo, prev: Option[CommitInfo] = None,
+      metrics: Option[BatchMetrics] = None): CommitInfo = {
     // Stamp the bucket layout (callers construct CommitInfo without it;
     // rebucket passes the NEW count explicitly) and the wall-clock commit
     // time — ALWAYS now, whatever the caller carried (restore/schema
     // patches copy an old CommitInfo; their commit is still a new event).
     val ci = (if (ci0.numBuckets > 0) ci0 else ci0.copy(numBuckets = numBuckets))
-      .copy(tsMs = System.currentTimeMillis())
-    val json = prev match {
-      case Some(p) if p.version == ci.version - 1 && ci.version % LakeTable.FullManifestEvery != 0 =>
-        LakeTable.toDeltaJson(ci, p)
-      case _ => LakeTable.toJson(ci)
-    }
+      .copy(tsMs = System.currentTimeMillis(), metrics = metrics)
+    val json = LakeTable.toJson(ci,
+      prev.filter(p => p.version == ci.version - 1 && ci.version % LakeTable.FullManifestEvery != 0))
     // Publish via the store's CAS create — the backend-native
     // compare-and-swap (FileCommitStore: POSIX createLink, which
     // atomically FAILS if the version already exists), so a lost racing
@@ -1045,19 +1083,6 @@ final class LakeTable(
       if (deep.isEmpty) None else compactBuckets(spark, deep, tombstoneRetention)
     }
 
-  /** Snapshot EXPIRY (Iceberg `expire_snapshots` analog): drop all but the
-    * last `keepLast` commits from the log and DELETE every data file no
-    * retained manifest references. Time travel below the new horizon is
-    * gone (that is the point — bounded history, bounded storage); the head
-    * and everything at-or-above the horizon resolve unchanged. Returns
-    * (commits dropped, data files deleted).
-    *
-    * Single-writer like compaction (run in the between-batch maintenance
-    * slot). The horizon commit is rewritten as a FULL manifest first when
-    * it was a delta (its base may be expiring), so retained history never
-    * dangles. Driver cost: O(retained manifests + files) metadata; data
-    * deletion is one pass over unreferenced paths.
-    */
   // ---------------------------------------------------------------------
   // Named refs (Iceberg tag analog): a tag pins a commit version under a
   // human name, time travel resolves it, and snapshot expiry will not
@@ -1128,6 +1153,21 @@ final class LakeTable(
   def snapshotAtTag(spark: SparkSession, name: String): Option[DataFrame] =
     tags().get(name).flatMap(v => snapshotAt(spark, v))
 
+  /** Snapshot EXPIRY (Iceberg `expire_snapshots` analog): drop all but the
+    * last `keepLast` commits from the log and DELETE every data file no
+    * retained manifest references. Time travel below the new horizon is
+    * gone (that is the point — bounded history, bounded storage); the head
+    * and everything at-or-above the horizon resolve unchanged. Returns
+    * (commits dropped, data files deleted).
+    *
+    * Single-writer like compaction (run in the between-batch maintenance
+    * slot). The horizon commit is rewritten as a FULL manifest first when
+    * it was a delta (its base may be expiring), so retained history never
+    * dangles. Driver cost: O(retained manifests + files) metadata; data
+    * deletion is one pass over unreferenced paths. The per-batch
+    * [[metrics]] of a dropped commit go with it, like its [[schemaLog]]
+    * row.
+    */
   def expireSnapshots(keepLast: Int = 1): (Int, Int) = {
     require(keepLast >= 1, "must retain at least the head commit")
     val names = commitNames()
@@ -1438,10 +1478,7 @@ object LakeTable {
         .toSeq.sortBy(_.getFileName.toString).lastOption
         .getOrElse(throw new IllegalStateException(s"empty commit log at $root"))
       finally listing.close()
-    val n = parse(Files.readString(last)) match {
-      case Right(full) => full.numBuckets
-      case Left(d)     => d.numBuckets
-    }
+    val n = parse(Files.readString(last)).fold(_.head, identity).numBuckets
     require(n > 0, s"commit log at $root predates bucket-layout tracking")
     new LakeTable(root, n, keyCols, mergeOnRead, autoCompactDepth, maxFileRows,
       bloomKeyNdv, writerOptions)
@@ -1453,31 +1490,49 @@ object LakeTable {
     */
   val FullManifestEvery = 16
 
-  /** On-disk delta form of a commit (file-set change vs `base`). */
-  final case class DeltaCommit(
-      version: Long,
-      batchId: Long,
-      watermark: Map[Int, Long],
-      fence: Option[LogPos],
-      schemas: Seq[String],
-      schemaIdx: Int,
-      base: Long,
-      added: Seq[FileEntry],
-      removedPaths: Set[String],
-      numBuckets: Int = 0,
-      tsMs: Long = 0L)
+  /** On-disk delta form of a commit: the header fields in `head`, whose
+    * `files` are only the entries added since `base`.
+    */
+  final case class DeltaCommit(head: CommitInfo, base: Long, removedPaths: Set[String])
 
   /** Parse a commit file: Right = full manifest, Left = delta. */
   def parse(s: String): Either[DeltaCommit, CommitInfo] = {
     val o = mapper.readTree(s)
-    if (o.has("delta")) Left(fromDeltaJson(o)) else Right(fromJson(s))
+    Option(o.get("delta")) match {
+      case Some(d) =>
+        Left(DeltaCommit(readHeader(o, arr(d.get("added")).map(readFile).toSeq),
+          d.get("base").asLong(), arr(d.get("removed")).map(_.asText()).toSet))
+      case None => Right(readHeader(o, arr(o.get("files")).map(readFile).toSeq))
+    }
   }
 
-  def toDeltaJson(ci: CommitInfo, prev: CommitInfo): String = {
-    val prevByPath = prev.files.map(f => f.path -> f).toMap
-    val added = ci.files.filterNot(f => prevByPath.contains(f.path))
-    val curPaths = ci.files.map(_.path).toSet
-    val removed = prev.files.map(_.path).filterNot(curPaths.contains)
+  /** A full manifest, or with `deltaFrom` (the predecessor) a delta: the
+    * entries added since it and the paths removed.
+    */
+  def toJson(ci: CommitInfo, deltaFrom: Option[CommitInfo] = None): String = {
+    val o = header(ci)
+    deltaFrom match {
+      case Some(prev) =>
+        val (prevPaths, curPaths) = (prev.files.map(_.path).toSet, ci.files.map(_.path).toSet)
+        val d = o.putObject("delta")
+        d.put("base", prev.version)
+        val fs = d.putArray("added")
+        ci.files.filterNot(f => prevPaths.contains(f.path)).foreach(f => putFile(fs.addObject(), f))
+        val rm = d.putArray("removed")
+        prev.files.map(_.path).filterNot(curPaths.contains).foreach(rm.add)
+      case None =>
+        val fs = o.putArray("files")
+        ci.files.foreach(f => putFile(fs.addObject(), f))
+    }
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(o)
+  }
+
+  private def arr(n: JsonNode): Iterator[JsonNode] = n.asInstanceOf[ArrayNode].elements().asScala
+
+  /** Every commit field but the file list, shared by full and delta
+    * manifests. `metrics` is written only when present.
+    */
+  private def header(ci: CommitInfo): ObjectNode = {
     val o = mapper.createObjectNode()
     o.put("version", ci.version)
     o.put("batchId", ci.batchId)
@@ -1493,55 +1548,44 @@ object LakeTable {
     o.put("schemaIdx", ci.schemaIdx)
     o.put("numBuckets", ci.numBuckets)
     o.put("tsMs", ci.tsMs)
-    val d = o.putObject("delta")
-    d.put("base", prev.version)
-    val fs = d.putArray("added")
-    added.foreach(f => putFile(fs.addObject(), f))
-    val rm = d.putArray("removed")
-    removed.foreach(rm.add)
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(o)
+    ci.metrics.foreach { m =>
+      val mo = o.putObject("metrics")
+      mo.put("startMs", m.startMs)
+      val ps = mo.putObject("parts")
+      m.parts.toSeq.sortBy(_._1).foreach { case (p, pm) =>
+        val po = ps.putObject(p.toString)
+        po.put("events", pm.events); po.put("fresh", pm.fresh)
+        po.put("quarantined", pm.quarantined); po.put("applied", pm.applied)
+        pm.maxTs.foreach(po.put("maxTs", _))
+      }
+    }
+    o
   }
 
-  private def fromDeltaJson(o: JsonNode): DeltaCommit = {
-    def arr(n: JsonNode): Iterator[JsonNode] = n.asInstanceOf[ArrayNode].elements().asScala
+  private def readHeader(o: JsonNode, files: Seq[FileEntry]): CommitInfo = {
     val wm = o.get("watermark").asInstanceOf[ObjectNode]
     val watermark = wm.fields().asScala.map(e => e.getKey.toInt -> e.getValue.asLong()).toMap
     val fence = Option(o.get("fence")).filterNot(_.isNull)
       .map(f => LogPos(f.get("commit").asText(), f.get("lsn").asLong()))
-    val d = o.get("delta")
-    DeltaCommit(
+    val metrics = Option(o.get("metrics")).map { m =>
+      BatchMetrics(m.get("startMs").asLong(), m.get("parts").fields().asScala.map { e =>
+        val po = e.getValue
+        e.getKey.toInt -> PartMetrics(po.get("events").asLong(), po.get("fresh").asLong(),
+          po.get("quarantined").asLong(), po.get("applied").asLong(),
+          Option(po.get("maxTs")).map(_.asLong()))
+      }.toMap)
+    }
+    CommitInfo(
       version = o.get("version").asLong(),
       batchId = o.get("batchId").asLong(),
       watermark = watermark,
       fence = fence,
       schemas = arr(o.get("schemas")).map(_.asText()).toSeq,
       schemaIdx = o.get("schemaIdx").asInt(),
-      base = d.get("base").asLong(),
-      added = arr(d.get("added")).map(readFile).toSeq,
-      removedPaths = arr(d.get("removed")).map(_.asText()).toSet,
+      files = files,
       numBuckets = Option(o.get("numBuckets")).map(_.asInt()).getOrElse(0),
-      tsMs = Option(o.get("tsMs")).map(_.asLong()).getOrElse(0L))
-  }
-
-  def toJson(ci: CommitInfo): String = {
-    val o = mapper.createObjectNode()
-    o.put("version", ci.version)
-    o.put("batchId", ci.batchId)
-    val wm = o.putObject("watermark")
-    ci.watermark.toSeq.sortBy(_._1).foreach { case (p, l) => wm.put(p.toString, l) }
-    ci.fence match {
-      case Some(f) =>
-        val fn = o.putObject("fence"); fn.put("commit", f.commit); fn.put("lsn", f.lsn)
-      case None => o.putNull("fence")
-    }
-    val ss = o.putArray("schemas")
-    ci.schemas.foreach(ss.add)
-    o.put("schemaIdx", ci.schemaIdx)
-    o.put("numBuckets", ci.numBuckets)
-    o.put("tsMs", ci.tsMs)
-    val fs = o.putArray("files")
-    ci.files.foreach(f => putFile(fs.addObject(), f))
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(o)
+      tsMs = Option(o.get("tsMs")).map(_.asLong()).getOrElse(0L),
+      metrics = metrics)
   }
 
   private def putFile(fo: ObjectNode, f: FileEntry): Unit = {
@@ -1564,24 +1608,5 @@ object LakeTable {
     }.getOrElse(Map.empty[String, (String, String)])
     FileEntry(f.get("path").asText(), f.get("bucket").asInt(),
       f.get("schemaIdx").asInt(), f.get("rows").asLong(), stats)
-  }
-
-  def fromJson(s: String): CommitInfo = {
-    val o = mapper.readTree(s)
-    def arr(n: JsonNode): Iterator[JsonNode] = n.asInstanceOf[ArrayNode].elements().asScala
-    val wm = o.get("watermark").asInstanceOf[ObjectNode]
-    val watermark = wm.fields().asScala.map(e => e.getKey.toInt -> e.getValue.asLong()).toMap
-    val fence = Option(o.get("fence")).filterNot(_.isNull)
-      .map(f => LogPos(f.get("commit").asText(), f.get("lsn").asLong()))
-    CommitInfo(
-      version = o.get("version").asLong(),
-      batchId = o.get("batchId").asLong(),
-      watermark = watermark,
-      fence = fence,
-      schemas = arr(o.get("schemas")).map(_.asText()).toSeq,
-      schemaIdx = o.get("schemaIdx").asInt(),
-      files = arr(o.get("files")).map(readFile).toSeq,
-      numBuckets = Option(o.get("numBuckets")).map(_.asInt()).getOrElse(0),
-      tsMs = Option(o.get("tsMs")).map(_.asLong()).getOrElse(0L))
   }
 }

@@ -100,8 +100,7 @@ object MaterializedView {
           }
         val ev = refreshEvents(state, feed, dv.groupCols, dv.measure, dv.measureAlias,
           version = baseV, numParts = dv.table.numBuckets)
-        graft.merge.CdcApply.applyBatch(spark, dv.table, ev, batchId = baseV,
-          writeMetrics = false)
+        graft.merge.CdcApply.applyBatch(spark, dv.table, ev, batchId = baseV)
       }
     }
   }

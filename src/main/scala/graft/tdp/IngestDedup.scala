@@ -157,7 +157,7 @@ object IngestDedup {
     // the lineage, so the returned frame can never recompute.
     val admitted = unseen(spark, index, batch, idCol, textCol).localCheckpoint()
     graft.merge.CdcApply.applyBatch(spark, index, digestEvents(admitted, idCol, textCol),
-      batchId, writeMetrics = false, fenceByWatermark = false)
+      batchId, fenceByWatermark = false)
     admitted
   }
 
@@ -354,7 +354,7 @@ object IngestDedup {
       // would re-run the whole admit pipeline (profiled: 58 s at sf0.1).
       val admitted = admitAgainstIndex(spark, index, winners, idCol).localCheckpoint()
       graft.merge.CdcApply.applyBatch(spark, index, bandEvents(admitted, idCol),
-        batchId, writeMetrics = false, fenceByWatermark = false)
+        batchId, fenceByWatermark = false)
       admitted
     } finally keyed.unpersist()
   }

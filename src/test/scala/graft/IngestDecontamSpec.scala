@@ -164,10 +164,10 @@ class IngestDecontamSpec extends SparkSpec {
     // lsn = -id makes LWW keep 3 (min id), replay-stable in any order.
     CdcApply.applyBatch(spark, index,
       IngestDedup.digestEvents(Seq((7L, "same text")).toDF("doc_id", "text")),
-      batchId = 0L, writeMetrics = false, fenceByWatermark = false)
+      batchId = 0L, fenceByWatermark = false)
     CdcApply.applyBatch(spark, index,
       IngestDedup.digestEvents(Seq((3L, "same text")).toDF("doc_id", "text")),
-      batchId = 1L, writeMetrics = false, fenceByWatermark = false)
+      batchId = 1L, fenceByWatermark = false)
     val canon = index.snapshot(spark).get.select("canonical_id").as[Long].collect().toSeq
     assert(canon === Seq(3L))
   }

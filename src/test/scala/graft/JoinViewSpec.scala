@@ -88,21 +88,21 @@ class JoinViewSpec extends SparkSpec {
     }
 
     CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left,
-      numBatches = 2, writeMetrics = false)
+      numBatches = 2)
     JoinView.maintain(spark, jv) // right empty: no-op, no commits
     assert(jv.view.lastCommit().isEmpty)
 
     CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right,
-      numBatches = 2, writeMetrics = false)
+      numBatches = 2)
     check("both bases at part 1")
     assert(viewRows(jv).nonEmpty, "part-1 join must be non-empty — else the test is vacuous")
 
     CdcPipeline.replay(spark, leftEvents(61 to 120).toDF(), jv.left,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     check("left advanced to part 2 (join-column changes + deletes folded)")
 
     CdcPipeline.replay(spark, rightEvents(61 to 120).toDF(), jv.right,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     check("right advanced to part 2 (dimension deletes retract their pairs)")
 
     // the reflected version pair is encoded in the view's batchId
@@ -117,19 +117,19 @@ class JoinViewSpec extends SparkSpec {
       assert(viewRows(jv) === directJoin(jv), s"$label: view diverged from the direct LEFT JOIN")
     }
 
-    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2, writeMetrics = false)
-    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2, writeMetrics = false)
+    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2)
+    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2)
     // catch-up runs the bootstrap: left steps against right@0 birth a
     // sentinel row per live left row; right steps then kill each value's
     // sentinels as its FIRST partner arrives
     check("both bases at part 1")
 
     CdcPipeline.replay(spark, leftEvents(61 to 120).toDF(), jv.left,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     check("left advanced (partnerless postimages assert sentinel rows)")
 
     CdcPipeline.replay(spark, rightEvents(61 to 120).toDF(), jv.right,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     check("right advanced (L1's LAST partner death re-births its left rows)")
 
     // the dimension deleted L1 late — its left rows must survive
@@ -144,7 +144,7 @@ class JoinViewSpec extends SparkSpec {
     val orphan = (121 to 132).map(i =>
       FlatEvent.mk((s"repo${i % 3}", s"p${i % 4}.txt"), i.toLong + 200, "u").copy(lang = "L9"))
     CdcPipeline.replay(spark, orphan.toDF(), jv.left,
-      numBatches = 1, startBatchId = 4, writeMetrics = false)
+      numBatches = 1, startBatchId = 4)
     check("left-step anti against a non-empty right (L9 has no dim row)")
     assert(viewRows(jv).exists(r => r(2) == "L9" && r.drop(4).forall(_ == null)),
       "L9 rows must ride null-extended via the left-step anti path")
@@ -164,16 +164,16 @@ class JoinViewSpec extends SparkSpec {
       JoinView.maintain(spark, jv)
       assert(viewRows(jv) === directJoin(jv), s"$label: view diverged from the direct RIGHT JOIN")
     }
-    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2, writeMetrics = false)
-    CdcPipeline.replay(spark, rightEventsWide(1 to 60).toDF(), jv.right, 2, writeMetrics = false)
+    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2)
+    CdcPipeline.replay(spark, rightEventsWide(1 to 60).toDF(), jv.right, 2)
     check("both bases at part 1")
     assert(viewRows(jv).exists(r => r.take(4).forall(_ == null) && r(4) == "L3"),
       "the L3 dimension row must ride null-extended (no left partner)")
     CdcPipeline.replay(spark, leftEvents(61 to 120).toDF(), jv.left,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     check("left advanced (pair churn against preserved right)")
     CdcPipeline.replay(spark, rightEventsWide(61 to 120).toDF(), jv.right,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     check("right advanced (right-step anti path for partnerless dim rows)")
   }
 
@@ -183,22 +183,22 @@ class JoinViewSpec extends SparkSpec {
       JoinView.maintain(spark, jv)
       assert(viewRows(jv) === directJoin(jv), s"$label: view diverged from the direct FULL JOIN")
     }
-    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2, writeMetrics = false)
-    CdcPipeline.replay(spark, rightEventsWide(1 to 60).toDF(), jv.right, 2, writeMetrics = false)
+    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2)
+    CdcPipeline.replay(spark, rightEventsWide(1 to 60).toDF(), jv.right, 2)
     check("bootstrap")
     assert(viewRows(jv).exists(r => r.take(4).forall(_ == null)),
       "right-sentinel rows must be present (L3 has no left partner)")
     CdcPipeline.replay(spark, leftEvents(61 to 120).toDF(), jv.left,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     CdcPipeline.replay(spark, rightEventsWide(61 to 120).toDF(), jv.right,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     check("both advanced (pair + sentinel churn, both preserved sides)")
     // L3's FIRST left partner arrives through a LEFT step → the right-side
     // sentinel rows must die via the left-step partner transitions
     val l3 = (1 to 6).map(i =>
       FlatEvent.mk(("repoL3", s"p$i.txt"), 300L + i, "u").copy(lang = "L3"))
     CdcPipeline.replay(spark, l3.toDF(), jv.left,
-      numBatches = 1, startBatchId = 4, writeMetrics = false)
+      numBatches = 1, startBatchId = 4)
     check("left step kills the right-side sentinels (first partner)")
     assert(!viewRows(jv).exists(r => r.take(4).forall(_ == null) && r(4) == "L3"),
       "L3's sentinel rows must be gone once a left partner exists")
@@ -207,7 +207,7 @@ class JoinViewSpec extends SparkSpec {
     val l3d = (1 to 6).map(i =>
       FlatEvent.mk(("repoL3", s"p$i.txt"), 400L + i, "d").copy(lang = "L3"))
     CdcPipeline.replay(spark, l3d.toDF(), jv.left,
-      numBatches = 1, startBatchId = 5, writeMetrics = false)
+      numBatches = 1, startBatchId = 5)
     check("left step re-births the right-side sentinels (last partner death)")
     assert(viewRows(jv).exists(r => r.take(4).forall(_ == null) && r(4) == "L3"),
       "L3 must ride null-extended again after its last partner died")
@@ -215,7 +215,7 @@ class JoinViewSpec extends SparkSpec {
     val l9 = (1 to 6).map(i =>
       FlatEvent.mk(("repoL9", s"p$i.txt"), 500L + i, "u").copy(lang = "L9"))
     CdcPipeline.replay(spark, l9.toDF(), jv.left,
-      numBatches = 1, startBatchId = 6, writeMetrics = false)
+      numBatches = 1, startBatchId = 6)
     check("left anti path (L9 partnerless)")
     assert(viewRows(jv).exists(r => r(2) == "L9" && r.drop(4).forall(_ == null)),
       "L9 rows must ride null-extended via the left-step anti path")
@@ -239,7 +239,7 @@ class JoinViewSpec extends SparkSpec {
           FlatEvent.mk(key, lsn, op).copy(lang = s"L${rnd.nextInt(5)}")
         }
         CdcPipeline.replay(spark, evs.toDF(), jv.left,
-          numBatches = 1, startBatchId = batch, writeMetrics = false)
+          numBatches = 1, startBatchId = batch)
         batch += 1
       }
       def rightWave(n: Int): Unit = if (n > 0) {
@@ -250,7 +250,7 @@ class JoinViewSpec extends SparkSpec {
             op, rnd.nextInt(2), lsn, 1700000000000L + lsn)
         }
         CdcPipeline.replay(spark, evs.toDF(), jv.right,
-          numBatches = 1, startBatchId = batch, writeMetrics = false)
+          numBatches = 1, startBatchId = batch)
         batch += 1
       }
       leftWave(10 + rnd.nextInt(20)); rightWave(8 + rnd.nextInt(12))
@@ -276,10 +276,10 @@ class JoinViewSpec extends SparkSpec {
     // projection (codegen'd raise_error — no per-fold count job), so it
     // must surface as a loud job failure when such a key steps
     val jv = mkView("left_outer")
-    CdcPipeline.replay(spark, leftEvents(1 to 24).toDF(), jv.left, 1, writeMetrics = false)
+    CdcPipeline.replay(spark, leftEvents(1 to 24).toDF(), jv.left, 1)
     val poisoned = rightEvents(1 to 24) :+
       DimEvent(JoinView.NoPartner, "teamX", f"c${99L}%010d", "u", 0, 99L, 1700000000099L)
-    CdcPipeline.replay(spark, poisoned.toDF(), jv.right, 1, writeMetrics = false)
+    CdcPipeline.replay(spark, poisoned.toDF(), jv.right, 1)
     val ex = intercept[Throwable](JoinView.maintain(spark, jv))
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
@@ -289,8 +289,8 @@ class JoinViewSpec extends SparkSpec {
 
   test("re-maintain is a no-op: steps are batchId-fenced, files untouched") {
     val jv = mkView()
-    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2, writeMetrics = false)
-    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2, writeMetrics = false)
+    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2)
+    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2)
     JoinView.maintain(spark, jv)
     val before = jv.view.lastCommit().get
     JoinView.maintain(spark, jv)
@@ -303,7 +303,7 @@ class JoinViewSpec extends SparkSpec {
     val jv = mkView()
     val root = Files.createTempDirectory("jv-stream").toString
     val inDir = s"$root/in"; val ckpt = s"$root/ckpt"
-    CdcPipeline.replay(spark, rightEvents(1 to 120).toDF(), jv.right, 2, writeMetrics = false)
+    CdcPipeline.replay(spark, rightEvents(1 to 120).toDF(), jv.right, 2)
     def run(): Unit = CdcPipeline.start(spark, inDir, ckpt, jv.left, joinViews = Seq(jv))
       .awaitTermination()
 
@@ -339,13 +339,13 @@ class JoinViewSpec extends SparkSpec {
       assert(got === direct, "cascaded aggregate diverged from the direct group-count of the join")
     }
 
-    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2, writeMetrics = false)
-    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2, writeMetrics = false)
+    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2)
+    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2)
     checkCascade()
     CdcPipeline.replay(spark, leftEvents(61 to 120).toDF(), jv.left,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     CdcPipeline.replay(spark, rightEvents(61 to 120).toDF(), jv.right,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     checkCascade()
   }
 
@@ -358,9 +358,9 @@ class JoinViewSpec extends SparkSpec {
     Seq(a, b).foreach { jv =>
       def adv(lsns: Range, startId: Long): Unit = {
         CdcPipeline.replay(spark, leftEvents(lsns).toDF(), jv.left,
-          numBatches = 2, startBatchId = startId, writeMetrics = false)
+          numBatches = 2, startBatchId = startId)
         CdcPipeline.replay(spark, rightEvents(lsns).toDF(), jv.right,
-          numBatches = 2, startBatchId = startId, writeMetrics = false)
+          numBatches = 2, startBatchId = startId)
         if (jv eq a) JoinView.maintain(spark, jv) // A: per-advance catch-up
       }
       adv(1 to 60, 0); adv(61 to 120, 2)
@@ -376,20 +376,20 @@ class JoinViewSpec extends SparkSpec {
 
   test("crash mid-catch-up: resuming from the left range's commit completes the right range only") {
     val jv = mkView()
-    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2, writeMetrics = false)
-    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2, writeMetrics = false)
+    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2)
+    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2)
     JoinView.maintain(spark, jv)
     // left advances and its range commits; the "crash" happens before the
     // right side ever advances — the view durably holds the mid-pair
     // state (laHead, vbOld), exactly what a crash between the two range
     // applies leaves behind
     CdcPipeline.replay(spark, leftEvents(61 to 120).toDF(), jv.left,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     JoinView.maintain(spark, jv)
     assert(JoinView.decode(jv.view.lastCommit().get.batchId) === (4L, 2L))
     // recovery: right advances, maintain folds ONLY the right range
     CdcPipeline.replay(spark, rightEvents(61 to 120).toDF(), jv.right,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     val before = jv.view.commitVersions().size
     JoinView.maintain(spark, jv)
     assert(jv.view.commitVersions().size === before + 1, "resume must cost one commit")
@@ -399,18 +399,18 @@ class JoinViewSpec extends SparkSpec {
 
   test("counterpart rebuilt below the reflected version fails loudly instead of folding against empty") {
     val jv = mkView()
-    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2, writeMetrics = false)
-    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2, writeMetrics = false)
+    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2)
+    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2)
     JoinView.maintain(spark, jv) // view reflects (2, 2)
     // rebuild the right base IN PLACE: head regresses to 1 < reflected 2
     graft.core.Fs.deleteTree(java.nio.file.Paths.get(jv.right.root))
     val rebuilt = new LakeTable(jv.right.root, numBuckets = 2, keyCols = Seq("lang"))
-    CdcPipeline.replay(spark, rightEvents(1 to 30).toDF(), rebuilt, 1, writeMetrics = false)
+    CdcPipeline.replay(spark, rightEvents(1 to 30).toDF(), rebuilt, 1)
     // left advances, so maintain MUST fold left deltas against right@2 —
     // which no longer exists; round-3 ADVICE: this used to read as an
     // empty counterpart and silently corrupt the view
     CdcPipeline.replay(spark, leftEvents(61 to 120).toDF(), jv.left,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     val ex = intercept[IllegalStateException](JoinView.maintain(spark, jv))
     assert(ex.getMessage.contains("rebuild"))
   }
@@ -422,14 +422,14 @@ class JoinViewSpec extends SparkSpec {
     // side's folds land on state reflecting the old table. The
     // maintain-level head-regression guard covers both sides.
     val jv = mkView()
-    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2, writeMetrics = false)
-    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2, writeMetrics = false)
+    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2)
+    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2)
     JoinView.maintain(spark, jv) // view reflects (2, 2)
     graft.core.Fs.deleteTree(java.nio.file.Paths.get(jv.left.root))
     val rebuilt = new LakeTable(jv.left.root, numBuckets = 4)
-    CdcPipeline.replay(spark, leftEvents(1 to 30).toDF(), rebuilt, 1, writeMetrics = false)
+    CdcPipeline.replay(spark, leftEvents(1 to 30).toDF(), rebuilt, 1)
     CdcPipeline.replay(spark, rightEvents(61 to 120).toDF(), jv.right,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     val ex = intercept[IllegalStateException](JoinView.maintain(spark, jv))
     assert(ex.getMessage.contains("rebuild"))
   }
@@ -455,18 +455,18 @@ class JoinViewSpec extends SparkSpec {
     val bigLeft = (1 to 20000).map(i =>
       FlatEvent(s"repo$i", s"f$i.txt", f"c$i%010d", s"L$i", s"$pad-$i", "c",
         i % 4, i.toLong, 1700000000000L + i))
-    CdcPipeline.replay(spark, bigLeft.toDF(), jv.left, 1, writeMetrics = false)
+    CdcPipeline.replay(spark, bigLeft.toDF(), jv.left, 1)
     // right v1: one row (gets the left fold + a small right fold done
     // cheaply, outside the measured window)
     CdcPipeline.replay(spark, Seq(DimEvent("L1", "team0", "c0000000001", "u", 0, 1L,
-      1700000000001L)).toDF(), jv.right, 1, writeMetrics = false)
+      1700000000001L)).toDF(), jv.right, 1)
     JoinView.maintain(spark, jv)
     // right v2: 1500 fresh join values — the measured large-delta fold
     val dimWave = (1 to 1500).map(i =>
       DimEvent(s"L$i", s"team${i % 7}", f"c${1000 + i}%010d", "u", i % 2, 1000L + i,
         1700000001000L + i))
     CdcPipeline.replay(spark, dimWave.toDF(), jv.right, numBatches = 1,
-      startBatchId = 1, writeMetrics = false)
+      startBatchId = 1)
     val moved = shuffleBytes(JoinView.maintain(spark, jv))
     assert(viewRows(jv) === directJoin(jv), "pruned large-delta fold diverged")
     val cpBytes = 20000L * 1024L
@@ -476,11 +476,11 @@ class JoinViewSpec extends SparkSpec {
 
   test("expired history below the reflected version fails loudly (rebuild contract)") {
     val jv = mkView()
-    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2, writeMetrics = false)
-    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2, writeMetrics = false)
+    CdcPipeline.replay(spark, leftEvents(1 to 60).toDF(), jv.left, 2)
+    CdcPipeline.replay(spark, rightEvents(1 to 60).toDF(), jv.right, 2)
     JoinView.maintain(spark, jv)
     CdcPipeline.replay(spark, leftEvents(61 to 120).toDF(), jv.left,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     jv.left.expireSnapshots(keepLast = 1) // drops v2..v3 — the view's catch-up segments
     val ex = intercept[IllegalStateException](JoinView.maintain(spark, jv))
     assert(ex.getMessage.contains("rebuild"))

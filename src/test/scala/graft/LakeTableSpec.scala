@@ -159,9 +159,9 @@ class LakeTableSpec extends SparkSpec {
     val log = randomLog(5, 200)
     val table = new LakeTable(tmp(), numBuckets = 8)
     CdcPipeline.replay(spark, log.toDF(), table, numBatches = 2)
-    val m = spark.read.parquet(s"${table.root}/_metrics")
+    val m = table.metrics(spark)
     assert(m.columns.toSet === Set("batchId", "commitVersion", "part", "freshEvents",
-      "applied", "dedupDropped", "commitLagMs", "batchWallMs"))
+      "applied", "dedupDropped", "commitLagMs", "batchWallMs", "events", "quarantined", "fenced"))
     val freshTotal = m.agg(sum("freshEvents")).collect().head.getLong(0)
     assert(freshTotal === log.size)
     assert(m.select("part").distinct().count() === log.map(_.part).distinct.size)
@@ -273,7 +273,7 @@ class LakeTableSpec extends SparkSpec {
     val log = randomLog(11, 800)
     val table = new LakeTable(tmp(), numBuckets = 8)
     // 40 microbatches -> versions 1..40 with full manifests at 16 and 32
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 40, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 40)
     val dir = java.nio.file.Paths.get(table.root, "_commits")
     import scala.jdk.CollectionConverters._
     val byVersion = java.nio.file.Files.list(dir).iterator().asScala
@@ -393,7 +393,7 @@ class LakeTableSpec extends SparkSpec {
   test("depth-triggered partial compaction: only deep buckets rewritten, state preserved") {
     val log = randomLog(17, 500)
     val table = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = true)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 6, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 6)
     val before = table.lastCommit().get
     val depths = table.stackDepths(before)
     assert(depths.values.max > 3, "the replay must have grown stacks past the threshold")
@@ -417,7 +417,7 @@ class LakeTableSpec extends SparkSpec {
   test("autoCompactDepth bounds MoR stacks during a replay and converges") {
     val log = randomLog(18, 500, withTruncate = true)
     val auto = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = true, autoCompactDepth = 2)
-    CdcPipeline.replay(spark, log.toDF(), auto, numBatches = 8, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), auto, numBatches = 8)
     assert(tableState(auto) === foldOracle(log), "auto-compacted MoR resolves to the fold oracle")
     // after the post-batch maintenance slot, no stack exceeds depth+1
     // (a batch appends one file before the trigger fires)
@@ -433,7 +433,7 @@ class LakeTableSpec extends SparkSpec {
   test("merge-on-read resolved read plans ZERO exchanges (bucketed scan satisfies the reduce)") {
     val log = randomLog(13, 200)
     val table = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = true)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
     val resolved = table.resolved(spark, table.lastCommit().get).get
     val plan = resolved.queryExecution.executedPlan.toString
     assert(plan.contains("Bucketed: true"), s"resolved read must use the bucketed scan:\n$plan")
@@ -449,7 +449,7 @@ class LakeTableSpec extends SparkSpec {
       FlatEvent.mk(keys(rnd.nextInt(keys.size)), i.toLong, Seq("c", "u", "r")(rnd.nextInt(3)))
     }
     val table = new LakeTable(tmp(), numBuckets = 4, maxFileRows = 10L)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
     assert(tableState(table) === foldOracle(log), "split-file table converges to the fold oracle")
 
     val ci = table.lastCommit().get
@@ -467,7 +467,7 @@ class LakeTableSpec extends SparkSpec {
   test("time travel: snapshotAt(version) reproduces each historical state") {
     val log = randomLog(31, 300)
     val table = new LakeTable(tmp(), numBuckets = 8)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
     val versions = table.commits().map(_.version)
     assert(versions.size === 3)
     // each version's state equals the fold of the log prefix applied by then
@@ -487,7 +487,7 @@ class LakeTableSpec extends SparkSpec {
   test("change feed: per-version diffs match the fold deltas; compaction diffs empty; manifest prunes") {
     val log = randomLog(47, 300)
     val table = new LakeTable(tmp(), numBuckets = 8)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
     val versions = table.commits().map(_.version)
     assert(versions.size === 3)
     val bounds = log.map(_.lsn)
@@ -542,7 +542,7 @@ class LakeTableSpec extends SparkSpec {
     // manifest pruning: a single-key update touches one bucket; the pair's
     // diff must read NO file from any unchanged bucket
     val one = Seq(FlatEvent.mk(("repo0", "p0.txt"), hi + 100, "u")).toDF()
-    CdcApply.applyBatch(spark, table, one, batchId = 100, writeMetrics = false)
+    CdcApply.applyBatch(spark, table, one, batchId = 100)
     val v2 = table.lastCommit().get.version
     val cs = table.commits().filter(c => c.version == headAfter || c.version == v2)
     val byB = cs.map(c => c.files.groupBy(_.bucket).view.mapValues(_.map(_.path).toSet).toMap)
@@ -562,7 +562,7 @@ class LakeTableSpec extends SparkSpec {
 
     // merge-on-read table: the same feed semantics across file stacks
     val mor = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = true)
-    CdcPipeline.replay(spark, log.toDF(), mor, numBatches = 3, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), mor, numBatches = 3)
     val morVs = mor.commits().map(_.version)
     val morFeed = mor.changeFeed(spark, 0L, morVs.last).get.collect()
     assert(morFeed.length === rows.length, "MoR feed row count equals CoW feed")
@@ -571,7 +571,7 @@ class LakeTableSpec extends SparkSpec {
   test("expireSnapshots bounds history: head intact, expired versions unreadable, dead files deleted") {
     val log = randomLog(37, 400)
     val table = new LakeTable(tmp(), numBuckets = 8)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4)
     val before = tableState(table)
     val dataFiles = () => java.nio.file.Files.walk(java.nio.file.Paths.get(table.root, "data"))
       .filter(p => p.getFileName.toString.endsWith(".parquet")).count()
@@ -589,7 +589,7 @@ class LakeTableSpec extends SparkSpec {
     assert(table.snapshotAt(spark, 2L).isEmpty)
     // the table still takes merges after expiry
     CdcApply.applyBatch(spark, table,
-      Seq(FlatEvent.mk(("repo0", "p0.txt"), 9999L, "u")).toDF(), batchId = 4, writeMetrics = false)
+      Seq(FlatEvent.mk(("repo0", "p0.txt"), 9999L, "u")).toDF(), batchId = 4)
     assert(tableState(table)(("repo0", "p0.txt")).lsn === 9999L)
     // idempotent / no-op when history is already within bounds
     assert(table.expireSnapshots(keepLast = 5) === ((0, 0)))
@@ -598,7 +598,7 @@ class LakeTableSpec extends SparkSpec {
   test("tags: named refs time-travel, clamp snapshot expiry, and drop cleanly") {
     val log = randomLog(53, 400)
     val table = new LakeTable(tmp(), numBuckets = 8)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4)
     assert(table.commitVersions() === Seq(1L, 2L, 3L, 4L))
 
     table.tag("golden", 2L)
@@ -637,7 +637,7 @@ class LakeTableSpec extends SparkSpec {
   test("tags: legacy _refs/<name>.json entries resolve, clamp expiry, and drop") {
     val log = randomLog(54, 300)
     val table = new LakeTable(tmp(), numBuckets = 4)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
     // a tag as tables wrote it before refs were namespaced `ref_<name>.json`
     val refs = java.nio.file.Paths.get(table.root, "_refs")
     Files.createDirectories(refs)
@@ -659,7 +659,7 @@ class LakeTableSpec extends SparkSpec {
   test("removeOrphanFiles deletes only unreferenced data files") {
     val log = randomLog(38, 200)
     val table = new LakeTable(tmp(), numBuckets = 4)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 2, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 2)
     val before = tableState(table)
     // plant orphans: a crashed writer's staged-but-never-committed dir
     val orphanDir = java.nio.file.Paths.get(table.root, "data", "b999999-a0")
@@ -676,7 +676,7 @@ class LakeTableSpec extends SparkSpec {
   test("MoR time travel survives subsequent head reads (no stale bucketed registration)") {
     val log = randomLog(35, 300)
     val mor = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = true)
-    CdcPipeline.replay(spark, log.toDF(), mor, numBatches = 3, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), mor, numBatches = 3)
     val past = mor.snapshotAt(spark, 2L).get // lazy frame over the old commit
     mor.snapshot(spark).get.count() // head read: registers the bucketed state, GCs link dirs
     // the held frame must still collect, and match the lsn-prefix fold
@@ -690,7 +690,7 @@ class LakeTableSpec extends SparkSpec {
   test("point lookup: driver-computed bucket matches the layout; only one bucket read") {
     val log = randomLog(33, 300)
     val table = new LakeTable(tmp(), numBuckets = 8)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 2, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 2)
     val oracle = foldOracle(log)
     // every live key resolves via lookup to exactly its fold-oracle row
     oracle.take(10).foreach { case ((r, p), e) =>
@@ -704,7 +704,7 @@ class LakeTableSpec extends SparkSpec {
     }
     // merge-on-read table: lookup resolves LWW across the bucket's stack
     val mor = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = true)
-    CdcPipeline.replay(spark, log.toDF(), mor, numBatches = 4, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), mor, numBatches = 4)
     oracle.take(5).foreach { case ((r, p), e) =>
       assert(mor.lookup(spark, Seq(r, p)).get.as[FlatEvent].collect().toSeq === Seq(e), s"MoR lookup($r,$p)")
     }
@@ -729,7 +729,7 @@ class LakeTableSpec extends SparkSpec {
     val typed = Seq((7L, "x", "c0000000001", 1L, "c", 0, 1700000000000L))
       .toDF("id", "payload", "commit", "lsn", "op", "part", "ts_ms")
     val longKeyed = new LakeTable(tmp(), numBuckets = 4, keyCols = Seq("id"))
-    CdcApply.applyBatch(spark, longKeyed, typed, batchId = 0, writeMetrics = false)
+    CdcApply.applyBatch(spark, longKeyed, typed, batchId = 0)
     assert(longKeyed.lookup(spark, Seq(7)).get.count() === 1L, "Int key vs Long column")
     assert(longKeyed.lookup(spark, Seq(7L)).get.count() === 1L)
     assert(longKeyed.lookup(spark, Seq(8)).forall(_.count() === 0L))
@@ -738,7 +738,7 @@ class LakeTableSpec extends SparkSpec {
   test("bucket-layout evolution: rebucket preserves state, records layout, stale handles fail fast") {
     val log = randomLog(29, 400)
     val table = new LakeTable(tmp(), numBuckets = 4)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
     val before = tableState(table)
 
     val next = table.rebucket(spark, 16).get
@@ -752,7 +752,7 @@ class LakeTableSpec extends SparkSpec {
     val opened = graft.table.LakeTable.open(next.root)
     assert(opened.numBuckets === 16)
     val extra = FlatEvent.mk(("repo0", "p0.txt"), 9999, "u")
-    CdcApply.applyBatch(spark, opened, Seq(extra).toDF(), batchId = 99, writeMetrics = false)
+    CdcApply.applyBatch(spark, opened, Seq(extra).toDF(), batchId = 99)
     assert(tableState(opened) === before + ((("repo0", "p0.txt")) -> extra))
 
     // the stale 4-bucket handle fails fast instead of silently mis-bucketing
@@ -770,7 +770,7 @@ class LakeTableSpec extends SparkSpec {
     val log = randomLog(30, 300)
     val store = new graft.table.InMemoryCommitStore
     val table = new LakeTable(tmp(), numBuckets = 4, commitStore = Some(store))
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 2, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 2)
     val next = table.rebucket(spark, 8).get
     assert(store.listNames().count(_.matches("v\\d+\\.json")) === 3,
       "the rebucket commit must land in the injected store")
@@ -830,7 +830,7 @@ class LakeTableSpec extends SparkSpec {
     // a lagging view (simulated crash between base and view commits):
     // out-of-band base commit, then maintain() heals it
     val extra = FlatEvent.mk(("repo0", "p0.txt"), 9999, "u")
-    CdcApply.applyBatch(spark, table, Seq(extra).toDF(), batchId = 999, writeMetrics = false)
+    CdcApply.applyBatch(spark, table, Seq(extra).toDF(), batchId = 999)
     MaterializedView.maintain(spark, table, dv)
     assert(viewNow() === want(log :+ extra), "view healed after out-of-band commit")
     // maintain is idempotent at head
@@ -842,7 +842,7 @@ class LakeTableSpec extends SparkSpec {
     import graft.merge.Dml
     val log = randomLog(53, 400)
     val table = new LakeTable(tmp(), numBuckets = 8)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4)
     val before = tableState(table)
     val hitKeys = before.keys.filter(_._2.startsWith("p1")).toSet
     assert(hitKeys.nonEmpty, "fixture must have p1* survivors")
@@ -866,7 +866,7 @@ class LakeTableSpec extends SparkSpec {
     // a NEWER stream commit still beats the DML'd row (DML is point-in-time)
     val k0 = after.keys.find(_._1 == "repo0").get
     val late = FlatEvent.mk(k0, 99999L, "u")
-    CdcApply.applyBatch(spark, table, Seq(late).toDF(), batchId = 50, writeMetrics = false)
+    CdcApply.applyBatch(spark, table, Seq(late).toDF(), batchId = 50)
     assert(tableState(table)(k0) === late)
     // SET on a key column is a loud config error
     intercept[IllegalArgumentException] {
@@ -896,10 +896,10 @@ class LakeTableSpec extends SparkSpec {
     val t3 = new LakeTable(tmp(), numBuckets = 2, mergeOnRead = true)
     val a = FlatEvent.mk(("r", "a.txt"), 1L, "c")
     val b = FlatEvent.mk(("r", "b.txt"), 2L, "c")
-    CdcApply.applyBatch(spark, t3, Seq(a, b).toDF(), batchId = 0, writeMetrics = false)
+    CdcApply.applyBatch(spark, t3, Seq(a, b).toDF(), batchId = 0)
     CdcApply.applyBatch(spark, t3,
       Seq(FlatEvent.mk(("r", "a.txt"), 3L, "t"), FlatEvent.mk(("r", "c.txt"), 4L, "c")).toDF(),
-      batchId = 1, writeMetrics = false)
+      batchId = 1)
     assert(tableState(t3).keys.toSet === Set(("r", "c.txt")), "truncate wiped v1")
     t3.restore(1L)
     assert(tableState(t3) === Map(("r", "a.txt") -> a, ("r", "b.txt") -> b),
@@ -920,9 +920,9 @@ class LakeTableSpec extends SparkSpec {
     val dvA = MaterializedView.DerivedView(vtA, Seq("repo"), length(col("content")), "total_chars")
     val dvB = MaterializedView.DerivedView(vtB, Seq("repo"), length(col("content")), "total_chars")
     halves.zipWithIndex.foreach { case (h, i) =>
-      CdcApply.applyBatch(spark, baseA, h.toDF(), batchId = i, writeMetrics = false)
+      CdcApply.applyBatch(spark, baseA, h.toDF(), batchId = i)
       MaterializedView.maintain(spark, baseA, dvA)
-      CdcApply.applyBatch(spark, baseB, h.toDF(), batchId = i, writeMetrics = false)
+      CdcApply.applyBatch(spark, baseB, h.toDF(), batchId = i)
     }
     MaterializedView.maintain(spark, baseB, dvB)
     def rows(vt: LakeTable): Set[(String, Long, Long)] = vt.snapshot(spark).get
@@ -938,12 +938,12 @@ class LakeTableSpec extends SparkSpec {
   test("derived view maintenance fails loudly when history expired past the view's version") {
     import graft.table.MaterializedView
     val base = new LakeTable(tmp(), numBuckets = 4)
-    CdcPipeline.replay(spark, randomLog(61, 200).toDF(), base, numBatches = 3, writeMetrics = false)
+    CdcPipeline.replay(spark, randomLog(61, 200).toDF(), base, numBatches = 3)
     val vt = new LakeTable(tmp(), numBuckets = 2, keyCols = Seq("repo"))
     val dv = MaterializedView.DerivedView(vt, Seq("repo"), lit(1), "m")
     MaterializedView.maintain(spark, base, dv) // caught up to v3
     CdcApply.applyBatch(spark, base,
-      Seq(FlatEvent.mk(("repo9", "z.txt"), 5000L, "u")).toDF(), batchId = 7, writeMetrics = false)
+      Seq(FlatEvent.mk(("repo9", "z.txt"), 5000L, "u")).toDF(), batchId = 7)
     base.expireSnapshots(keepLast = 1) // drops v1..v3 — the view's catch-up history
     intercept[IllegalStateException] { MaterializedView.maintain(spark, base, dv) }
     // a NEW (empty) view on the same expired-history table is fine: the
@@ -961,7 +961,7 @@ class LakeTableSpec extends SparkSpec {
   test("restore: rolls back as a new commit; history, feed, and fencing intact") {
     val log = randomLog(59, 400)
     val table = new LakeTable(tmp(), numBuckets = 8)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4)
     val headState = tableState(table)
     val headCi = table.lastCommit().get
     def stateAt(v: Long): Map[(String, String), FlatEvent] =
@@ -978,13 +978,13 @@ class LakeTableSpec extends SparkSpec {
     // fencing kept: a redelivered stream batch stays fenced (rollback sticks)
     val redelivered = CdcApply.applyBatch(spark, table,
       Seq(FlatEvent.mk(("repo0", "p0.txt"), 1L, "u")).toDF(),
-      batchId = headCi.batchId, writeMetrics = false)
+      batchId = headCi.batchId)
     assert(!redelivered.committed, "old batchId must stay fenced after restore")
     assert(tableState(table) === want2)
     // new data applies normally on top of the restored state
     val fresh = FlatEvent.mk(("repo0", "p0.txt"), 99999L, "u")
     CdcApply.applyBatch(spark, table, Seq(fresh).toDF(),
-      batchId = headCi.batchId + 1, writeMetrics = false)
+      batchId = headCi.batchId + 1)
     assert(tableState(table) === want2 + ((("repo0", "p0.txt")) -> fresh))
     // restore target must exist and precede head
     intercept[IllegalArgumentException] { table.restore(9999L) }
@@ -993,7 +993,7 @@ class LakeTableSpec extends SparkSpec {
   test("optimistic concurrency: a lost racing writer cannot silently replace a committed version") {
     val table = new LakeTable(tmp(), numBuckets = 2)
     CdcApply.applyBatch(spark, table,
-      Seq(FlatEvent.mk(("r", "a.txt"), 1L, "c")).toDF(), batchId = 0, writeMetrics = false)
+      Seq(FlatEvent.mk(("r", "a.txt"), 1L, "c")).toDF(), batchId = 0)
     val head = table.lastCommit().get
     // a second writer that computed the same next version loses LOUDLY
     // (rename() on Linux would silently clobber the winner's commit)
@@ -1007,9 +1007,9 @@ class LakeTableSpec extends SparkSpec {
     val table = new LakeTable(tmp(), numBuckets = 2)
     val a = FlatEvent.mk(("r", "a.txt"), 1L, "c")
     val b = FlatEvent.mk(("r", "b.txt"), 2L, "c")
-    CdcApply.applyBatch(spark, table, Seq(a).toDF(), batchId = 0, writeMetrics = false)
+    CdcApply.applyBatch(spark, table, Seq(a).toDF(), batchId = 0)
     Thread.sleep(5) // force millisecond-distinct stamps
-    CdcApply.applyBatch(spark, table, Seq(b).toDF(), batchId = 1, writeMetrics = false)
+    CdcApply.applyBatch(spark, table, Seq(b).toDF(), batchId = 1)
     val cs = table.commits()
     assert(cs.forall(_.tsMs > 0L), "every commit carries a wall-clock stamp")
     assert(cs.map(_.tsMs) === cs.map(_.tsMs).sorted, "stamps are monotone")
@@ -1051,7 +1051,7 @@ class LakeTableSpec extends SparkSpec {
     val log = randomLog(41, 400)
     val dir = tmp()
     val table = new LakeTable(dir, numBuckets = 8, mergeOnRead = true)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
     val ci = table.lastCommit().get
     assert(ci.files.nonEmpty)
     ci.files.foreach { f =>
@@ -1077,7 +1077,7 @@ class LakeTableSpec extends SparkSpec {
     val log = (pre :+ FlatEvent.mk(("repo0", "p0.txt"), 601, "t")) ++
       (602 to 650).map(i => FlatEvent.mk((s"repo${i % 4}", s"p${i % 8}.txt"), i.toLong, "c"))
     val table = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = true)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 6, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 6)
     val ci = table.lastCommit().get
     assert(ci.fence.isDefined, "the log's truncate must set a fence")
     val staged = ci.files.map(_.rows).sum
@@ -1096,7 +1096,7 @@ class LakeTableSpec extends SparkSpec {
     val alpha = (1 to 200).map(i => FlatEvent.mk((s"alpha${i % 5}", s"p${i % 8}.txt"), i.toLong, "u"))
     val zeta = (201 to 400).map(i => FlatEvent.mk((s"zeta${i % 5}", s"p${i % 8}.txt"), i.toLong, "u"))
     val table = new LakeTable(tmp(), numBuckets = 4, mergeOnRead = true)
-    CdcPipeline.replay(spark, (alpha ++ zeta).toDF(), table, numBatches = 2, writeMetrics = false)
+    CdcPipeline.replay(spark, (alpha ++ zeta).toDF(), table, numBatches = 2)
     val ci = table.lastCommit().get
 
     val key = ("zeta3", "p5.txt")
@@ -1135,7 +1135,7 @@ class LakeTableSpec extends SparkSpec {
     def repo(i: Int, odd: Int) = f"k${(i % 10) * 2 + odd}%02d"
     val even = (1 to 200).map(i => FlatEvent.mk((repo(i, 0), s"p${i % 8}.txt"), i.toLong, "u"))
     val odd = (201 to 400).map(i => FlatEvent.mk((repo(i, 1), s"p${i % 8}.txt"), i.toLong, "u"))
-    CdcPipeline.replay(spark, (even ++ odd).toDF(), table, numBatches = 2, writeMetrics = false)
+    CdcPipeline.replay(spark, (even ++ odd).toDF(), table, numBatches = 2)
     val ci = table.lastCommit().get
 
     val key = ("k03", "p5.txt")
@@ -1180,7 +1180,7 @@ class LakeTableSpec extends SparkSpec {
     val alpha = (1 to 200).map(i => FlatEvent.mk((s"alpha${i % 5}", s"p${i % 8}.txt"), i.toLong, "u"))
     val zeta = (201 to 400).map(i => FlatEvent.mk((s"zeta${i % 5}", s"p${i % 8}.txt"), i.toLong, "u"))
     val table = new LakeTable(tmp(), numBuckets = 4, mergeOnRead = true)
-    CdcPipeline.replay(spark, (alpha ++ zeta).toDF(), table, numBatches = 2, writeMetrics = false)
+    CdcPipeline.replay(spark, (alpha ++ zeta).toDF(), table, numBatches = 2)
     val oracle = foldOracle(alpha ++ zeta)
 
     val keys = Seq(Seq[Any]("zeta3", "p5.txt"), Seq[Any]("alpha1", "p2.txt"), Seq[Any]("zeta0", "p0.txt"))
@@ -1230,7 +1230,7 @@ class LakeTableSpec extends SparkSpec {
   test("materialized view: incremental refresh equals direct rebuild at every version; zero groups drop") {
     val log = randomLog(37, 600)
     val table = new LakeTable(tmp(), numBuckets = 8)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4)
     val m = length(col("content"))
     def direct(v: Long): Set[(String, Long, Long)] =
       MaterializedView.build(spark, table, v, Seq("repo"), m, "total_chars").get
@@ -1265,7 +1265,7 @@ class LakeTableSpec extends SparkSpec {
   test("materialized view as a LakeTable: refreshEvents through the exactly-once merge converge") {
     val log = randomLog(41, 600)
     val base = new LakeTable(tmp(), numBuckets = 8)
-    CdcPipeline.replay(spark, log.toDF(), base, numBatches = 4, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), base, numBatches = 4)
     // (repo, path)-grain view with measure 1: deletes net groups to zero,
     // so the event stream exercises both the 'u' and 'd' arms
     val viewTable = new LakeTable(tmp(), numBuckets = 4, keyCols = Seq("repo", "path"))
@@ -1274,14 +1274,14 @@ class LakeTableSpec extends SparkSpec {
         lit("u").as("op"), format_string("v%010d", lit(1L)).as("commit"),
         lit(1L).as("lsn"), pmod(hash(col("repo"), col("path")), lit(4)).as("part"),
         lit(1L).as("ts_ms"))
-    CdcApply.applyBatch(spark, viewTable, boot, batchId = 1, writeMetrics = false)
+    CdcApply.applyBatch(spark, viewTable, boot, batchId = 1)
     (2L to 4L).foreach { v =>
       val st = viewTable.snapshot(spark).get.select("repo", "path", "n_rows", "m")
       val ev = MaterializedView.refreshEvents(st, base.changeFeed(spark, v - 1L, v).get,
         Seq("repo", "path"), lit(1), "m", version = v)
-      CdcApply.applyBatch(spark, viewTable, ev, batchId = v, writeMetrics = false)
+      CdcApply.applyBatch(spark, viewTable, ev, batchId = v)
       // redelivery of the same batch is fenced — exactly-once
-      val r = CdcApply.applyBatch(spark, viewTable, ev, batchId = v, writeMetrics = false)
+      val r = CdcApply.applyBatch(spark, viewTable, ev, batchId = v)
       assert(!r.committed)
     }
     val got = viewTable.snapshot(spark).get
@@ -1298,14 +1298,14 @@ class LakeTableSpec extends SparkSpec {
     val log = randomLog(53, 400)
     val table = new LakeTable(tmp(), numBuckets = 4,
       commitStore = Some(new graft.table.InMemoryCommitStore))
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4)
     assert(tableState(table) === foldOracle(log))
     // the metadata genuinely lives in the backend, not on disk
     assert(!Files.isDirectory(java.nio.file.Paths.get(table.root, "_commits")),
       "in-memory backend must not write _commits/ files")
     // exactly-once fence still holds
     val r = CdcApply.applyBatch(spark, table,
-      log.take(100).toDF(), batchId = 0, writeMetrics = false)
+      log.take(100).toDF(), batchId = 0)
     assert(!r.committed && r.reason == "batchId-fenced")
     // history surface through the seam
     assert(table.commitVersions() === (1L to 4L))
@@ -1357,10 +1357,10 @@ class LakeTableSpec extends SparkSpec {
     }
     // wave 1: two base commits folded by ONE maintain (range fold), then
     // wave 2 — catch-up parity at every interleaved point
-    CdcPipeline.replay(spark, log.take(300).toDF(), base, numBatches = 2, writeMetrics = false)
+    CdcPipeline.replay(spark, log.take(300).toDF(), base, numBatches = 2)
     checkPoint("after wave 1 (2-version range fold)")
     CdcPipeline.replay(spark, log.drop(300).toDF(), base,
-      numBatches = 2, startBatchId = 2, writeMetrics = false)
+      numBatches = 2, startBatchId = 2)
     checkPoint("after wave 2")
     // the distinct state holds per-(repo, lang) multiplicities — the
     // distinct count is O(live pairs), never a base rescan
@@ -1371,7 +1371,7 @@ class LakeTableSpec extends SparkSpec {
   test("materialized max/min view: optimistic delta + suspect recount equals direct rebuild") {
     val log = randomLog(43, 600)
     val table = new LakeTable(tmp(), numBuckets = 8)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4)
     val m = length(col("content"))
     for (minInstead <- Seq(false, true)) {
       var view = MaterializedView.buildMax(spark, table, 1L, Seq("repo"), m, "ext", minInstead).get
@@ -1389,9 +1389,9 @@ class LakeTableSpec extends SparkSpec {
     val b1 = Seq(
       FlatEvent("r", "a.txt", f"c${1L}%010d", "s", "X" * 30, "c", 0, 1L, 1L),
       FlatEvent("r", "b.txt", f"c${2L}%010d", "s", "X" * 10, "c", 0, 2L, 2L)).toDF()
-    CdcApply.applyBatch(spark, t2, b1, batchId = 0, writeMetrics = false)
+    CdcApply.applyBatch(spark, t2, b1, batchId = 0)
     val b2 = Seq(FlatEvent("r", "a.txt", f"c${3L}%010d", "s", null, "d", 0, 3L, 3L)).toDF()
-    CdcApply.applyBatch(spark, t2, b2, batchId = 1, writeMetrics = false)
+    CdcApply.applyBatch(spark, t2, b2, batchId = 1)
     val v1 = MaterializedView.buildMax(spark, t2, 1L, Seq("repo"), length(col("content")), "mx").get
     val v2 = MaterializedView.refreshMax(spark, t2, 2L, v1, t2.changeFeed(spark, 1L, 2L).get,
       Seq("repo"), length(col("content")), "mx")
@@ -1410,7 +1410,7 @@ class LakeTableSpec extends SparkSpec {
     val keys = for (r <- 0 until 10; p <- 0 until 40) yield (s"repo$r", f"p$p%02d.txt")
     val log = (1 to 1000).map(i => FlatEvent.mk(keys(rnd.nextInt(keys.size)), i.toLong, "u"))
     val table = new LakeTable(tmp(), numBuckets = 4, mergeOnRead = true, maxFileRows = 20L)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3, writeMetrics = false)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
     val before = tableState(table)
 
     table.compact(spark)

@@ -16,7 +16,7 @@ class LookupJoinSpec extends SparkSpec {
     val t = new LakeTable(Files.createTempDirectory("lookupjoin").toString, numBuckets = buckets)
     val events = (1 to n).map(i =>
       FlatEvent.mk((s"repo${i % 50}", s"f$i.txt"), i.toLong, if (i % 11 == 0) "d" else "c"))
-    CdcPipeline.replay(spark, events.toDF(), t, numBatches = 2, writeMetrics = false)
+    CdcPipeline.replay(spark, events.toDF(), t, numBatches = 2)
     t
   }
 

@@ -150,7 +150,7 @@ class MultiTableSpec extends SparkSpec {
     // CRASH SIMULATION for batch 1: only the kv table's apply lands —
     // the writer dies before heads' apply and before the manifest
     val slice1 = routed.where(col("lsn") > 100 && col("route") === "kv").drop("route")
-    graft.merge.CdcApply.applyBatch(spark, reg("kv"), slice1, batchId = 1, writeMetrics = false)
+    graft.merge.CdcApply.applyBatch(spark, reg("kv"), slice1, batchId = 1)
     // non-atomic (head) read sees the torn state...
     val headCounts = MultiTable.snapshotAll(spark, reg).get
       .groupBy("sink_table").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -181,6 +181,25 @@ class MultiTableSpec extends SparkSpec {
     MultiTable.commitCatalog(reg, 1)
     assert(MultiTable.lastCatalogCommit(reg).get.seq === seqBefore,
       "re-publishing an identical manifest must not append a new one")
+  }
+
+  test("catalog manifest records the versions the batch committed, not later heads") {
+    var reg: Registry = null
+    // b applies after a (parallelism 1, catalog order); its post-processor
+    // lands an out-of-band commit on a between a's apply and the publish
+    val outOfBand: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = df => {
+      val a = reg("a")
+      a.registerSchema(a.lastCommit().get.schema.add("note", "string").json)
+      df
+    }
+    reg = new Registry(Files.createTempDirectory("multi-catalog").toString, Seq(
+      TableDef("a", numBuckets = 2), TableDef("b", numBuckets = 2, postProcessors = Seq(outOfBand))))
+    val evs = (1 to 20).map(i => FlatEvent.mk((s"repo${i % 2}", s"p$i.txt"), i.toLong, "c"))
+    val routed = evs.toDF().withColumn("route", when(col("repo") === "repo0", "a").otherwise("b"))
+    val res = MultiTable.applyBatchAtomic(spark, reg, routed, "route", 0)
+    assert(reg("a").lastCommit().get.version === res("a").version + 1, "out-of-band commit landed")
+    assert(MultiTable.lastCatalogCommit(reg).get.versions ===
+      Map("a" -> res("a").version, "b" -> res("b").version))
   }
 
   test("catalog manifests parse as JSON: fields after versions, quoted names; malformed throws") {

@@ -23,12 +23,12 @@ class SchemaDefaultsSpec extends SparkSpec {
 
   test("added column with DEFAULT reads the default for pre-evolution rows, the value for new ones") {
     val t = mkTable()
-    CdcApply.applyBatch(spark, t, batch(1 to 16), 0L, writeMetrics = false)
+    CdcApply.applyBatch(spark, t, batch(1 to 16), 0L)
     // evolve: add n_chars DEFAULT -1 and a string column DEFAULT 'unknown'
     val evolved = batch(17 to 20, "u").select(col("*"),
       SchemaEvolution.withDefault(length(col("content")).cast("long"), "n_chars", "-1"),
       SchemaEvolution.withDefault(lit("fresh"), "origin", "'unknown'"))
-    CdcApply.applyBatch(spark, t, evolved, 1L, writeMetrics = false)
+    CdcApply.applyBatch(spark, t, evolved, 1L)
 
     val rows = t.snapshot(spark).get
       .select(col("lsn"), col("n_chars"), col("origin")).collect()
@@ -54,9 +54,9 @@ class SchemaDefaultsSpec extends SparkSpec {
 
   test("change feed fills defaults for pre-evolution versions") {
     val t = mkTable()
-    CdcApply.applyBatch(spark, t, batch(1 to 8), 0L, writeMetrics = false)
+    CdcApply.applyBatch(spark, t, batch(1 to 8), 0L)
     CdcApply.applyBatch(spark, t, batch(9 to 10, "u").select(col("*"),
-      SchemaEvolution.withDefault(lit(7L), "rank", "-1")), 1L, writeMetrics = false)
+      SchemaEvolution.withDefault(lit(7L), "rank", "-1")), 1L)
     val feed = t.changeFeed(spark, 0L, 2L).get
     // version-1 rows (written without the column) read -1; version-2
     // postimages read the real value
@@ -96,9 +96,9 @@ class SchemaDefaultsSpec extends SparkSpec {
 
   test("undeclared defaults keep null-fill semantics (q13 compatibility)") {
     val t = mkTable()
-    CdcApply.applyBatch(spark, t, batch(1 to 8), 0L, writeMetrics = false)
+    CdcApply.applyBatch(spark, t, batch(1 to 8), 0L)
     CdcApply.applyBatch(spark, t,
-      batch(9 to 10, "u").withColumn("rank", lit(7L)), 1L, writeMetrics = false)
+      batch(9 to 10, "u").withColumn("rank", lit(7L)), 1L)
     val old = t.snapshot(spark).get.where(col("lsn") < 9).select("rank").distinct().collect()
     assert(old.length == 1 && old.head.isNullAt(0), "no default declared → null-fill")
   }

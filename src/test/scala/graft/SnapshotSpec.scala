@@ -50,7 +50,7 @@ class SnapshotSpec extends SparkSpec {
     assert(state1.contains(("r2", "z")))
 
     // initial with an EXISTING offset: stream only
-    graft.merge.CdcApply.applyBatch(spark, t1, log1, batchId = 0, writeMetrics = false)
+    graft.merge.CdcApply.applyBatch(spark, t1, log1, batchId = 0)
     val log1b = Snapshotter.bootstrapLog(spark, t1, base, stream, "initial", snapshotLsn = 5L)
     assert(log1b.where(col("op") === "r").count() === 0)
     assert(log1b.count() === 2)
@@ -66,7 +66,7 @@ class SnapshotSpec extends SparkSpec {
     val ci3 = t3.lastCommit().get
     assert(ci3.files.isEmpty && ci3.schemas.nonEmpty, "schema registered without data")
     // the schema-only commit must not fence the first real batch
-    val res3 = graft.merge.CdcApply.applyBatch(spark, t3, log3, batchId = 0, writeMetrics = false)
+    val res3 = graft.merge.CdcApply.applyBatch(spark, t3, log3, batchId = 0)
     assert(res3.committed)
 
     // never: stream only, no schema commit

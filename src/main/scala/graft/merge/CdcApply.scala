@@ -45,9 +45,11 @@ import graft.table.{BatchMetrics, CommitInfo, LakeTable, LogPos, PartMetrics, Sc
   *    otherwise one more `repartition(numBuckets, key)` of the winners.
   *    Each task then writes exactly its own bucket file. Copy-on-write
   *    tables full-outer-join the winners against the STORAGE-PARTITIONED
-  *    state read (bucketed scan, zero state-side exchange —
-  *    `LakeTable.bucketedState` + `Lww.mergeCoPartitioned`), or — when
-  *    the batch rivals the state — reduce state ∪ batch in one aggregate;
+  *    state read (a bucketed scan built from the manifest's file list, zero
+  *    state-side exchange — `LakeTable.bucketedState` +
+  *    `Lww.mergeCoPartitioned`), or — when the batch rivals the state, or
+  *    the touched files cannot be read that way — reduce state ∪ batch in
+  *    one aggregate;
   *    merge-on-read tables skip the state scan entirely and append the
   *    winner files (readers resolve per bucket).
   *  - Metrics ride in the commit ([[graft.table.BatchMetrics]]): Job 1's
@@ -258,10 +260,11 @@ object CdcApply {
           }
         } else {
           // Union+reduce: chosen when the batch rivals the state (see
-          // preferJoin above), or as the fallback when an old file schema
-          // needs a non-native widen (e.g. →String) this batch or the
-          // bucketed registration's hardlinks fail — shuffles state once;
-          // the rewrite puts those buckets back on the join path.
+          // preferJoin above), or as the fallback when bucketedState
+          // declines the touched files — an old file schema needs a
+          // non-native widen (e.g. →String), or a file predates bucket
+          // naming. Shuffles state once; the rewrite puts those buckets
+          // back on the join path.
           val tagged = alignedFenced.withColumn("__src", lit(1))
           val st = last.flatMap(ci => table.snapshotRaw(spark, ci, Some(touched))).get
           val stAligned = SchemaEvolution.align(st, evolved).withColumn("__src", lit(0))

@@ -112,8 +112,8 @@ object MultiTable {
     * pool. Per-table applies are independent by construction (one commit
     * log, offset fence, and schema history per table — the per-topic
     * isolation of the reference), and the shared pieces are thread-safe:
-    * the serial-listing conf flip is lock-guarded, the bucketed-state
-    * catalog name is per table root, and Spark schedules jobs from many
+    * the serial-listing conf flip is lock-guarded, the bucketed state
+    * read touches no shared catalog, and Spark schedules jobs from many
     * threads natively. This matters at fleet scale: a Debezium connector
     * captures HUNDREDS of tables, most slices are small, and a serial
     * loop pays T × (driver latency + job launch) while the cluster idles

@@ -113,7 +113,8 @@ object Lww {
 
   /** Merge per-key state against per-key batch winners when BOTH sides are
     * already hash-clustered on the key with the same partition count —
-    * state from a bucketed scan ([[graft.table.LakeTable.bucketedState]]),
+    * state from the manifest-built bucketed scan
+    * ([[graft.table.LakeTable.bucketedState]]),
     * batch from [[reduceBucketed]]. Catalyst then plans the full-outer
     * join with ZERO additional exchanges (storage-partitioned-join shape):
     * the only shuffle in the whole merge is the batch side's reduce.

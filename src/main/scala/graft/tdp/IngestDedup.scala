@@ -147,14 +147,11 @@ object IngestDedup {
             "left_semi")
       }
     }
-    // localCheckpoint, not persist: the registration below re-points the
-    // index's bucketed catalog table (DROP/CREATE inside the merge), and
-    // Spark's CacheManager cascade-invalidates any cached plan that
-    // references it — a persisted `admitted` silently became a FULL
-    // recompute against a superseded registration on the caller's first
-    // action (58 s re-run of the whole admit pipeline in the q84 profile,
-    // reading link dirs the next gc pass deletes). Checkpointing truncates
-    // the lineage, so the returned frame can never recompute.
+    // localCheckpoint, not persist: a persisted `admitted` can still be
+    // evicted and silently recomputed on the caller's first action — a
+    // re-run of the whole admit pipeline (58 s in the q84 profile).
+    // Checkpointing truncates the lineage, so the returned frame can never
+    // recompute.
     val admitted = unseen(spark, index, batch, idCol, textCol).localCheckpoint()
     graft.merge.CdcApply.applyBatch(spark, index, digestEvents(admitted, idCol, textCol),
       batchId, fenceByWatermark = false)
@@ -265,11 +262,8 @@ object IngestDedup {
     * MATERIALIZES (eager localCheckpoint) before returning: the band-keyed
     * batch feeds the clustering self-join, the collision check and the
     * result, and leaving it lazy recomputes the shingling/minhash pass
-    * once per consumer. A checkpoint, not a persist, pins the result to
-    * the index's CURRENT commit unconditionally: a persisted frame is
-    * cascade-UNCACHED when a later registration re-points the index's
-    * bucketed catalog table, and the silent recompute would observe the
-    * batch's own keys — wrong results, not just wasted work.
+    * once per consumer. A checkpoint, not a persist: a persisted frame can
+    * be evicted, and its silent recompute re-runs that pass.
     */
   def unseenNear(
       spark: SparkSession,
@@ -291,9 +285,8 @@ object IngestDedup {
   /** The UN-materialized [[unseenNear]] plan (no persist, no checkpoint) —
     * for plan inspection: the admission join's state side must be the
     * index's bucketed scan. Checkpointing truncates lineage, so the shape
-    * is only visible here. NOT safe to consume after a registration and
-    * recomputes the shingling pass per action; callers wanting rows use
-    * [[unseenNear]].
+    * is only visible here. It recomputes the shingling pass per action;
+    * callers wanting rows use [[unseenNear]].
     */
   private[graft] def unseenNearLazy(
       spark: SparkSession,
@@ -348,10 +341,9 @@ object IngestDedup {
             winners.join(owned, Seq(idCol), "left_semi")
         }
       }
-      // localCheckpoint, not persist — same invalidation hazard as
-      // [[ingest]]: the merge's bucketed-registration DROP/CREATE would
-      // cascade-uncache a persisted result and the caller's first action
-      // would re-run the whole admit pipeline (profiled: 58 s at sf0.1).
+      // localCheckpoint, not persist — same reason as [[ingest]]: an
+      // evicted result would re-run the whole admit pipeline on the
+      // caller's first action (profiled: 58 s at sf0.1).
       val admitted = admitAgainstIndex(spark, index, winners, idCol).localCheckpoint()
       graft.merge.CdcApply.applyBatch(spark, index, bandEvents(admitted, idCol),
         batchId, fenceByWatermark = false)

@@ -314,60 +314,122 @@ class LakeTableSpec extends SparkSpec {
     assert(out.length === (stateRows + (("repo0", "p0.txt"))).size, "full-outer key coverage")
   }
 
-  test("bucketedState: hardlink failure (cross-device _bucketed) copies NOTHING and merges still converge") {
+  /** A wide-key log: 600 creates over 600 keys, then 60 updates/deletes —
+    * the state dwarfs the tail batch, so a copy-on-write merge of the tail
+    * PREFERS the storage-partitioned join and asks for the bucketed state.
+    */
+  private val wideHead = (1 to 600).map(i => FlatEvent.mk((s"r${i % 40}", s"p$i.txt"), i.toLong, "c"))
+  private val wideTail = (601 to 660).map(i => FlatEvent.mk((s"r${i % 40}", s"p${i - 600}.txt"), i.toLong,
+    if (i % 5 == 0) "d" else "u"))
+
+  /** Bucket-named (`…_00003.c000.snappy.parquet`) → the writer's own name
+    * (`…-c000.snappy.parquet`), as tables staged before bucket naming hold
+    * their files.
+    */
+  private val bucketSuffix = "_\\d{5}\\.(c\\d+\\.)".r
+  private def suffixed(path: String): Boolean =
+    bucketSuffix.findFirstIn(java.nio.file.Paths.get(path).getFileName.toString).isDefined
+
+  /** Rewrite `root` into the pre-bucket-naming format: every data file
+    * renamed back to its unsuffixed name, every commit manifest edited to
+    * match. Returns a fresh handle (no memoized manifests).
+    */
+  private def toUnsuffixedFormat(root: String, mergeOnRead: Boolean): LakeTable = {
     import java.nio.file.Paths
     import scala.jdk.CollectionConverters._
-    val shm = Paths.get("/dev/shm")
-    assume(Files.isWritable(shm), "no /dev/shm on this host")
-    val root = tmp()
-    assume(Files.getFileStore(Paths.get(root)) != Files.getFileStore(shm),
-      "tmp and /dev/shm share a device — cannot force EXDEV")
-    // Wide key space: the state (600 rows) must dwarf the follow-up batch
-    // (60 rows) so the merge PREFERS the storage-partitioned join and
-    // actually attempts bucketedState (randomLog's 32 keys would collapse
-    // the state below the preferJoin threshold).
-    val head = (1 to 600).map(i => FlatEvent.mk((s"r${i % 40}", s"p$i.txt"), i.toLong, "c"))
-    val tail = (601 to 660).map(i => FlatEvent.mk((s"r${i % 40}", s"p${i - 600}.txt"), i.toLong,
-      if (i % 5 == 0) "d" else "u"))
-    val log = head ++ tail
-    val table = new LakeTable(root, numBuckets = 8)
-    CdcPipeline.replay(spark, head.toDF(), table, numBatches = 2)
-    // Cross-device _bucketed: every Files.createLink from here on throws
-    // EXDEV — the object-store / cross-device scenario of round-2 VERDICT
-    // "What's wrong" #1.
-    val bucketedDir = Paths.get(root, "_bucketed")
-    if (Files.exists(bucketedDir))
-      Files.walk(bucketedDir).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    val target = Files.createTempDirectory(shm, "graft-xdev")
-    Files.createSymbolicLink(bucketedDir, target)
-    val ci = table.lastCommit().get
-    assert(table.bucketedState(spark, ci, None, ci.schema).isEmpty,
-      "link failure must SKIP the registration, not succeed via a copy")
-    assert(!Files.walk(target).iterator().asScala.exists(_.toString.endsWith(".parquet")),
-      "no data bytes may be copied on link failure")
-    // A small incremental batch (state ≫ batch ⇒ the merge PREFERS the
-    // storage-partitioned join, attempts bucketedState, gets None) must
-    // fall back to the union+reduce path and still converge.
-    val r = CdcApply.applyBatch(spark, table, tail.toDF(), batchId = 2)
-    assert(r.committed)
-    assert(tableState(table) === foldOracle(log))
-    assert(!Files.walk(target).iterator().asScala.exists(_.toString.endsWith(".parquet")))
-    Files.walk(target).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    val renames = Files.walk(Paths.get(root, "data")).iterator().asScala.toSeq
+      .filter(p => p.getFileName.toString.endsWith(".parquet") && suffixed(p.toString))
+      .map { p =>
+        val old = bucketSuffix.replaceFirstIn(p.getFileName.toString, "-$1")
+        Files.move(p, p.resolveSibling(old))
+        p.getFileName.toString -> old
+      }
+    assert(renames.nonEmpty)
+    Files.list(Paths.get(root, "_commits")).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".json")).foreach { c =>
+        Files.writeString(c, renames.foldLeft(Files.readString(c)) { case (j, (n, o)) => j.replace(n, o) })
+      }
+    new LakeTable(root, numBuckets = 8, mergeOnRead = mergeOnRead)
   }
 
-  test("bucketed-state registration is reused for repeated reads of one commit") {
-    val log = randomLog(5, 200)
+  test("pre-bucket-naming table: reads and merges take the aligned path and converge to suffixed files") {
+    val log = wideHead ++ wideTail
+    val seeded = new LakeTable(tmp(), numBuckets = 8)
+    CdcPipeline.replay(spark, wideHead.toDF(), seeded, numBatches = 2)
+    assert(seeded.lastCommit().get.files.forall(f => suffixed(f.path)), "stage() names files for their bucket")
+    val table = toUnsuffixedFormat(seeded.root, mergeOnRead = false)
+    val before = table.lastCommit().get
+    assert(before.files.forall(f => !suffixed(f.path)))
+    assert(table.bucketedState(spark, before, None, before.schema).isEmpty,
+      "unsuffixed files must not be read as bucketed")
+    assert(tableState(table) === foldOracle(wideHead))
+    // state ≫ batch: the merge prefers the join, is refused the bucketed
+    // state, and takes the union+reduce path
+    assert(CdcApply.applyBatch(spark, table, wideTail.toDF(), batchId = 2).committed)
+    assert(tableState(table) === foldOracle(log))
+    val after = table.lastCommit().get
+    val touched = after.files.filterNot(before.files.contains).map(_.bucket).toSet
+    assert(touched.nonEmpty)
+    after.files.filter(f => touched.contains(f.bucket)).foreach(f =>
+      assert(suffixed(f.path), s"rewritten bucket ${f.bucket} must carry the suffix: ${f.path}"))
+    assert(table.bucketedState(spark, after, Some(touched), after.schema).isDefined,
+      "rewritten buckets are back on the bucketed read")
+
+    // merge-on-read: the stack mixes old and new names until compaction
+    val morSeed = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = true)
+    CdcPipeline.replay(spark, wideHead.toDF(), morSeed, numBatches = 2)
+    val mor = toUnsuffixedFormat(morSeed.root, mergeOnRead = true)
+    assert(tableState(mor) === foldOracle(wideHead), "MoR resolved read of unsuffixed stacks")
+    assert(CdcApply.applyBatch(spark, mor, wideTail.toDF(), batchId = 2).committed)
+    assert(tableState(mor) === foldOracle(log))
+    val mixed = mor.lastCommit().get
+    assert(mor.bucketedState(spark, mixed, None, mixed.schema).isEmpty)
+    val compacted = mor.compact(spark).get
+    assert(compacted.files.forall(f => suffixed(f.path)))
+    assert(mor.bucketedState(spark, compacted, None, compacted.schema).isDefined)
+    assert(tableState(mor) === foldOracle(log))
+  }
+
+  test("bucketed state registers nothing: no catalog table, no link dir") {
+    val log = wideHead ++ wideTail
+    for (mor <- Seq(false, true)) {
+      val table = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = mor)
+      CdcPipeline.replay(spark, wideHead.toDF(), table, numBatches = 2)
+      CdcApply.applyBatch(spark, table, wideTail.toDF(), batchId = 2)
+      assert(tableState(table) === foldOracle(log))
+      val stateTables = spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_state_"))
+      assert(stateTables.isEmpty, s"mergeOnRead=$mor: catalog holds ${stateTables.toSeq}")
+      assert(!Files.exists(java.nio.file.Paths.get(table.root, "_bucketed")), s"mergeOnRead=$mor")
+    }
+  }
+
+  test("MoR time travel and lookups read through the bucketed scan: zero exchanges") {
+    val log = randomLog(13, 200)
+    val table = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = true)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
+    def shuffleFree(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("Bucketed: true"), s"$what must use the bucketed scan:\n$plan")
+      assert(!plan.contains("Exchange"), s"$what: the read-side LWW reduce must not shuffle:\n$plan")
+    }
+    shuffleFree(table.snapshotAt(spark, 2L).get, "snapshotAt(older version)")
+    val keys = log.take(3).map(e => Seq[Any](e.repo, e.path))
+    shuffleFree(table.lookupMany(spark, keys).get, "lookupMany")
+  }
+
+  test("footer metadata of a torn or missing staged file fails loudly, naming the file") {
     val table = new LakeTable(tmp(), numBuckets = 4)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 2)
-    val ci = table.lastCommit().get
-    val before = table.registrations
-    val rows1 = table.bucketedState(spark, ci, None, ci.schema).get.count()
-    val rows2 = table.bucketedState(spark, ci, None, ci.schema).get.count()
-    assert(rows1 === rows2)
-    assert(table.registrations === before + 1, "second read of the same version must reuse the entry")
-    // a different bucket selection or a new commit invalidates the cache
-    table.bucketedState(spark, ci, Some(Set(0, 1)), ci.schema).foreach(_.count())
-    assert(table.registrations === before + 2)
+    CdcApply.applyBatch(spark, table, Seq(FlatEvent.mk(("r", "a"), 1, "c")).toDF(), batchId = 0)
+    val f = table.lastCommit().get.files.maxBy(_.rows)
+    val p = java.nio.file.Paths.get(table.root, f.path)
+    assert(f.rows === 1L && table.fileMeta(p, Set("repo"))._1 === 1L)
+    val bytes = Files.readAllBytes(p)
+    Files.write(p, bytes.take(bytes.length / 2))
+    val torn = intercept[IllegalStateException](table.fileMeta(p, Set("repo")))
+    assert(torn.getMessage.contains(p.toString))
+    Files.delete(p)
+    val missing = intercept[IllegalStateException](table.fileMeta(p, Set("repo")))
+    assert(missing.getMessage.contains(p.toString))
   }
 
   test("merge-on-read: append-only apply converges (incl. truncate), fences hold, compaction collapses") {

@@ -94,6 +94,23 @@ class SchemaDefaultsSpec extends SparkSpec {
     SchemaEvolution.withDefault(lit(1L), "t", "TIMESTAMP '2024-01-01 00:00:00'")
   }
 
+  test("bucketed state reads fill defaults: merge-on-read stacks and the copy-on-write join") {
+    def wide(lsns: Range, op: String = "c") =
+      lsns.map(i => FlatEvent.mk((s"repo${i % 4}", s"w$i.txt"), i.toLong, op)).toDF()
+    for (mor <- Seq(true, false)) {
+      val t = new LakeTable(Files.createTempDirectory("schema-default").toString,
+        numBuckets = 4, mergeOnRead = mor)
+      CdcApply.applyBatch(spark, t, wide(1 to 64), 0L)
+      // one event against 64 keys of state: a copy-on-write merge prefers
+      // the storage-partitioned join over the bucketed state read
+      CdcApply.applyBatch(spark, t, wide(65 to 65, "u").select(col("*"),
+        SchemaEvolution.withDefault(lit(5L), "rank", "-1")), 1L)
+      val old = t.snapshot(spark).get.where(col("lsn") < 65).select("rank").distinct().collect()
+        .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+      assert(old == Seq(Some(-1L)), s"mergeOnRead=$mor: pre-evolution rows must read the default")
+    }
+  }
+
   test("undeclared defaults keep null-fill semantics (q13 compatibility)") {
     val t = mkTable()
     CdcApply.applyBatch(spark, t, batch(1 to 8), 0L)

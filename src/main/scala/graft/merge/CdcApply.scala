@@ -48,7 +48,8 @@ import graft.table.{BatchMetrics, CommitInfo, LakeTable, LogPos, PartMetrics, Sc
   *    state read (a bucketed scan built from the manifest's file list, zero
   *    state-side exchange — `LakeTable.bucketedState` +
   *    `Lww.mergeCoPartitioned`), or — when the batch rivals the state, or
-  *    the touched files cannot be read that way — reduce state ∪ batch in
+  *    a touched file predates bucket naming or its key column type (a
+  *    key widen, which reconcile now rejects) — reduce state ∪ batch in
   *    one aggregate;
   *    merge-on-read tables skip the state scan entirely and append the
   *    winner files (readers resolve per bucket).
@@ -180,28 +181,29 @@ object CdcApply {
             applied.getOrElse(part, 0L), Option(r.getAs[java.lang.Long]("maxTs")).map(_.toLong))
         }.toMap))
 
-      // Schema reconciliation at the batch boundary (flush-on-schema-change,
-      // ReducedRecordBuffer.java:57-62 → our microbatch boundary).
-      val tableSchema = last.map(_.schema)
-      val evolved = tableSchema.fold(cached.schema)(t => SchemaEvolution.reconcile(t, cached.schema))
-      val evolvedJson = evolved.json
-      val oldSchemas = last.map(_.schemas).getOrElse(Nil)
-      val (schemas, schemaIdx) = oldSchemas.indexOf(evolvedJson) match {
-        case -1 => (oldSchemas :+ evolvedJson, oldSchemas.size)
-        case i  => (oldSchemas, i)
-      }
-
       val version = last.map(_.version).getOrElse(0L) + 1
       if (freshCount == 0 && batchFence.isEmpty) {
         // Metadata-only commit: advance the batchId + watermark fences.
         // The TABLE schema does not evolve — no data arrived, so a wider
         // batch schema (e.g. a multi-table fan-out slice that routed zero
-        // rows here) must not leak into this table's history; the
-        // reference evolves on records, not on batch shape.
+        // rows here) must not leak into this table's history, nor be
+        // checked against it; the reference evolves on records, not on
+        // batch shape.
         table.commit(CommitInfo(version, commitBatchId, newWm, newFence,
-          last.map(_.schemas).getOrElse(schemas), last.map(_.schemaIdx).getOrElse(schemaIdx),
+          last.map(_.schemas).getOrElse(Seq(cached.schema.json)), last.map(_.schemaIdx).getOrElse(0),
           last.map(_.files).getOrElse(Nil)), prev = last, metrics = summary(Map.empty))
         return BatchResult(committed = true, version, batchId, eventsIn, 0, 0, "metadata-only")
+      }
+
+      // Schema reconciliation at the batch boundary (flush-on-schema-change,
+      // ReducedRecordBuffer.java:57-62 → our microbatch boundary).
+      val evolved = last.fold(cached.schema)(ci =>
+        SchemaEvolution.reconcile(ci.schema, cached.schema, table.keyCols))
+      val evolvedJson = evolved.json
+      val oldSchemas = last.map(_.schemas).getOrElse(Nil)
+      val (schemas, schemaIdx) = oldSchemas.indexOf(evolvedJson) match {
+        case -1 => (oldSchemas :+ evolvedJson, oldSchemas.size)
+        case i  => (oldSchemas, i)
       }
 
       // Touched buckets (truncate touches every bucket — the fence must be
@@ -261,10 +263,10 @@ object CdcApply {
         } else {
           // Union+reduce: chosen when the batch rivals the state (see
           // preferJoin above), or as the fallback when bucketedState
-          // declines the touched files — an old file schema needs a
-          // non-native widen (e.g. →String), or a file predates bucket
-          // naming. Shuffles state once; the rewrite puts those buckets
-          // back on the join path.
+          // declines the touched files — a file predates bucket naming,
+          // or a key column was widened before such widens were rejected.
+          // Shuffles state once; the rewrite names the touched buckets'
+          // files, putting them back on the join path.
           val tagged = alignedFenced.withColumn("__src", lit(1))
           val st = last.flatMap(ci => table.snapshotRaw(spark, ci, Some(touched))).get
           val stAligned = SchemaEvolution.align(st, evolved).withColumn("__src", lit(0))

@@ -112,9 +112,9 @@ object MultiTable {
     * pool. Per-table applies are independent by construction (one commit
     * log, offset fence, and schema history per table — the per-topic
     * isolation of the reference), and the shared pieces are thread-safe:
-    * the serial-listing conf flip is lock-guarded, the bucketed state
-    * read touches no shared catalog, and Spark schedules jobs from many
-    * threads natively. This matters at fleet scale: a Debezium connector
+    * state reads are built from each table's manifest and touch no shared
+    * catalog or session conf, and Spark schedules jobs from many threads
+    * natively. This matters at fleet scale: a Debezium connector
     * captures HUNDREDS of tables, most slices are small, and a serial
     * loop pays T × (driver latency + job launch) while the cluster idles
     * between small jobs — concurrent applies keep the executor slots full
@@ -124,14 +124,7 @@ object MultiTable {
     * at ~170k rows/table-batch, where local mode's shared cores make
     * concurrency pure scheduler contention — keep parallelism = 1 for a
     * FEW LARGE tables on a single machine; a cluster's idle executor
-    * slots restore the win there. Note also (round-3 ADVICE) that every
-    * per-table state read serializes briefly on the JVM-global
-    * serial-listing conf flip (`LakeTable.withSerialListing`, held for
-    * the wrapped read), so the realized speedup sits below the thread
-    * count even in the driver-latency-bound regime; the flip guards a
-    * session-global conf and cannot be scoped per-read without cloning
-    * a session per table (not worth a catalog+listener clone per
-    * microbatch). Failure semantics:
+    * slots restore the win there. Failure semantics:
     * every table still attempts its apply (no half-skipped catalog), then
     * the first failure in catalog order is rethrown.
     */

@@ -4,7 +4,9 @@ import java.nio.file.{Files, Paths, Path}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -51,7 +53,8 @@ final case class CommitInfo(
     numBuckets: Int = 0,               // bucket layout at this commit (0 = pre-layout-tracking commit)
     tsMs: Long = 0L,                   // wall-clock commit stamp (0 = pre-stamp commit); set by commit()
     metrics: Option[BatchMetrics] = None) { // the applying batch's metrics; set by commit()
-  def schema: StructType = DataType.fromJson(schemas(schemaIdx)).asInstanceOf[StructType]
+  def schema: StructType = schemaAt(schemaIdx)
+  def schemaAt(idx: Int): StructType = DataType.fromJson(schemas(idx)).asInstanceOf[StructType]
 }
 
 /** Transactional bucketed Parquet table — the in-repo Iceberg surrogate
@@ -265,7 +268,7 @@ final class LakeTable(
         commit(CommitInfo(version = 1L, batchId = -1L, watermark = Map.empty,
           fence = None, schemas = Seq(incoming.json), schemaIdx = 0, files = Nil))
       case Some(ci) =>
-        val evolved = SchemaEvolution.reconcile(ci.schema, incoming)
+        val evolved = SchemaEvolution.reconcile(ci.schema, incoming, keyCols)
         if (evolved != ci.schema) {
           val json = evolved.json
           val (schemas, idx) = ci.schemas.indexOf(json) match {
@@ -356,64 +359,44 @@ final class LakeTable(
     ci
   }
 
-  /** Run `f` with Spark's parallel-listing threshold raised so a
-    * known-file-list read is listed on the driver (serial getFileStatus
-    * calls) instead of spawning a distributed listing job. Restores the
-    * session's previous setting afterwards.
-    *
-    * The set/restore pair is serialized under a global lock: two
-    * overlapping flips on one session would otherwise restore each
-    * other's raised value and permanently leave the session listing
-    * serially (the threshold is session conf; there is no per-read
-    * option for it). Unrelated queries planned inside the (small) window
-    * still see the raised threshold — acceptable: it only changes WHERE
-    * a listing runs, never its result.
-    */
-  private def withSerialListing[T](spark: SparkSession)(f: => T): T =
-    LakeTable.serialListingLock.synchronized {
-      val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "1000000")
-      try f
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
-
   /** Raw state incl. tombstone rows (op='d' retained so late out-of-order
     * events below a delete's position cannot resurrect the row).
     */
   def snapshotRaw(spark: SparkSession, buckets: Option[Set[Int]] = None): Option[DataFrame] =
     lastCommit().flatMap(ci => snapshotRaw(spark, ci, buckets))
 
-  def snapshotRaw(spark: SparkSession, ci: CommitInfo, buckets: Option[Set[Int]]): Option[DataFrame] = {
-    val wanted = ci.files.filter(f => buckets.forall(_.contains(f.bucket)))
-    if (wanted.isEmpty) return None
-    val target = ci.schema
-    val bydSchema = wanted.groupBy(_.schemaIdx)
-    val parts = bydSchema.toSeq.sortBy(_._1).map { case (idx, fs) =>
-      val written = DataType.fromJson(ci.schemas(idx)).asInstanceOf[StructType]
-      // The manifest already names the exact files — listing them is a
-      // getFileStatus per known path, not discovery. Above the default
-      // parallel-listing threshold (32 paths) Spark would otherwise launch
-      // a DISTRIBUTED LISTING JOB per state read: ~0.3 s of pure
-      // scheduling per microbatch here (profiled), and on an object store
-      // a whole cluster job to stat files whose names we hold. Force
-      // driver-side listing for this read.
-      val df = withSerialListing(spark) {
-        spark.read.schema(written).parquet(fs.map(f => s"$root/${f.path}"): _*)
-      }
-      // Align to the current table schema: default- or null-fill added
-      // columns (SchemaEvolution.missingFill — a declared DEFAULT reads
-      // back for pre-evolution files), upcast widened ones (Avro-style
-      // promotion; Parquet mergeSchema alone does not widen types —
-      // SURVEY.md §7.3).
-      val cols = target.fields.map { f =>
-        if (written.fieldNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else SchemaEvolution.missingFill(f).as(f.name)
-      }
-      df.select(cols.toIndexedSeq: _*)
+  /** The commit's files for `buckets`, aligned to the commit's schema
+    * (see [[scan]]); an unbucketed scan, for any layout and file naming.
+    */
+  def snapshotRaw(spark: SparkSession, ci: CommitInfo, buckets: Option[Set[Int]]): Option[DataFrame] =
+    scan(spark, ci, filesOf(ci, buckets), ci.schema, None)
+
+  private def filesOf(ci: CommitInfo, buckets: Option[Set[Int]]): Seq[FileEntry] =
+    ci.files.filter(f => buckets.forall(_.contains(f.bucket)))
+
+  /** The one state read: `files` grouped by the schema they were written
+    * with, each group scanned at that schema straight from its manifest
+    * entries (one driver stat per file, no listing) and aligned to
+    * `target` — default- or null-filled added columns, upcast
+    * widened ones ([[SchemaEvolution.align]]; Parquet mergeSchema alone
+    * does not widen types — SURVEY.md §7.3) — then the groups unioned.
+    * With a `bucketSpec` every group's scan reports the bucket layout, and
+    * the union keeps it (`spark.sql.unionOutputPartitioning`): the align
+    * projection leaves the key columns as they are. Each call builds its
+    * own relations, so a lazy frame keeps reading exactly the files it
+    * was built from.
+    */
+  private def scan(
+      spark: SparkSession,
+      ci: CommitInfo,
+      files: Seq[FileEntry],
+      target: StructType,
+      bucketSpec: Option[BucketSpec]): Option[DataFrame] = {
+    if (files.isEmpty) return None
+    val fs = new HPath(root).getFileSystem(LakeTable.hadoopConf)
+    val parts = files.groupBy(_.schemaIdx).toSeq.sortBy(_._1).map { case (idx, group) =>
+      val statuses = group.map(f => fs.getFileStatus(new HPath(s"$root/${f.path}")))
+      SchemaEvolution.align(GraftSqlShim.parquetScan(spark, statuses, ci.schemaAt(idx), bucketSpec), target)
     }
     Some(parts.reduce(_.unionAll(_)))
   }
@@ -525,16 +508,9 @@ final class LakeTable(
 
     def empty: DataFrame =
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), target)
-    def align(df: DataFrame): DataFrame = {
-      val have = df.schema.fieldNames.toSet
-      df.select(target.fields.toIndexedSeq.map { f =>
-        if (have.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else SchemaEvolution.missingFill(f).as(f.name)
-      }: _*)
-    }
     def live(ci: CommitInfo, buckets: Set[Int]): DataFrame =
       resolved(spark, ci, Some(buckets))
-        .map(df => align(df.where(col("op") =!= Envelope.OpDelete)))
+        .map(df => SchemaEvolution.align(df.where(col("op") =!= Envelope.OpDelete), target))
         .getOrElse(empty)
     def bucketFiles(ci: CommitInfo): Map[Int, Set[String]] =
       ci.files.groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.path).toSet }
@@ -574,7 +550,11 @@ final class LakeTable(
     * serving-path read; at 100 TB with buckets of a few GB this is one
     * file-stack scan, not a table scan). The bucket is computed driver-side
     * with the same Murmur3 pmod as [[bucketCol]]; within the bucket a
-    * key-equality filter (pushed to parquet) selects the row.
+    * key-equality filter selects the row. On a copy-on-write table the
+    * filter is pushed to parquet; on a merge-on-read table it applies
+    * after the per-bucket LWW reduce, so every row of each admitted file
+    * is read (a keyed reduce that pushed it below the reduce was
+    * measured to read more bytes per lookup, not fewer).
     *
     * Option contract: None = PROVABLY absent without any scan — the table
     * is empty, or every file in the key's bucket was excluded by its zone
@@ -595,11 +575,11 @@ final class LakeTable(
     * the keys' admissible files — O(matching files), not O(buckets
     * touched × stack depth) — and buckets no key maps to are never read.
     * The row filter is the OR of per-key conjunctions (pushed to
-    * parquet). Same Option contract as [[lookup]]: None = every requested
-    * key is provably absent, with zero scan. For key sets beyond the
-    * cap, join the table snapshot against a keys DataFrame instead — a
-    * driver-side OR of thousands of conjunctions is a plan, not a
-    * filter.
+    * parquet on copy-on-write tables only, see [[lookup]]). Same Option
+    * contract as [[lookup]]: None = every requested key is provably
+    * absent, with zero scan. For key sets beyond the cap, join the table
+    * snapshot against a keys DataFrame instead — a driver-side OR of
+    * thousands of conjunctions is a plan, not a filter.
     */
   def lookupMany(spark: SparkSession, keys: Seq[Seq[Any]]): Option[DataFrame] = {
     require(keys.nonEmpty, "lookupMany needs at least one key")
@@ -747,7 +727,7 @@ final class LakeTable(
       val loaded: Map[String, Seq[ChunkEvidence]] =
         try {
           val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(Paths.get(root, rel).toUri), LakeTable.hadoopConf)
+            new HPath(Paths.get(root, rel).toUri), LakeTable.hadoopConf)
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
           try {
             val fileSchema = r.getFooter.getFileMetaData.getSchema
@@ -837,52 +817,31 @@ final class LakeTable(
   // Storage-partitioned state read (round-2 fix for VERDICT "What's wrong"
   // #3): expose the on-disk hash-bucket layout to Catalyst so the merge
   // shuffles ONLY the batch side. Spark-first mechanism: a V1 parquet
-  // relation over the commit's own file list, declared bucketed by the key
-  // — the scan then reports `HashPartitioning(keyCols, numBuckets)`, which
-  // is by construction the same Murmur3 pmod layout `stage()` wrote, so a
-  // key-equi join against a `repartition(numBuckets, key)`-shaped batch
-  // plans ZERO extra exchanges. The manifest pins the file set, as an
-  // Iceberg snapshot does; the Iceberg analog of the scan is a
+  // relation over the commit's own file entries, declared bucketed by the
+  // key — the scan then reports `HashPartitioning(keyCols, numBuckets)`,
+  // which is by construction the same Murmur3 pmod layout `stage()` wrote,
+  // so a key-equi join against a `repartition(numBuckets, key)`-shaped
+  // batch plans ZERO extra exchanges. The manifest pins the file set, as
+  // an Iceberg snapshot does; the Iceberg analog of the scan is a
   // storage-partitioned join over a bucket partition transform
   // (SPARK-37375).
   // ---------------------------------------------------------------------
 
-  /** Type promotions Spark 4's parquet reader performs natively when the
-    * requested schema is wider than the file schema (probed in-sandbox;
-    * notably →String is NOT native). Wider promotions fall back to the
-    * per-schema-group aligned read ([[snapshotRaw]]).
-    */
-  private val nativeWiden: Set[(DataType, DataType)] = Set(
-    (ByteType, IntegerType), (ShortType, IntegerType), (IntegerType, LongType),
-    (IntegerType, DoubleType), (FloatType, DoubleType))
-
-  /** The scan reads `written` files as `target` exactly as [[snapshotRaw]]
-    * aligns them: every widening is native, and every column the files
-    * lack has no declared DEFAULT (the scan null-fills; the aligned read
-    * fills the default).
-    */
-  private def nativelyReadable(written: StructType, target: StructType): Boolean =
-    written.fields.forall { wf =>
-      target.fields.find(_.name == wf.name).exists { tf =>
-        tf.dataType == wf.dataType || nativeWiden((wf.dataType, tf.dataType))
-      }
-    } && target.fields.forall(tf =>
-      written.fieldNames.contains(tf.name) || SchemaEvolution.defaultOf(tf).isEmpty)
-
-  /** The commit's live files for `buckets`, as a DataFrame whose scan
-    * reports the bucket layout (`Bucketed: true` in explain), built from
-    * the manifest's file list — no catalog entry, no extra files. Each
-    * call builds its own relation, so a lazy frame keeps reading exactly
-    * the files of the commit it was built from.
+  /** The commit's files for `buckets` read as `readSchema`, as a DataFrame
+    * whose scan reports the bucket layout (`Bucketed: true` in explain) —
+    * [[scan]] with the table's bucket spec. No catalog entry, no extra
+    * files; evolved file groups (widened or added columns, declared
+    * DEFAULTs) read bucketed like current ones.
     *
     * Returns None when there are no matching files, when the commit was
-    * written under another bucket count, when an old file schema needs a
-    * non-native widening (rare: a →String widen) or lacks a column with a
-    * declared DEFAULT, or when a file's name does not carry its bucket id
-    * (a table staged before files were named for their bucket). The
-    * caller then takes the aligned read ([[snapshotRaw]]) or the
-    * union+reduce merge; the next merge of those buckets rewrites them
-    * under the current schema and naming, putting them back on this path.
+    * written under another bucket count, when a file's name does not
+    * carry its bucket id (it predates bucket naming), or when a file's key
+    * column type differs from `readSchema`'s. The caller then takes the
+    * aligned read ([[snapshotRaw]]) or the union+reduce merge. The next
+    * rewrite of an unnamed file's bucket puts it back on this path. A key
+    * type mismatch only occurs in a table whose key was widened before
+    * [[SchemaEvolution.reconcile]] rejected such widens: its older rows
+    * sit in the old type's hash buckets, and no merge moves them.
     */
   def bucketedState(
       spark: SparkSession,
@@ -890,21 +849,14 @@ final class LakeTable(
       buckets: Option[Set[Int]],
       readSchema: StructType): Option[DataFrame] = {
     if (ci.numBuckets > 0 && ci.numBuckets != numBuckets) return None
-    val wanted = ci.files.filter(f => buckets.forall(_.contains(f.bucket)))
-    if (wanted.isEmpty) return None
-    val compatible = wanted.map(_.schemaIdx).distinct.forall { idx =>
-      nativelyReadable(DataType.fromJson(ci.schemas(idx)).asInstanceOf[StructType], readSchema)
-    }
+    val wanted = filesOf(ci, buckets)
+    def keyTypes(s: StructType) = keyCols.map(k => s.fields.find(_.name == k).map(_.dataType))
+    val sameKeys = wanted.map(_.schemaIdx).distinct.forall(idx =>
+      keyTypes(ci.schemaAt(idx)) == keyTypes(readSchema))
     val named = wanted.forall(f =>
       BucketingUtils.getBucketId(Paths.get(f.path).getFileName.toString).contains(f.bucket))
-    if (!compatible || !named) return None
-    // Nullable and metadata-free, like the aligned read's output: any file
-    // column may hold nulls, and no field metadata rides into the frame.
-    val schema = StructType(readSchema.fields.map(f => StructField(f.name, f.dataType)))
-    Some(withSerialListing(spark) {
-      GraftSqlShim.bucketedParquet(spark, wanted.map(f => s"$root/${f.path}"), schema,
-        keyCols, numBuckets)
-    })
+    if (!sameKeys || !named) None
+    else scan(spark, ci, wanted, readSchema, Some(BucketSpec(numBuckets, keyCols, Nil)))
   }
 
   /** Maintenance compaction (Iceberg rewrite-data-files analog): rewrite
@@ -1061,8 +1013,10 @@ final class LakeTable(
 
   /** Snapshot EXPIRY (Iceberg `expire_snapshots` analog): drop all but the
     * last `keepLast` commits from the log and DELETE every data file no
-    * retained manifest references. Time travel below the new horizon is
-    * gone (that is the point — bounded history, bounded storage); the head
+    * retained manifest references, with its checksum sidecar and any
+    * batch dir it leaves without a data file. Time travel below the new
+    * horizon is gone (that is the point — bounded history, bounded
+    * storage); the head
     * and everything at-or-above the horizon resolve unchanged. Returns
     * (commits dropped, data files deleted).
     *
@@ -1102,7 +1056,8 @@ final class LakeTable(
     // data (cleaned by removeOrphanFiles) — never a resolvable commit
     // pointing at deleted parquet.
     drop.foreach(store.delete)
-    dead.foreach(p => Files.deleteIfExists(Paths.get(root, p)))
+    val deadFiles = dead.toSeq.map(Paths.get(root, _))
+    deleteDataFiles(deadFiles, deadFiles.map(_.getParent).distinct)
     resolved.clear() // memo may hold expired versions
     (drop.size, dead.size)
   }
@@ -1112,8 +1067,9 @@ final class LakeTable(
     * crashed writers and failed/speculative task attempts, which the
     * atomic-commit protocol makes invisible but not free. Only touches
     * files older than `olderThanMs` (default 0 = everything), the same
-    * in-flight-writer guard as the reference procedure. Returns the
-    * number of files deleted.
+    * in-flight-writer guard as the reference procedure; their sidecars
+    * and every batch dir left without a data file go too. Returns the
+    * number of data files deleted.
     */
   def removeOrphanFiles(olderThanMs: Long = 0L): Int = {
     val dataDir = Paths.get(root, "data")
@@ -1121,7 +1077,6 @@ final class LakeTable(
     val referenced: Set[String] = commitNames().map(materialize)
       .flatMap(_.files.map(_.path)).toSet
     val cutoff = System.currentTimeMillis() - olderThanMs
-    var n = 0
     val walk = Files.walk(dataDir)
     val orphans =
       try walk.iterator().asScala
@@ -1130,12 +1085,23 @@ final class LakeTable(
         .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
         .toSeq
       finally walk.close()
-    orphans.foreach { p => Files.deleteIfExists(p); n += 1 }
-    // drop now-empty batch dirs (cosmetic; keeps the layout readable)
-    listDir(dataDir).foreach { d =>
-      if (Files.isDirectory(d) && listDir(d).isEmpty) Files.deleteIfExists(d)
+    deleteDataFiles(orphans, listDir(dataDir).filter(Files.isDirectory(_)))
+    orphans.size
+  }
+
+  /** Delete data files through the Hadoop file system, which takes each
+    * file's checksum sidecar along (as [[stage]]'s deletes do), then each
+    * of `dirs` that no longer holds a parquet file, with its `_SUCCESS`
+    * marker. A dir with a subdirectory (an in-flight write's
+    * `_temporary`) stays.
+    */
+  private def deleteDataFiles(files: Seq[Path], dirs: Seq[Path]): Unit = {
+    val fs = new HPath(root).getFileSystem(LakeTable.hadoopConf)
+    files.foreach(p => fs.delete(new HPath(p.toUri), false))
+    dirs.foreach { d =>
+      if (listDir(d).forall(f => Files.isRegularFile(f) && !f.getFileName.toString.endsWith(".parquet")))
+        fs.delete(new HPath(d.toUri), true)
     }
-    n
   }
 
   /** Bucket-layout EVOLUTION (Iceberg `REPLACE PARTITION FIELD bucket(N,k)`
@@ -1177,7 +1143,7 @@ final class LakeTable(
     *
     * Executors write the files; only the driver publishes the manifest, so
     * task retries/speculation leave orphans that readers never see. Empty
-    * partitions write no file → absent buckets simply have no entry.
+    * partitions get no entry → absent buckets simply have no file.
     */
   def stage(df: DataFrame, batchId: Long, schemaIdx: Int, attempt: Long = 0L): Seq[FileEntry] = {
     val dir = f"data/b$batchId%06d-a$attempt"
@@ -1222,14 +1188,14 @@ final class LakeTable(
     // until the commit, so no reader sees a half-renamed batch. The Hadoop
     // rename carries the checksum sidecar along.
     val sparkName = "(part-(\\d{5})-.+)-(c\\d+\\..+)".r
-    val fs = new org.apache.hadoop.fs.Path(abs).getFileSystem(LakeTable.hadoopConf)
+    val fs = new HPath(abs).getFileSystem(LakeTable.hadoopConf)
     val staged: Seq[(String, Int, Path)] = listDir(Paths.get(abs))
       .filter(p => p.getFileName.toString.endsWith(".parquet"))
       .map { p =>
         p.getFileName.toString match {
           case sparkName(stem, idx, tail) =>
             val named = p.resolveSibling(s"$stem${BucketingUtils.bucketIdToString(idx.toInt)}.$tail")
-            if (!fs.rename(new org.apache.hadoop.fs.Path(p.toUri), new org.apache.hadoop.fs.Path(named.toUri)))
+            if (!fs.rename(new HPath(p.toUri), new HPath(named.toUri)))
               throw new IllegalStateException(s"cannot rename staged file $p to $named")
             (Paths.get(root).relativize(named).toString, idx.toInt, named)
           case other =>
@@ -1256,9 +1222,19 @@ final class LakeTable(
           override def call(): (Long, Map[String, (String, String)]) = fileMeta(p, statsCols)
         }))
     }
-    futs.map { case (rel, idx, f) =>
+    val entries = futs.map { case (rel, idx, f) =>
       val (rows, stats) = f.get()
       FileEntry(rel, idx, schemaIdx, rows, stats)
+    }
+    // A write always leaves partition 0's file, even when it holds no row.
+    // Such a file gets no manifest entry — no read opens it, no MoR stack
+    // grows by it — unless every file is empty: then one is kept, so an
+    // emptied table still has a file (and a schema) to read.
+    val (empty, nonEmpty) = entries.partition(_.rows == 0)
+    if (nonEmpty.isEmpty) entries.take(1)
+    else {
+      empty.foreach(e => fs.delete(new HPath(s"$root/${e.path}"), false))
+      nonEmpty
     }
   }
 
@@ -1278,7 +1254,7 @@ final class LakeTable(
   private[graft] def fileMeta(p: Path, statsCols: Set[String]): (Long, Map[String, (String, String)]) =
     try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri), LakeTable.hadoopConf)
+        new HPath(p.toUri), LakeTable.hadoopConf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
         val rows = r.getRecordCount
@@ -1379,9 +1355,6 @@ object LakeTable {
       if (i < 0) None
       else { t(i) = (t(i) + 1).toChar; Some(new String(t, 0, i + 1)) }
     }
-
-  /** Serializes [[withSerialListing]] conf flips (see its doc). */
-  private[table] val serialListingLock = new Object
 
   /** Open an existing table, ADOPTING the bucket layout recorded in its
     * commit log (safe across [[LakeTable.rebucket]] evolutions — a

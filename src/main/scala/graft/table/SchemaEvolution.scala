@@ -104,9 +104,13 @@ object SchemaEvolution {
     }
 
   /** Reconcile an incoming batch schema against the table schema. Returns
-    * the evolved table schema. Throws on incompatible type changes.
+    * the evolved table schema. Throws on incompatible type changes, and
+    * on any widen of one of `keyCols`: the table's rows are bucketed by
+    * the key's Murmur3 hash, which differs per type (an int key's old row
+    * would sit in another bucket than its long-typed update, and the key
+    * would be live twice).
     */
-  def reconcile(table: StructType, batch: StructType): StructType = {
+  def reconcile(table: StructType, batch: StructType, keyCols: Seq[String]): StructType = {
     val batchByName = batch.fields.map(f => f.name -> f).toMap
     val evolved = table.fields.map { tf =>
       batchByName.get(tf.name) match {
@@ -114,6 +118,9 @@ object SchemaEvolution {
           val t = widen(tf.dataType, bf.dataType).getOrElse(
             throw new IllegalArgumentException(
               s"incompatible type change for column ${tf.name}: ${tf.dataType} vs ${bf.dataType}"))
+          if (t != tf.dataType && keyCols.contains(tf.name))
+            throw new IllegalArgumentException(
+              s"key column ${tf.name} cannot widen from ${tf.dataType} to $t: rows are bucketed by its hash")
           tf.copy(dataType = t, nullable = tf.nullable || bf.nullable)
         case None => tf
       }

@@ -151,7 +151,7 @@ class LakeTableSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       SchemaEvolution.reconcile(
         StructType(Seq(StructField("x", LongType))),
-        StructType(Seq(StructField("x", BooleanType))))
+        StructType(Seq(StructField("x", BooleanType))), Nil)
     }
   }
 
@@ -401,6 +401,106 @@ class LakeTableSpec extends SparkSpec {
       assert(stateTables.isEmpty, s"mergeOnRead=$mor: catalog holds ${stateTables.toSeq}")
       assert(!Files.exists(java.nio.file.Paths.get(table.root, "_bucketed")), s"mergeOnRead=$mor")
     }
+  }
+
+  test("evolved files read bucketed: a widened column and a DEFAULT column, CoW merge and MoR snapshot") {
+    // `size` is written as int, then widened to long; `rank` is added with
+    // DEFAULT -1. Three events touch at most three of the eight buckets,
+    // so the state mixes both file schemas.
+    val tail = Seq(FlatEvent.mk(("r1", "p1.txt"), 701, "u"), FlatEvent.mk(("r2", "p2.txt"), 702, "u"),
+      FlatEvent.mk(("r3", "p3.txt"), 703, "d"))
+    val log = wideHead ++ tail
+    def evolved(es: Seq[FlatEvent]) = es.toDF().withColumn("size", col("lsn"))
+      .select(col("*"), SchemaEvolution.withDefault(lit(7L), "rank", "-1"))
+    for (mor <- Seq(false, true)) {
+      val table = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = mor)
+      CdcApply.applyBatch(spark, table, wideHead.toDF().withColumn("size", col("lsn").cast("int")), batchId = 0)
+      CdcApply.applyBatch(spark, table, evolved(tail), batchId = 1)
+      val ci = table.lastCommit().get
+      assert(ci.files.map(_.schemaIdx).distinct.size === 2, s"mergeOnRead=$mor: both file schemas live")
+      if (mor) {
+        val plan = table.snapshot(spark).get.queryExecution.executedPlan.toString
+        assert(plan.contains("Bucketed: true"), s"MoR snapshot must use the bucketed scan:\n$plan")
+        assert(!plan.contains("Exchange"), s"MoR snapshot must not shuffle:\n$plan")
+      } else {
+        val state = table.bucketedState(spark, ci, None, ci.schema)
+        assert(state.isDefined, "evolved CoW state must read bucketed")
+        val upd = FlatEvent.mk(("r4", "p4.txt"), 704, "u")
+        val merged = mergeOnlyBatchShuffles(state.get, evolved(Seq(upd)), ci.schema, 8)
+        assert(merged.where(col("path") === "p4.txt").select("rank").as[Long].collect().toSeq === Seq(7L))
+      }
+      val rows = table.snapshot(spark).get.collect()
+        .map(r => (r.getAs[String]("repo"), r.getAs[String]("path")) -> r).toMap
+      assert(rows.keySet === foldOracle(log).keySet, s"mergeOnRead=$mor")
+      foldOracle(log).foreach { case (k, e) =>
+        val r = rows(k)
+        assert(r.getAs[Long]("lsn") === e.lsn && r.getAs[Long]("size") === e.lsn, s"$k")
+        assert(r.getAs[Long]("rank") === (if (e.lsn > 700) 7L else -1L), s"mergeOnRead=$mor: $k rank")
+      }
+    }
+  }
+
+  test("a deleted referenced data file fails the read, naming the file") {
+    val table = new LakeTable(tmp(), numBuckets = 4)
+    CdcPipeline.replay(spark, randomLog(43, 100).toDF(), table, numBatches = 1)
+    val f = table.lastCommit().get.files.head
+    Files.delete(java.nio.file.Paths.get(table.root, f.path))
+    val reader = new LakeTable(table.root, numBuckets = 4)
+    val e = intercept[Exception](reader.snapshot(spark).get.count())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    val name = java.nio.file.Paths.get(f.path).getFileName.toString
+    assert(messages.exists(m => m != null && m.contains(name)), s"$e")
+  }
+
+  test("a key column widen is rejected before any write: the key's rows are bucketed by its type's hash") {
+    // int `id` keys, then a long-typed batch: Murmur3 hashes an int and
+    // the same long differently, so the update would land in another
+    // bucket than the key's live row.
+    def batch(ids: Seq[Int], lsn0: Long) = ids.zipWithIndex
+      .map { case (id, i) => (id, s"v$lsn0", "c0000000001", lsn0 + i, "u", 0, 1700000000000L) }
+      .toDF("id", "payload", "commit", "lsn", "op", "part", "ts_ms")
+    for (mor <- Seq(false, true)) {
+      val table = new LakeTable(tmp(), numBuckets = 8, keyCols = Seq("id"), mergeOnRead = mor)
+      CdcApply.applyBatch(spark, table, batch(1 to 40, 0L), batchId = 0)
+      val head = table.lastCommit().get
+      val e = intercept[IllegalArgumentException] {
+        CdcApply.applyBatch(spark, table, batch(1 to 20, 100L).withColumn("id", col("id").cast("long")),
+          batchId = 1)
+      }
+      assert(e.getMessage.contains("key column id"), s"mergeOnRead=$mor: ${e.getMessage}")
+      intercept[IllegalArgumentException] {
+        table.registerSchema(StructType(head.schema.fields.map(f =>
+          if (f.name == "id") f.copy(dataType = LongType) else f)).json)
+      }
+      assert(table.lastCommit().get.version === head.version, s"mergeOnRead=$mor: nothing committed")
+      val state = table.snapshot(spark).get.select("id", "lsn").as[(Int, Long)].collect()
+      assert(state.toMap === (1 to 40).map(id => id -> (id - 1).toLong).toMap && state.length === 40,
+        s"mergeOnRead=$mor: one row per key, the fold of batch 0")
+      // a zero-row slice with the wider key type is a metadata-only commit, not a widen
+      CdcApply.applyBatch(spark, table, batch(Nil, 0L).withColumn("id", col("id").cast("long")), batchId = 2)
+      assert(table.lastCommit().get.schema === head.schema, s"mergeOnRead=$mor")
+    }
+  }
+
+  test("stage() commits no zero-row file unless the whole write is empty") {
+    import scala.jdk.CollectionConverters._
+    val table = new LakeTable(tmp(), numBuckets = 4)
+    CdcApply.applyBatch(spark, table, Seq(FlatEvent.mk(("r", "a"), 1, "c")).toDF(), batchId = 0)
+    val files = table.lastCommit().get.files
+    assert(files.size === 1 && files.forall(_.rows > 0), s"$files")
+    val dataDir = java.nio.file.Paths.get(table.root, "data")
+    val onDisk = () => {
+      val w = Files.walk(dataDir)
+      try w.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+      finally w.close()
+    }
+    assert(onDisk() === files.map(f => java.nio.file.Paths.get(f.path).getFileName.toString).toSet,
+      "the empty files are deleted, not just left out")
+    // a truncate empties every bucket: one empty file keeps the table readable
+    CdcApply.applyBatch(spark, table, Seq(FlatEvent.mk(("r", "x"), 2, "t")).toDF(), batchId = 1)
+    val emptied = table.lastCommit().get.files
+    assert(emptied.size === 1 && emptied.head.rows === 0L)
+    assert(table.snapshot(spark).get.count() === 0L)
   }
 
   test("MoR time travel and lookups read through the bucketed scan: zero exchanges") {
@@ -655,6 +755,33 @@ class LakeTableSpec extends SparkSpec {
     assert(tableState(table)(("repo0", "p0.txt")).lsn === 9999L)
     // idempotent / no-op when history is already within bounds
     assert(table.expireSnapshots(keepLast = 5) === ((0, 0)))
+  }
+
+  test("expiry and orphan cleanup leave no checksum sidecar and no dead batch dir") {
+    import scala.jdk.CollectionConverters._
+    val table = new LakeTable(tmp(), numBuckets = 8)
+    CdcPipeline.replay(spark, randomLog(39, 400).toDF(), table, numBatches = 4)
+    val dataDir = java.nio.file.Paths.get(table.root, "data")
+    def entries(): Seq[java.nio.file.Path] = {
+      val w = Files.walk(dataDir)
+      try w.iterator().asScala.filter(Files.isRegularFile(_)).toSeq finally w.close()
+    }
+    def check(what: String): Unit = {
+      val referenced = table.lastCommit().get.files.map(f => dataDir.getParent.resolve(f.path)).toSet
+      val dirs = Files.list(dataDir).iterator().asScala.toSeq
+      dirs.foreach(d => assert(Files.list(d).iterator().asScala.exists(referenced.contains),
+        s"$what: $d holds no referenced data file"))
+      entries().filter(_.getFileName.toString.endsWith(".crc")).foreach { c =>
+        val data = c.resolveSibling(c.getFileName.toString.stripPrefix(".").stripSuffix(".crc"))
+        assert(Files.exists(data), s"$what: $c outlived its data file")
+      }
+    }
+    assert(table.expireSnapshots(keepLast = 1)._2 > 0)
+    check("after expiry")
+    // a crashed writer's staged-but-never-committed batch
+    table.stage(randomLog(40, 50).toDF().repartition(8, col("repo"), col("path")), 99L, 0, attempt = 99L)
+    assert(table.removeOrphanFiles() > 0)
+    check("after orphan cleanup")
   }
 
   test("tags: named refs time-travel, clamp snapshot expiry, and drop cleanly") {

@@ -84,8 +84,9 @@ object CdcApply {
       col("op").isin(Envelope.OpRead, Envelope.OpCreate, Envelope.OpUpdate,
         Envelope.OpDelete, Envelope.OpTruncate, Envelope.OpMessage, Envelope.OpTombstone)
 
-  /** Apply one flat-event microbatch to the table. Single-writer (driver). */
-  /** @param fenceByWatermark drop events at-or-below the committed
+  /** Apply one flat-event microbatch to the table. Single-writer (driver).
+    *
+    * @param fenceByWatermark drop events at-or-below the committed
     *        per-partition offset watermark. Correct ONLY when the transport
     *        delivers each source partition in order (binlog/Kafka semantics
     *        — the reference's restart fence makes the same assumption). For

@@ -247,7 +247,7 @@ object SparkEntry {
       val root = java.nio.file.Files.createTempDirectory("graft-dlq").toString
       val table = new LakeTable(root, numBuckets = 16)
       CdcPipeline.replay(s, log, table, numBatches = 2)
-      s.read.parquet(s"$root/_quarantine")
+      table.quarantine(s).get
         .select(col("repo"), col("path"), col("lsn"), col("op"))
     }),
 

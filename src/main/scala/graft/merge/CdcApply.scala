@@ -75,8 +75,9 @@ object CdcApply {
     * (`debezium-sink/.../dlq/ErrorReporter.java`, error handlers
     * `pipeline/ErrorHandler.java`): key/position columns present and a
     * known op. Malformed events are side-outputted to `_quarantine`
-    * instead of failing the batch (`errors.tolerance=all` analog); they
-    * still advance the offset watermark (they were delivered).
+    * ([[LakeTable.quarantine]]) instead of failing the batch
+    * (`errors.tolerance=all` analog); they still advance the offset
+    * watermark (they were delivered).
     */
   private def isWellFormed(keyCols: Seq[String]): Column =
     keyCols.map(col(_).isNotNull).reduce(_ && _) &&
@@ -154,13 +155,11 @@ object CdcApply {
       val eventsIn = stats.map(_.getAs[Long]("n")).sum
       val freshCount = stats.map(_.getAs[Long]("freshN")).sum
       val badCount = stats.map(_.getAs[Long]("badN")).sum
-      if (badCount > 0) {
-        // DLQ side output: quarantined verbatim with provenance, batch
-        // keeps going (errors.tolerance=all).
-        cached.where(quarantined)
-          .withColumn("__batchId", lit(batchId))
-          .write.mode("append").parquet(s"${table.root}/_quarantine")
-      }
+      val version = last.map(_.version).getOrElse(0L) + 1
+      // DLQ side output, batch keeps going (errors.tolerance=all); keyed by
+      // this apply's version, so a re-apply after a failed commit replaces it.
+      table.stageQuarantine(Option.when(badCount > 0)(
+        cached.where(quarantined).withColumn("__batchId", lit(batchId))), version)
       // Null-part groups (fully-malformed rows) must not advance any
       // partition's watermark: getAs[Int] would unbox null to 0 and fence
       // legitimate part-0 events.
@@ -182,7 +181,6 @@ object CdcApply {
             applied.getOrElse(part, 0L), Option(r.getAs[java.lang.Long]("maxTs")).map(_.toLong))
         }.toMap))
 
-      val version = last.map(_.version).getOrElse(0L) + 1
       if (freshCount == 0 && batchFence.isEmpty) {
         // Metadata-only commit: advance the batchId + watermark fences.
         // The TABLE schema does not evolve — no data arrived, so a wider

@@ -64,6 +64,7 @@ final case class CommitInfo(
   * {{{
   *   <root>/_commits/v<zero-padded>.json   // the commit log (source of truth)
   *   <root>/data/<batch-dir>/part-<N>-<uuid>_<N>.c000.snappy.parquet  // file of bucket N
+  *   <root>/_quarantine/v<version>/         // dead-letter rows of that apply
   * }}}
   * Per-batch metrics ride in each apply's commit JSON ([[metrics]] also
   * reads the `<root>/_metrics` parquet feed of older tables).
@@ -95,9 +96,9 @@ final case class CommitInfo(
   * Commit files are incremental manifests (delta + roll-up every
   * [[LakeTable.FullManifestEvery]]): driver metadata per commit is
   * O(touched buckets), not O(table files). At 100 TB raise `numBuckets` so
-  * one bucket ~ a few GB, and set `maxFileRows` so each bucket is a STACK
-  * of size-bounded files rather than one monolith (the read side — bucketed
-  * scan, MoR resolve, compaction — is multi-file-per-bucket native).
+  * one bucket ~ a few GB, and set `spark.sql.files.maxRecordsPerFile` so
+  * each bucket is a STACK of size-bounded files rather than one monolith
+  * (the read side is multi-file-per-bucket native); see [[stage]].
   */
 final class LakeTable(
     val root: String,
@@ -105,9 +106,6 @@ final class LakeTable(
     val keyCols: Seq[String] = Envelope.keyCols,
     val mergeOnRead: Boolean = false,
     val autoCompactDepth: Int = 0,
-    val maxFileRows: Long = 0L,
-    val bloomKeyNdv: Int = 0,
-    val writerOptions: Map[String, String] = Map.empty,
     val commitStore: Option[CommitStore] = None) {
   private def commitsDir: Path = Paths.get(root, "_commits")
 
@@ -240,6 +238,33 @@ final class LakeTable(
     val legacy = Paths.get(root, "_metrics")
     if (!Files.isDirectory(legacy)) current
     else spark.read.parquet(legacy.toString).unionByName(current, allowMissingColumns = true)
+  }
+
+  /** Dead-letter rows of the applies, with their `__batchId`: the
+    * `_quarantine/v<k>` dirs of committed versions k ≤ head (a failed
+    * apply's rows stay unread until its re-apply commits them), plus an
+    * older table's flat files. None = nothing quarantined.
+    */
+  def quarantine(spark: SparkSession): Option[DataFrame] = {
+    val head = commitVersions().lastOption.getOrElse(0L)
+    val versionDir = "v(\\d+)".r
+    val paths = listDir(Paths.get(root, "_quarantine")).filter { p =>
+      p.getFileName.toString match {
+        case versionDir(k) => Files.isDirectory(p) && k.toLong <= head
+        case name          => Files.isRegularFile(p) && name.endsWith(".parquet")
+      }
+    }
+    if (paths.isEmpty) None
+    else Some(spark.read.option("recursiveFileLookup", "true").parquet(paths.map(_.toString): _*))
+  }
+
+  /** Replace the dead-letter rows staged for commit `version` (None clears
+    * what a failed earlier attempt at that version left).
+    */
+  private[graft] def stageQuarantine(rows: Option[DataFrame], version: Long): Unit = {
+    val dir = new HPath(s"$root/_quarantine/v$version")
+    dir.getFileSystem(LakeTable.hadoopConf).delete(dir, true)
+    rows.foreach(_.write.mode("overwrite").parquet(dir.toString))
   }
 
   /** Register an externally-supplied schema into the table's schema
@@ -691,9 +716,9 @@ final class LakeTable(
     *  - a chunk whose pages are ALL dictionary-encoded yields its
     *    dictionary page as EXACT membership (this is why parquet drops
     *    the bloom there — the dictionary subsumes it);
-    *  - otherwise the chunk's bloom filter, when written
-    *    ([[bloomKeyNdv]]), yields sound probabilistic exclusion (no
-    *    false negatives);
+    *  - otherwise the chunk's bloom filter, when the writing session
+    *    enabled one (`parquet.bloom.filter.enabled#<col>=true`), yields
+    *    sound probabilistic exclusion (no false negatives);
     *  - anything else (legacy files, oversized or undecodable
     *    dictionaries, missing column) is unknown: "may contain anything".
     * An unreadable footer fails the lookup, naming the file.
@@ -908,17 +933,18 @@ final class LakeTable(
             struct(col("commit"), col("lsn")) > struct(lit(p.commit), lit(p.lsn)))
         }
         val laid0 = pruned.repartition(numBuckets, keyCols.map(col): _*)
-        // Clustered rewrite (Iceberg sort-order rewrite analog): with
-        // size-bounded multi-file buckets, maxRecordsPerFile splits each
-        // partition SEQUENTIALLY — sorting the partition by key first
-        // gives the bucket's files disjoint key ranges, so the manifest
-        // zone maps prune a point lookup to ~one file per stack instead
-        // of admitting every split file. Order never affects correctness
-        // (bucket membership and LWW are order-independent); skipped when
-        // no consumer of the order exists — single-file buckets have
-        // whole-bucket bounds regardless.
+        // Clustered rewrite (Iceberg sort-order rewrite analog): when the
+        // session bounds file size (`spark.sql.files.maxRecordsPerFile`),
+        // the write splits each partition SEQUENTIALLY — sorting the
+        // partition by key first gives the bucket's files disjoint key
+        // ranges, so the manifest zone maps prune a point lookup to ~one
+        // file per stack instead of admitting every split file. Order
+        // never affects correctness (bucket membership and LWW are
+        // order-independent); skipped when no consumer of the order
+        // exists — single-file buckets have whole-bucket bounds regardless.
         val laid =
-          if (maxFileRows > 0) laid0.sortWithinPartitions(keyCols.map(col): _*)
+          if (spark.conf.get("spark.sql.files.maxRecordsPerFile").toLong > 0)
+            laid0.sortWithinPartitions(keyCols.map(col): _*)
           else laid0
         val staged = stage(laid, ci.batchId, ci.schemaIdx, attempt = ci.version + 1)
         val untouched = ci.files.filterNot(f => buckets.contains(f.bucket))
@@ -1127,7 +1153,7 @@ final class LakeTable(
     lastCommit().flatMap { ci =>
       resolved(spark, ci, None).map { df =>
         val next = new LakeTable(root, newNumBuckets, keyCols, mergeOnRead,
-          autoCompactDepth, maxFileRows, bloomKeyNdv, writerOptions, commitStore)
+          autoCompactDepth, commitStore)
         val laid = df.repartition(newNumBuckets, keyCols.map(col): _*)
         val staged = next.stage(laid, ci.batchId, ci.schemaIdx, attempt = ci.version + 1)
         next.commit(ci.copy(version = ci.version + 1, files = staged,
@@ -1154,38 +1180,13 @@ final class LakeTable(
   def stage(df: DataFrame, batchId: Long, schemaIdx: Int, attempt: Long = 0L): Seq[FileEntry] = {
     val dir = f"data/b$batchId%06d-a$attempt"
     val abs = s"$root/$dir"
-    // maxFileRows > 0: size-bounded files per bucket (SURVEY §9 round-3
-    // item — at 100 TB one bucket is many GB; one multi-GB parquet file
-    // per bucket makes every downstream task, retry, and compaction move
-    // that whole file). Spark splits a partition's write at the row bound
-    // into part-NNNNN-…-c000/c001/… files that all keep the partition
-    // index — so the partition-id==bucket contract, the manifest, and the
-    // bucketed state read (which already reads multi-file buckets for MoR
-    // stacks) are unchanged; there are just ≥1 entries per bucket.
-    // writerOptions first, engine-owned options after (engine wins).
-    val writerU = writerOptions.foldLeft(df.write) { case (w, (k, v)) => w.option(k, v) }
-    val writer0 = if (maxFileRows > 0) writerU.option("maxRecordsPerFile", maxFileRows) else writerU
-    // bloomKeyNdv > 0: every staged file carries a parquet BLOOM FILTER
-    // per key column (standard parquet metadata, written by the normal
-    // writer — no second pass over the data). Zone maps prune by RANGE,
-    // which is blind inside an unsorted merge-on-read stack whose files
-    // all span the full key range; per-chunk membership evidence answers
-    // the orthogonal question — which keys a file CANNOT contain. For
-    // dictionary-encoded chunks that evidence is free (the dictionary
-    // page, exact — parquet deliberately drops the bloom there); the
-    // bloom covers the dictionary-FALLBACK regime, i.e. files whose
-    // per-chunk key cardinality outgrew the dictionary page. [[lookup]]
-    // probes both driver-side, and executor scans additionally skip
-    // whole row groups for the pushed key-equality filter (parquet-mr
-    // dictionary/bloom row-group filtering, on by default).
-    // `ndv` sizes the filter for the expected distinct keys PER FILE.
-    val writer = if (bloomKeyNdv > 0) {
-      keyCols.filter(c => df.schema.fieldNames.contains(c)).foldLeft(writer0) { (w, c) =>
-        w.option(s"parquet.bloom.filter.enabled#$c", "true")
-          .option(s"parquet.bloom.filter.expected.ndv#$c", bloomKeyNdv.toString)
-      }
-    } else writer0
-    writer.mode("overwrite").parquet(abs)
+    // Writer settings (codec, dictionary, page sizes) come from the
+    // session's confs. `spark.sql.files.maxRecordsPerFile` splits a
+    // bucket into part-NNNNN-…-c000/c001/… files that keep the partition
+    // index, so a bucket just has ≥1 entries; with
+    // `parquet.bloom.filter.enabled#<key col>` set, files carry the blooms
+    // [[lookup]] probes in chunks that fell back from dictionary encoding.
+    df.write.mode("overwrite").parquet(abs)
     // Name each file for its bucket, once, before its footer is read and
     // its manifest entry built: Spark's bucketed-file naming
     // (`BucketingUtils.bucketIdToString`) turns `part-00003-<uuid>-c000.snappy.parquet`
@@ -1341,7 +1342,8 @@ object LakeTable {
 
   /** Largest dictionary (distinct values per column chunk) the membership
     * probe will materialize as an exact set — above this the chunk falls
-    * back to its bloom filter, keeping the per-file evidence memo bounded.
+    * back to its bloom filter (if the session wrote one), keeping the
+    * per-file evidence memo bounded.
     */
   private[graft] val MaxDictProbe = 32768
 
@@ -1378,10 +1380,7 @@ object LakeTable {
       root: String,
       keyCols: Seq[String] = Envelope.keyCols,
       mergeOnRead: Boolean = false,
-      autoCompactDepth: Int = 0,
-      maxFileRows: Long = 0L,
-      bloomKeyNdv: Int = 0,
-      writerOptions: Map[String, String] = Map.empty): LakeTable = {
+      autoCompactDepth: Int = 0): LakeTable = {
     val dir = Paths.get(root, "_commits")
     require(Files.isDirectory(dir), s"no commit log at $root")
     val listing = Files.list(dir)
@@ -1393,8 +1392,7 @@ object LakeTable {
       finally listing.close()
     val n = parse(Files.readString(last)).fold(_.head, identity).numBuckets
     require(n > 0, s"commit log at $root predates bucket-layout tracking")
-    new LakeTable(root, n, keyCols, mergeOnRead, autoCompactDepth, maxFileRows,
-      bloomKeyNdv, writerOptions)
+    new LakeTable(root, n, keyCols, mergeOnRead, autoCompactDepth)
   }
 
   /** Full-manifest roll-up period: a commit whose version is a multiple of

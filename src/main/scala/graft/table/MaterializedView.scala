@@ -311,10 +311,11 @@ object MaterializedView {
       version: Long,
       numParts: Int = 4): DataFrame = {
     val d = delta(feed, groupCols, measure, measureAlias)
-    // right join: only touched groups produce events
+    // delta-preserving join, only touched groups produce events; hashed per task (a broadcast
+    // view would park a page-sized relation in the driver's block store until a GC)
     val nRows = coalesce(col("n_rows"), lit(0L)) + coalesce(col("d_rows"), lit(0L))
     val total = coalesce(col(measureAlias), lit(0L)) + coalesce(col(s"d_$measureAlias"), lit(0L))
-    view.join(d, groupCols, "right_outer")
+    d.hint("shuffle_hash").join(view, groupCols, "left_outer")
       .select(groupCols.map(col) ++ Seq(
         when(nRows > 0L, nRows).as("n_rows"),
         when(nRows > 0L, total).as(measureAlias),

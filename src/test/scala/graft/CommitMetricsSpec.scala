@@ -93,7 +93,7 @@ class CommitMetricsSpec extends SparkSpec {
     val m = table.metrics(spark).where(col("commitVersion") === r.version)
       .agg(sum("events"), sum("freshEvents"), sum("quarantined"), sum("fenced")).head()
     assert((m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3)) === (14L, 6L, 3L, 5L))
-    val dlq = spark.read.parquet(s"${table.root}/_quarantine").where(col("__batchId") === 1)
+    val dlq = table.quarantine(spark).get.where(col("__batchId") === 1)
     assert(dlq.count() === m.getLong(2))
   }
 

@@ -193,14 +193,50 @@ class LakeTableSpec extends SparkSpec {
     val r = CdcApply.applyBatch(spark, table, (good ++ bad).toDF(), batchId = 0)
     assert(r.committed && r.fresh === 2)
     assert(tableState(table).keySet === Set(("r", "a"), ("r", "b")), "bad rows never merge")
-    val dlq = spark.read.parquet(s"${table.root}/_quarantine")
+    val dlq = table.quarantine(spark).get
     assert(dlq.count() === 3)
     assert(dlq.where(col("op") === "x").count() === 1)
     assert(dlq.where(col("op").isNull).count() === 1, "NULL-op rows must quarantine, not vanish")
     // watermark advanced past the bad rows: replaying them is a no-op
     val r2 = CdcApply.applyBatch(spark, table, bad.toDF(), batchId = 1)
     assert(r2.reason === "metadata-only")
-    assert(spark.read.parquet(s"${table.root}/_quarantine").count() === 3, "no double quarantine")
+    assert(table.quarantine(spark).get.count() === 3, "no double quarantine")
+  }
+
+  test("quarantine is idempotent across a failed commit; legacy flat files still read") {
+    val good = Seq(FlatEvent.mk(("r", "a"), 1, "c"), FlatEvent.mk(("r", "b"), 2, "c"))
+    val bad = Seq(
+      FlatEvent.mk(("r", "c"), 3, "c").copy(path = null),
+      FlatEvent.mk(("r", "d"), 4, "x"))
+    val root = tmp()
+    // a commit backend whose first publish fails, after stage() and the
+    // quarantine write already ran
+    val failOnce = new graft.table.CommitStore {
+      private val files = new graft.table.FileCommitStore(java.nio.file.Paths.get(root, "_commits"))
+      private var failed = false
+      def listNames(): Seq[String] = files.listNames()
+      def read(name: String): String = files.read(name)
+      def create(name: String, content: String): Unit =
+        if (failed) files.create(name, content)
+        else { failed = true; throw new java.io.IOException(s"injected failure publishing $name") }
+      def replace(name: String, content: String): Unit = files.replace(name, content)
+      def delete(name: String): Unit = files.delete(name)
+    }
+    val table = new LakeTable(root, numBuckets = 4, commitStore = Some(failOnce))
+    intercept[java.io.IOException](CdcApply.applyBatch(spark, table, (good ++ bad).toDF(), batchId = 0))
+    assert(table.lastCommit().isEmpty)
+    assert(table.quarantine(spark).isEmpty, "an uncommitted apply's rows must stay invisible")
+    // the restarted batch passes the batchId fence and applies again
+    assert(CdcApply.applyBatch(spark, table, (good ++ bad).toDF(), batchId = 0).committed)
+    val dlq = table.quarantine(spark).get
+    assert(dlq.count() === bad.size, "each bad row appears once")
+    assert(dlq.select("lsn").as[Long].collect().sorted.toSeq === Seq(3L, 4L))
+
+    // an older table's flat `_quarantine` files read beside the per-version dirs
+    Seq(FlatEvent.mk(("r", "old"), 0, "x")).toDF().withColumn("__batchId", lit(-1L))
+      .write.mode("append").parquet(s"$root/_quarantine")
+    val legacy = table.quarantine(spark).get
+    assert(legacy.select("lsn").as[Long].collect().sorted.toSeq === Seq(0L, 3L, 4L))
   }
 
   test("compaction drops retained tombstones, canonicalizes schema, preserves state") {
@@ -610,14 +646,16 @@ class LakeTableSpec extends SparkSpec {
     val log = (1 to 400).map { i =>
       FlatEvent.mk(keys(rnd.nextInt(keys.size)), i.toLong, Seq("c", "u", "r")(rnd.nextInt(3)))
     }
-    val table = new LakeTable(tmp(), numBuckets = 4, maxFileRows = 10L)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
+    val table = new LakeTable(tmp(), numBuckets = 4)
+    withConf("spark.sql.files.maxRecordsPerFile" -> "10") {
+      CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
+    }
     assert(tableState(table) === foldOracle(log), "split-file table converges to the fold oracle")
 
     val ci = table.lastCommit().get
     assert(ci.files.size > table.numBuckets, "buckets must have split into multiple files")
     assert(ci.files.groupBy(_.bucket).values.exists(_.size > 1), "some bucket holds a file stack")
-    ci.files.foreach(f => assert(f.rows <= 10L, s"file ${f.path} exceeds maxFileRows: ${f.rows}"))
+    ci.files.foreach(f => assert(f.rows <= 10L, s"file ${f.path} exceeds maxRecordsPerFile: ${f.rows}"))
 
     val state = table.bucketedState(spark, ci, None, ci.schema).get
     val upd = FlatEvent.mk(("repo0", "p0.txt"), 999, "u")
@@ -1408,12 +1446,28 @@ class LakeTableSpec extends SparkSpec {
     membershipPruningScenario(new LakeTable(tmp(), numBuckets = 4, mergeOnRead = true))
   }
 
-  test("membership pruning via bloom filters: dictionary-fallback files (bloomKeyNdv)") {
+  test("membership pruning via bloom filters: dictionary-fallback files (bloom confs)") {
     // dictionary encoding disabled → every chunk is in the fallback
-    // regime high-cardinality keys hit at scale; only the written blooms
-    // (bloomKeyNdv > 0) can prune here
-    membershipPruningScenario(new LakeTable(tmp(), numBuckets = 4, mergeOnRead = true,
-      bloomKeyNdv = 64, writerOptions = Map("parquet.enable.dictionary" -> "false")))
+    // regime high-cardinality keys hit at scale; only the blooms the
+    // session asks the parquet writer for can prune here
+    val table = new LakeTable(tmp(), numBuckets = 4, mergeOnRead = true)
+    val blooms = Seq("repo", "path").flatMap(c => Seq(
+      s"parquet.bloom.filter.enabled#$c" -> "true", s"parquet.bloom.filter.expected.ndv#$c" -> "64"))
+    withConf(blooms :+ ("parquet.enable.dictionary" -> "false"): _*) {
+      membershipPruningScenario(table)
+    }
+    // positive control: the staged files really carry key blooms, so the
+    // pruning above is the bloom branch's doing
+    val f = table.lastCommit().get.files.head
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"${table.root}/${f.path}"), new org.apache.hadoop.conf.Configuration()))
+    try {
+      import scala.jdk.CollectionConverters._
+      val chunk = r.getRowGroups.get(0).getColumns.asScala.find(_.getPath.toDotString == "path").get
+      assert(chunk.getEncodingStats.hasNonDictionaryEncodedPages, "the key chunk must be dictionary-free")
+      assert(r.readBloomFilter(chunk) != null, s"staged file ${f.path} must carry a bloom on `path`")
+    } finally r.close()
   }
 
   test("materialized view: incremental refresh equals direct rebuild at every version; zero groups drop") {
@@ -1593,16 +1647,19 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("clustered compaction: split files carry disjoint key ranges; lookup prunes to ~one file") {
-    // wide key space over few buckets + small maxFileRows → each bucket's
-    // rewrite splits into several files
+    // wide key space over few buckets + a small session file bound →
+    // each bucket's rewrite splits into several files, and compaction
+    // sorts because the bound is set
     val rnd = new scala.util.Random(29)
     val keys = for (r <- 0 until 10; p <- 0 until 40) yield (s"repo$r", f"p$p%02d.txt")
     val log = (1 to 1000).map(i => FlatEvent.mk(keys(rnd.nextInt(keys.size)), i.toLong, "u"))
-    val table = new LakeTable(tmp(), numBuckets = 4, mergeOnRead = true, maxFileRows = 20L)
-    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
-    val before = tableState(table)
-
-    table.compact(spark)
+    val table = new LakeTable(tmp(), numBuckets = 4, mergeOnRead = true)
+    val before = withConf("spark.sql.files.maxRecordsPerFile" -> "20") {
+      CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
+      val st = tableState(table)
+      table.compact(spark)
+      st
+    }
     assert(tableState(table) === before, "clustered compaction must preserve the state")
     val ci = table.lastCommit().get
     val byBucket = ci.files.groupBy(_.bucket)

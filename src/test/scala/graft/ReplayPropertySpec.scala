@@ -63,9 +63,10 @@ class ReplayPropertySpec extends SparkSpec {
       check(s"any-batching exactPlan=$exactPlan", Prop.forAll(genLog(withTruncate = true),
         Gen.listOfN(3, Gen.choose(0.0, 1.0)), Gen.oneOf(false, true),
         Gen.oneOf(0L, 3L)) { (log, cutsRaw, mor, maxRows) =>
-        log.isEmpty || withConf((if (exactPlan) exactReduceConf(4) else Nil): _*) {
+        val fileBound = "spark.sql.files.maxRecordsPerFile" -> maxRows.toString
+        log.isEmpty || withConf((if (exactPlan) exactReduceConf(4) else Nil) :+ fileBound: _*) {
           val table = new LakeTable(Files.createTempDirectory("prop").toString,
-            numBuckets = 4, mergeOnRead = mor, maxFileRows = maxRows)
+            numBuckets = 4, mergeOnRead = mor)
           val cuts = cutsRaw.map(c => (c * log.size).toInt).sorted
           val batches = (0 +: cuts :+ log.size).sliding(2).collect { case Seq(a, b) => log.slice(a, b) }.toSeq
           batches.zipWithIndex.foreach { case (b, i) =>

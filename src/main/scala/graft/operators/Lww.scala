@@ -62,12 +62,12 @@ object Lww {
   /** `groupBy(keyCols).agg(max_by)` in the input's column order. Key
     * columns pass through the aggregate as the grouping attributes (NOT
     * re-extracted from the winner struct): the output then still carries
-    * the exchange's HashPartitioning, so a downstream co-partitioned
-    * join/write needs no further exchange. Extracting keys from the struct
-    * would mint fresh attributes and silently discard the partitioning
-    * (one extra shuffle).
+    * the input's or the exchange's HashPartitioning, so a downstream
+    * co-partitioned join/write needs no further exchange. Extracting keys
+    * from the struct would mint fresh attributes and silently discard the
+    * partitioning (one extra shuffle).
     */
-  private def reduceKeyed(df: DataFrame, keyCols: Seq[String]): DataFrame = {
+  private[graft] def reduceKeyed(df: DataFrame, keyCols: Seq[String]): DataFrame = {
     val others = df.columns.filterNot(keyCols.contains)
     df.groupBy(keyCols.map(col): _*)
       .agg(max_by(struct(others.map(col): _*), pos).as("__w"))

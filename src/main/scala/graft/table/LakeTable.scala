@@ -431,16 +431,35 @@ final class LakeTable(
     * one winner per key). MERGE-ON-READ tables reduce across each
     * bucket's file stack at read time: apply only appends per-batch
     * winner files (O(batch) apply, zero state scan — the Iceberg MoR
-    * pattern), and the read-side reduce is shuffle-FREE through the
-    * bucketed scan (its HashPartitioning satisfies the aggregate's
-    * required distribution). The truncate fence, burned into the data on
-    * the CoW path, applies as a read filter here.
+    * pattern). Through the bucketed scan the reduce is shuffle-FREE and
+    * keeps the bucket layout: the key columns stay the aggregate's
+    * grouping attributes, so the output reports `HashPartitioning(keyCols,
+    * numBuckets)` with one scan partition per bucket — partition id ==
+    * bucket by construction, with no exchange that AQE could coalesce. A
+    * key-equi join of two such reads ([[changeFeed]]), a bucket rewrite
+    * ([[compactBuckets]]) and a key filter ([[lookupMany]], pushed below
+    * the reduce into the scan) then plan no exchange of their own. The
+    * unbucketed fallback ([[snapshotRaw]]: a foreign layout, files that
+    * predate bucket naming) reduces through an exchange of
+    * `spark.sql.shuffle.partitions` and re-extracts the keys from the
+    * winner, so its output claims no partitioning and a consumer that
+    * needs the layout repartitions. The truncate fence, burned into the
+    * data on the CoW path, applies as a read filter here.
     */
   def resolved(
       spark: SparkSession,
       ci: CommitInfo,
-      buckets: Option[Set[Int]] = None): Option[DataFrame] = {
-    if (!mergeOnRead) return snapshotRaw(spark, ci, buckets)
+      buckets: Option[Set[Int]] = None): Option[DataFrame] =
+    resolve(spark, ci, buckets).map(_._1)
+
+  /** [[resolved]], paired with whether its partition id is the bucket
+    * (the merge-on-read bucketed branch).
+    */
+  private def resolve(
+      spark: SparkSession,
+      ci: CommitInfo,
+      buckets: Option[Set[Int]]): Option[(DataFrame, Boolean)] = {
+    if (!mergeOnRead) return snapshotRaw(spark, ci, buckets).map(_ -> false)
     // Zone-map fence pruning: the fence keeps only rows with
     // commit ≥ fence.commit, so a file whose max(commit) bound is below it
     // holds zero surviving rows — drop it from the read list entirely (no
@@ -455,9 +474,8 @@ final class LakeTable(
         if (kept.isEmpty) fs.take(1) else kept
       }.toSeq)
     }
-    val raw = bucketedState(spark, scanCi, buckets, ci.schema)
-      .orElse(snapshotRaw(spark, scanCi, buckets))
-    raw.map { df =>
+    val bucketed = bucketedState(spark, scanCi, buckets, ci.schema)
+    bucketed.orElse(snapshotRaw(spark, scanCi, buckets)).map { df =>
       // The struct comparison is the exact fence but does NOT push to
       // parquet; the redundant `commit >= fence.commit` conjunct is
       // implied by it (struct > ⟹ first component ≥) and IS pushable, so
@@ -467,7 +485,8 @@ final class LakeTable(
       val fenced = ci.fence.fold(df)(f =>
         df.where(col("commit") >= lit(f.commit) &&
           struct(col("commit"), col("lsn")) > struct(lit(f.commit), lit(f.lsn))))
-      graft.operators.Lww.reduce(fenced, keyCols)
+      if (bucketed.isDefined) graft.operators.Lww.reduceKeyed(fenced, keyCols) -> true
+      else graft.operators.Lww.reduce(fenced, keyCols) -> false
     }
   }
 
@@ -496,41 +515,78 @@ final class LakeTable(
     * table the feed lets an incremental consumer catch up from any
     * version without replaying the log.
     *
-    * Scale shape: one live-state diff per consecutive version pair,
-    * MANIFEST-PRUNED — the two commits' file lists name exactly which
-    * buckets changed (file-set difference), so a pair touches
-    * O(state in changed buckets), never O(table). A small incremental
-    * commit on a 100 TB table diffs a few buckets; a compaction or
-    * rebucket commit that only rewrote physical layout diffs to empty
-    * rows (CDF reports logical changes, not rewrites). Within changed
-    * buckets a full-outer join on the key classifies each transition;
-    * carried-forward rows (a CoW bucket rewrite rewrites whole buckets)
-    * compare equal and drop out. Versions with evolved schemas align to
-    * the newest in-range schema (null-fill added, upcast widened), same
-    * rules as [[snapshotRaw]].
+    * Scale shape: one live-state [[diff]] per consecutive version pair,
+    * MANIFEST-PRUNED to the buckets whose file sets changed, so a pair
+    * touches O(state in changed buckets), never O(table). A compaction
+    * or rebucket commit that only rewrote physical layout diffs to empty
+    * rows (CDF reports logical changes, not rewrites), but it still reads
+    * both sides of every bucket it rewrote; a consumer that only needs
+    * the net change over a range reads it once with [[netChanges]].
+    * Versions with evolved schemas align to the newest in-range schema
+    * (null-fill added, upcast widened), same rules as [[snapshotRaw]].
     */
   def changeFeed(spark: SparkSession, fromVersion: Long, toVersion: Long): Option[DataFrame] = {
     // Materialize ONLY the window: versions are decoded from filenames,
     // and the JSON parse + delta-chain fold happens just for the pair
     // commits in (from, to] and each one's predecessor — a per-microbatch
-    // consumer (the streaming view maintainer) stays O(window), not
-    // O(total commit history), per call.
-    val entries = commitNames()
-    if (entries.isEmpty) return None
-    def versionOf(n: String): Long = n.stripPrefix("v").stripSuffix(".json").toLong
-    val vs = entries.map(versionOf)
+    // consumer stays O(window), not O(total commit history), per call.
+    val vs = commitVersions()
     val idxInRange = vs.indices.filter(i => vs(i) > fromVersion && vs(i) <= toVersion)
-    if (idxInRange.isEmpty && !vs.exists(_ <= toVersion)) return None
-    val neededIdx: Set[Int] =
-      idxInRange.toSet ++ idxInRange.map(_ - 1).filter(_ >= 0) ++
-        // the newest commit ≤ toVersion supplies the target schema
-        vs.indices.reverse.find(i => vs(i) <= toVersion).toSet
-    if (neededIdx.isEmpty) return None
-    val byIdx: Map[Int, CommitInfo] = neededIdx.map(i => i -> materialize(entries(i))).toMap
-    val target = byIdx(vs.indices.reverse.find(i => vs(i) <= toVersion).get).schema
+    if (idxInRange.isEmpty) return None
+    val neededIdx = idxInRange.toSet ++ idxInRange.map(_ - 1).filter(_ >= 0)
+    val byIdx: Map[Int, CommitInfo] = neededIdx.map(i => i -> commitAt(vs(i))).toMap
+    // the newest in-range commit supplies the target schema
+    val target = byIdx(idxInRange.last).schema
+    // (prev, cur) pairs for every commit version in (from, to]; a commit
+    // whose version is the first ever diffs against nothing (all inserts).
+    Some(idxInRange.map(i => diff(spark, if (i == 0) None else Some(byIdx(i - 1)), byIdx(i), target))
+      .reduce(_.unionAll(_)))
+  }
+
+  /** The NET row-level change from the state at `fromVersion` to the
+    * state at `toVersion`, in [[changeFeed]]'s columns with
+    * `_commit_version` = the `to` commit's version: one [[diff]] of the
+    * two endpoint commits, reading only those two manifests and, within
+    * the buckets whose file sets differ, each side's state once. Each
+    * endpoint is the newest commit at or below it, and a `fromVersion`
+    * below every commit is the empty state (0 = bootstrap: all inserts).
+    * None when no commit lies in `(fromVersion, toVersion]`.
+    *
+    * Per key this is the range's [[changeFeed]] with every intermediate
+    * state cancelled out: a signed sum over the feed (+1 for 'insert' /
+    * 'update_postimage', −1 for 'delete' / 'update_preimage') telescopes
+    * to the same per-key total, which is what lets a distributive view
+    * ([[MaterializedView.maintain]]) fold any lag in one diff. A layout
+    * rewrite in the range costs nothing extra. A caller folding onto its
+    * own state at `fromVersion` must check that this commit is still
+    * retained (expiry would turn it into the empty state).
+    */
+  def netChanges(spark: SparkSession, fromVersion: Long, toVersion: Long): Option[DataFrame] = {
+    val vs = commitVersions()
+    vs.filter(v => v > fromVersion && v <= toVersion).lastOption.map { to =>
+      val cur = commitAt(to)
+      diff(spark, vs.filter(_ <= fromVersion).lastOption.map(commitAt), cur, cur.schema)
+    }
+  }
+
+  private def commitAt(version: Long): CommitInfo = materialize(f"v$version%020d.json")
+
+  /** The live-row changes from `prev` (None = the empty state) to `cur`,
+    * aligned to `target`, with `_commit_version` = `cur.version`. The two
+    * manifests name the buckets whose file sets differ and only those are
+    * read. Within them a full-outer join on the key classifies each
+    * transition; carried-forward rows (a CoW bucket rewrite rewrites whole
+    * buckets) compare equal and drop out. The join is a plain `===` on the
+    * key (a null key would never match itself), which is exact because
+    * stored keys are never null: `CdcApply.isWellFormed` sends a null-key
+    * event to quarantine before it is applied. Two merge-on-read reads
+    * through the bucketed scan are co-partitioned on these join keys, so
+    * the join plans no exchange.
+    */
+  private def diff(spark: SparkSession, prev: Option[CommitInfo], cur: CommitInfo,
+      target: StructType): DataFrame = {
     val dataCols = target.fieldNames.toSeq
     val valCols = dataCols.filterNot(keyCols.contains)
-
     def empty: DataFrame =
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), target)
     def live(ci: CommitInfo, buckets: Set[Int]): DataFrame =
@@ -539,35 +595,25 @@ final class LakeTable(
         .getOrElse(empty)
     def bucketFiles(ci: CommitInfo): Map[Int, Set[String]] =
       ci.files.groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.path).toSet }
-
-    // (prev, cur) pairs for every commit version in (from, to]; a commit
-    // whose version is the first ever diffs against nothing (all inserts).
-    val pairs: Seq[(Option[CommitInfo], CommitInfo)] =
-      idxInRange.map(i => (if (i == 0) None else Some(byIdx(i - 1)), byIdx(i)))
-    if (pairs.isEmpty) return None
-
-    val perPair = pairs.map { case (prevOpt, cur) =>
-      val prevFiles = prevOpt.fold(Map.empty[Int, Set[String]])(bucketFiles)
-      val curFiles = bucketFiles(cur)
-      val changed = (prevFiles.keySet ++ curFiles.keySet)
-        .filter(b => prevFiles.getOrElse(b, Set.empty) != curFiles.getOrElse(b, Set.empty))
-      val pre = prevOpt.filter(_ => changed.nonEmpty).fold(empty)(live(_, changed)).as("a")
-      val post = (if (changed.nonEmpty) live(cur, changed) else empty).as("b")
-      val joinCond = keyCols.map(k => col(s"a.$k") <=> col(s"b.$k")).reduce(_ && _)
-      val differs = valCols.map(c => !(col(s"a.$c") <=> col(s"b.$c"))).reduce(_ || _)
-      def side(s: String, ct: String) =
-        struct(dataCols.map(c => col(s"$s.$c").as(c)) :+ lit(ct).as("_change_type"): _*)
-      pre.join(post, joinCond, "full_outer")
-        .select(
-          when(col(s"a.${keyCols.head}").isNull, array(side("b", "insert")))
-            .when(col(s"b.${keyCols.head}").isNull, array(side("a", "delete")))
-            .when(differs, array(side("a", "update_preimage"), side("b", "update_postimage")))
-            .as("ch"))
-        .select(explode(col("ch")).as("c"))
-        .select(dataCols.map(c => col(s"c.$c")) :+ col("c._change_type") :+
-          lit(cur.version).as("_commit_version"): _*)
-    }
-    Some(perPair.reduce(_.unionAll(_)))
+    val prevFiles = prev.fold(Map.empty[Int, Set[String]])(bucketFiles)
+    val curFiles = bucketFiles(cur)
+    val changed = (prevFiles.keySet ++ curFiles.keySet)
+      .filter(b => prevFiles.getOrElse(b, Set.empty) != curFiles.getOrElse(b, Set.empty))
+    val pre = prev.filter(_ => changed.nonEmpty).fold(empty)(live(_, changed)).as("a")
+    val post = (if (changed.nonEmpty) live(cur, changed) else empty).as("b")
+    val joinCond = keyCols.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+    val differs = valCols.map(c => !(col(s"a.$c") <=> col(s"b.$c"))).reduce(_ || _)
+    def side(s: String, ct: String) =
+      struct(dataCols.map(c => col(s"$s.$c").as(c)) :+ lit(ct).as("_change_type"): _*)
+    pre.join(post, joinCond, "full_outer")
+      .select(
+        when(col(s"a.${keyCols.head}").isNull, array(side("b", "insert")))
+          .when(col(s"b.${keyCols.head}").isNull, array(side("a", "delete")))
+          .when(differs, array(side("a", "update_preimage"), side("b", "update_postimage")))
+          .as("ch"))
+      .select(explode(col("ch")).as("c"))
+      .select(dataCols.map(c => col(s"c.$c")) :+ col("c._change_type") :+
+        lit(cur.version).as("_commit_version"): _*)
   }
 
   /** Point lookup: live row(s) for ONE key, reading only the key's bucket —
@@ -575,11 +621,15 @@ final class LakeTable(
     * serving-path read; at 100 TB with buckets of a few GB this is one
     * file-stack scan, not a table scan). The bucket is computed driver-side
     * with the same Murmur3 pmod as [[bucketCol]]; within the bucket a
-    * key-equality filter selects the row. On a copy-on-write table the
-    * filter is pushed to parquet; on a merge-on-read table it applies
-    * after the per-bucket LWW reduce, so every row of each admitted file
-    * is read (a keyed reduce that pushed it below the reduce was
-    * measured to read more bytes per lookup, not fewer).
+    * key-equality filter selects the row. The filter is pushed to
+    * parquet: on a merge-on-read table it tests only the per-bucket LWW
+    * reduce's grouping keys, so it commutes with the reduce and sits
+    * below it in the bucketed scan (the unbucketed fallback filters after
+    * the reduce). Parquet then also runs its own row-group dictionary
+    * filter on the executors, re-reading the dictionary pages that the
+    * driver-side admission below already probed; on small merge-on-read
+    * stacks those reads outweigh the rows they skip (measured: more input
+    * bytes per lookup than reading every row of each admitted file).
     *
     * Option contract: None = PROVABLY absent without any scan — the table
     * is empty, or every file in the key's bucket was excluded by its zone
@@ -601,8 +651,7 @@ final class LakeTable(
     * touched × stack depth) — and buckets no key maps to are never read.
     * The row filter is one `struct(keys) IN (typed key literals)` — a
     * single InSet probe per row at any key count — beside a `col IN
-    * (values)` per key column, pushed to parquet on copy-on-write tables
-    * (see [[lookup]]). Same Option contract as [[lookup]]: None = every
+    * (values)` per key column, pushed to parquet (see [[lookup]]). Same Option contract as [[lookup]]: None = every
     * requested key is provably absent, with zero scan. Beyond the cap,
     * use [[lookupJoin]].
     */
@@ -902,7 +951,7 @@ final class LakeTable(
     * touched buckets), so this is about tombstone GC + schema
     * canonicalization, not file counts; on a multi-file-per-bucket layout
     * (100 TB: bucket = a directory of size-bounded files) the same
-    * repartition-by-key rewrite applies.
+    * per-bucket rewrite applies ([[compactBuckets]]).
     */
   def compact(spark: SparkSession, tombstoneRetention: Option[LogPos] = None): Option[CommitInfo] =
     compactBuckets(spark, (0 until numBuckets).toSet, tombstoneRetention)
@@ -918,7 +967,10 @@ final class LakeTable(
     * entries over untouched. The rewrite resolves LWW across each
     * selected bucket's file stack and lands one file per bucket at the
     * current table schema; tombstones at-or-below `tombstoneRetention`
-    * are dropped in the REWRITTEN buckets only. At 100 TB this is the
+    * are dropped in the REWRITTEN buckets only. On a merge-on-read table
+    * read through the bucketed scan the rewrite is shuffle-free (each
+    * scan partition is its bucket); otherwise the resolved rows are
+    * repartitioned by key. At 100 TB this is the
     * difference between a maintenance pass sized to the hot buckets and
     * one sized to the table.
     */
@@ -927,12 +979,15 @@ final class LakeTable(
       buckets: Set[Int],
       tombstoneRetention: Option[LogPos] = None): Option[CommitInfo] =
     lastCommit().flatMap { ci =>
-      resolved(spark, ci, Some(buckets).filter(_.size < numBuckets)).map { df =>
+      resolve(spark, ci, Some(buckets).filter(_.size < numBuckets)).map { case (df, bucketed) =>
         val pruned = tombstoneRetention.fold(df) { p =>
           df.where(col("op") =!= Envelope.OpDelete ||
             struct(col("commit"), col("lsn")) > struct(lit(p.commit), lit(p.lsn)))
         }
-        val laid0 = pruned.repartition(numBuckets, keyCols.map(col): _*)
+        // A bucketed merge-on-read read already is the layout (partition
+        // id == bucket), so it is written as it is, with no shuffle; any
+        // other read is laid out by key.
+        val laid0 = if (bucketed) pruned else pruned.repartition(numBuckets, keyCols.map(col): _*)
         // Clustered rewrite (Iceberg sort-order rewrite analog): when the
         // session bounds file size (`spark.sql.files.maxRecordsPerFile`),
         // the write splits each partition SEQUENTIALLY — sorting the

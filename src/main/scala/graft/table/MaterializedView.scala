@@ -47,21 +47,22 @@ object MaterializedView {
 
   /** Catch a derived view table up to the base table's head — the
     * streaming-IVM loop. ONE [[refreshEvents]]+apply folds the WHOLE lag
-    * range `(viewV, baseV]` (round 4, same O(1)-commits-per-catch-up
-    * contract as [[JoinView.maintain]]): the signed-delta algebra is
-    * LINEAR, so the range feed — the concatenation of per-version diffs
-    * — nets exactly like sequential per-version folds (a key updated
-    * v1→v2→v3 contributes −m₁+m₂ −m₂+m₃ = −m₁+m₃; an insert-then-delete
-    * nets to zero and [[delta]] drops the group). The view table's
-    * commit `batchId` IS the base version it reflects, so the catch-up
-    * is crash-safe by construction: a crash
-    * between the base commit and the view commit just leaves the view
-    * behind, and the next call (or the next microbatch) folds exactly
-    * the missing window, fenced by the view's own batchId. An
-    * empty view table bootstraps itself: the horizon segment's feed is
-    * all inserts, so no separate build step exists. Maintenance commits
-    * on the base (compaction, rebucket) diff to zero feed rows and
-    * advance the view with an empty metadata-only commit. MIN/MAX views
+    * `(viewV, baseV]` (same O(1)-commits-per-catch-up contract as
+    * [[JoinView.maintain]]), from ONE diff of the two endpoint states
+    * ([[LakeTable.netChanges]]): the signed-delta algebra is LINEAR, so
+    * the per-version diffs of the lag telescope to the endpoint diff (a
+    * key updated v1→v2→v3 contributes −m₁+m₂ −m₂+m₃ = −m₁+m₃; an
+    * insert-then-delete nets to zero). The catch-up therefore reads the
+    * base state at two versions, whatever the lag, and a layout-only
+    * commit in the lag (compaction, rebucket) costs nothing extra. The
+    * view table's commit `batchId` IS the base version it reflects, so
+    * the catch-up is crash-safe by construction: a crash between the
+    * base commit and the view commit just leaves the view behind, and
+    * the next call (or the next microbatch) folds exactly the missing
+    * window, fenced by the view's own batchId. An empty view table
+    * bootstraps itself: the diff from version 0 is all inserts, so no
+    * separate build step exists. A lag with no logical change advances
+    * the view with an empty metadata-only commit. MIN/MAX views
     * ([[refreshMax]]) stay per-version by contract — the extremum is
     * not distributive under deletes and its suspect recount reads the
     * base AT the folded version.
@@ -71,13 +72,12 @@ object MaterializedView {
     val viewV = dv.table.lastCommit().map(_.batchId).getOrElse(0L)
     // Retention check for a NON-EMPTY view: every version from the view's
     // own position to head must still be retained. If snapshot expiry
-    // dropped any, the change feed would pair the horizon commit against
-    // an OLDER retained predecessor (or nothing) and re-emit already-
-    // folded state ON TOP of the view (permanent double counts) — fail
-    // loudly instead; the operator must rebuild (drop the view table,
-    // maintain again). An EMPTY view needs no history: the horizon
-    // commit pairing with nothing IS its correct full-insert bootstrap,
-    // and pre-horizon segments resolve to None and are skipped.
+    // dropped the view's version, the diff would start from an older
+    // retained commit (or nothing) and re-emit already-folded state ON
+    // TOP of the view (permanent double counts) — fail loudly instead;
+    // the operator must rebuild (drop the view table, maintain again). An
+    // EMPTY view needs no history: the diff from nothing IS its correct
+    // full-insert bootstrap.
     if (viewV > 0L && viewV < baseV) {
       val have = base.commitVersions().toSet
       val missing = (viewV to baseV).filterNot(have)
@@ -88,7 +88,7 @@ object MaterializedView {
             "rebuild the view from scratch")
     }
     if (viewV < baseV) {
-      base.changeFeed(spark, viewV, baseV).foreach { feed =>
+      base.netChanges(spark, viewV, baseV).foreach { feed =>
         val viewCols = dv.groupCols ++ Seq("n_rows", dv.measureAlias)
         val state = dv.table.snapshot(spark)
           .map(_.select(viewCols.map(col): _*))

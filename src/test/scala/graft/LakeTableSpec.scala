@@ -426,6 +426,30 @@ class LakeTableSpec extends SparkSpec {
     assert(tableState(mor) === foldOracle(log))
   }
 
+  test("pre-bucket-naming MoR compaction in an AQE session with shuffle partitions == numBuckets keeps rows in their buckets") {
+    // The unbucketed read reduces through an exchange AQE may coalesce; its
+    // output must claim no layout, so the compaction still repartitions.
+    val log = wideHead ++ wideTail
+    val morSeed = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = true)
+    CdcPipeline.replay(spark, wideHead.toDF(), morSeed, numBatches = 2)
+    val mor = toUnsuffixedFormat(morSeed.root, mergeOnRead = true)
+    assert(CdcApply.applyBatch(spark, mor, wideTail.toDF(), batchId = 2).committed)
+    withConf("spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+        "spark.sql.shuffle.partitions" -> "8") {
+      val before = mor.lastCommit().get
+      assert(mor.bucketedState(spark, before, None, before.schema).isEmpty, "the stacks read unbucketed")
+      val compacted = mor.compact(spark).get
+      assert(compacted.files.nonEmpty)
+      compacted.files.foreach { f =>
+        val misplaced = spark.read.parquet(s"${mor.root}/${f.path}")
+          .where(pmod(hash(col("repo"), col("path")), lit(8)) =!= f.bucket).count()
+        assert(misplaced === 0L, s"${f.path} (bucket ${f.bucket}) holds $misplaced rows of other buckets")
+      }
+      assert(tableState(mor) === foldOracle(log))
+    }
+  }
+
   test("bucketed state registers nothing: no catalog table, no link dir") {
     val log = wideHead ++ wideTail
     for (mor <- Seq(false, true)) {
@@ -539,15 +563,17 @@ class LakeTableSpec extends SparkSpec {
     assert(table.snapshot(spark).get.count() === 0L)
   }
 
+  /** A merge-on-read read planned through the bucketed scan with no exchange. */
+  private def shuffleFree(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("Bucketed: true"), s"$what must use the bucketed scan:\n$plan")
+    assert(!plan.contains("Exchange"), s"$what must not shuffle:\n$plan")
+  }
+
   test("MoR time travel and lookups read through the bucketed scan: zero exchanges") {
     val log = randomLog(13, 200)
     val table = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = true)
     CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
-    def shuffleFree(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"), s"$what must use the bucketed scan:\n$plan")
-      assert(!plan.contains("Exchange"), s"$what: the read-side LWW reduce must not shuffle:\n$plan")
-    }
     shuffleFree(table.snapshotAt(spark, 2L).get, "snapshotAt(older version)")
     val keys = log.take(3).map(e => Seq[Any](e.repo, e.path))
     shuffleFree(table.lookupMany(spark, keys).get, "lookupMany")
@@ -636,6 +662,38 @@ class LakeTableSpec extends SparkSpec {
     val plan = resolved.queryExecution.executedPlan.toString
     assert(plan.contains("Bucketed: true"), s"resolved read must use the bucketed scan:\n$plan")
     assert(!plan.contains("Exchange"), s"the read-side LWW reduce must not shuffle:\n$plan")
+    // the reduce keeps the keys as its grouping attributes: the output
+    // still reports the bucket layout
+    val physical = resolved.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    physical.outputPartitioning match {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        assert(h.numPartitions === 8)
+        assert(h.expressions.map {
+          case a: org.apache.spark.sql.catalyst.expressions.Attribute => a.name
+          case e => fail(s"partitioning expression is not a column: $e")
+        } === Seq("repo", "path"))
+      case other => fail(s"resolved read lost the bucket layout: $other\n$plan")
+    }
+  }
+
+  test("merge-on-read change feed, net changes and compaction plan ZERO exchanges") {
+    val log = randomLog(17, 300)
+    val table = new LakeTable(tmp(), numBuckets = 8, mergeOnRead = true)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 3)
+    shuffleFree(table.changeFeed(spark, 1L, 2L).get, "changeFeed(1, 2)")
+    shuffleFree(table.netChanges(spark, 1L, 3L).get, "netChanges(1, 3)")
+    val plans = executedPlans(table.compact(spark))
+    val writes = plans.filter(_.contains("InsertIntoHadoopFsRelationCommand"))
+    assert(writes.size === 1, s"one compaction write, got:\n${plans.mkString("\n\n")}")
+    assert(writes.head.contains("Bucketed: true"), s"compaction reads the bucketed scan:\n${writes.head}")
+    assert(!writes.head.contains("Exchange"), s"compaction must not shuffle:\n${writes.head}")
+    assert(tableState(table) === foldOracle(log))
+    val ci = table.lastCommit().get
+    assert(ci.files.map(_.bucket).sorted === ci.files.map(_.bucket).distinct.sorted, "one file per bucket")
+    assert(table.changeFeed(spark, ci.version - 1, ci.version).get.count() === 0L)
   }
 
   test("multi-file buckets: size-bounded files, state scan still bucketed, one exchange") {
@@ -1160,6 +1218,63 @@ class LakeTableSpec extends SparkSpec {
       s"a ${halves.size}-version lag must fold in ONE view commit, got ${vtB.commitVersions().size}")
     assert(vtA.commitVersions().size === halves.size, "positive control")
     assert(vtB.lastCommit().get.batchId === halves.size.toLong)
+  }
+
+  test("netChanges nets like the change feed over applies, compaction, schema patch, truncate, restore and bootstrap") {
+    import graft.table.MaterializedView
+    val m = length(col("content")).cast("long")
+    // per-key signed (count, measure) sums: the view algebra's input
+    def signed(feed: org.apache.spark.sql.DataFrame): Map[(String, String), (Long, Long)] = feed
+      .withColumn("__s", when(col("_change_type").isin("insert", "update_postimage"), 1L).otherwise(-1L))
+      .groupBy("repo", "path")
+      .agg(sum(col("__s")).as("n"), sum(col("__s") * coalesce(m, lit(0L))).as("s"))
+      .where(col("n") =!= 0L || col("s") =!= 0L)
+      .as[(String, String, Long, Long)].collect().map(r => (r._1, r._2) -> (r._3, r._4)).toMap
+    // the last two batches land after the truncate (lsn 1000), so they
+    // are not fenced off as older than it
+    val batches = randomLog(73, 480).grouped(120).toSeq.zipWithIndex.map { case (b, i) =>
+      if (i < 2) b else b.map(e => FlatEvent.mk((e.repo, e.path), e.lsn + 2000L, e.op))
+    }
+    for (mor <- Seq(false, true)) {
+      val table = new LakeTable(tmp(), numBuckets = 4, mergeOnRead = mor)
+      val dv = MaterializedView.DerivedView(new LakeTable(tmp(), numBuckets = 2, keyCols = Seq("repo")),
+        Seq("repo"), length(col("content")), "total_chars")
+      def viewAtHead(label: String): Unit = {
+        MaterializedView.maintain(spark, table, dv)
+        val head = table.lastCommit().get.version
+        val want = MaterializedView.build(spark, table, head, Seq("repo"), length(col("content")), "total_chars")
+          .get.as[(String, Long, Long)].collect().toSet
+        val got = dv.table.snapshot(spark).get.select("repo", "n_rows", "total_chars")
+          .as[(String, Long, Long)].collect().toSet
+        assert(got === want, s"mergeOnRead=$mor, $label: maintained view != build at v$head")
+        assert(dv.table.lastCommit().get.batchId === head)
+      }
+      def apply(b: Int, events: Seq[FlatEvent]): Unit =
+        assert(CdcApply.applyBatch(spark, table, events.toDF(), batchId = b).committed)
+      apply(0, batches(0))                                            // v1
+      apply(1, batches(1))                                            // v2
+      viewAtHead("bootstrap from version 0")
+      table.compact(spark)                                            // v3
+      val ci = table.lastCommit().get
+      table.registerSchema(ci.schema.add("note", StringType).json)    // v4
+      apply(2, FlatEvent.mk(("repo0", "p0.txt"), 1000L, "t") +:       // v5
+        (0 until 6).map(i => FlatEvent.mk((s"repo$i", "t.txt"), 1001L + i, "c")))
+      viewAtHead("compaction, schema patch, truncate")
+      apply(3, batches(2))                                            // v6
+      table.restore(2L)                                               // v7
+      apply(4, batches(3))                                            // v8
+      viewAtHead("apply, restore")
+      assert(table.lastCommit().get.version === 8L)
+      val ranges = Seq(0L -> 8L, 0L -> 2L, 1L -> 3L, 2L -> 4L, 3L -> 5L, 4L -> 6L, 5L -> 7L, 6L -> 8L, 2L -> 8L)
+      ranges.foreach { case (from, to) =>
+        val net = table.netChanges(spark, from, to).get
+        assert(net.select("_commit_version").distinct().as[Long].collect().forall(_ == to))
+        assert(signed(net) === signed(table.changeFeed(spark, from, to).get),
+          s"mergeOnRead=$mor: netChanges($from, $to) != changeFeed($from, $to)")
+      }
+      assert(signed(table.netChanges(spark, 2L, 3L).get).isEmpty, "a compaction nets to nothing")
+      assert(table.netChanges(spark, 8L, 9L).isEmpty && table.netChanges(spark, 3L, 3L).isEmpty)
+    }
   }
 
   test("derived view maintenance fails loudly when history expired past the view's version") {

@@ -48,16 +48,38 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         n.addAndGet(metric(sc.stageInfo.taskMetrics))
     }
     spark.sparkContext.addSparkListener(meter)
-    try {
-      action
-      var prev = -1L; var stable = 0; var waited = 0
-      while (stable < 3 && waited < 8000) {
-        val cur = n.get
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        Thread.sleep(250); waited += 250
-      }
-    } finally spark.sparkContext.removeSparkListener(meter)
+    try { action; settle(n.get) }
+    finally spark.sparkContext.removeSparkListener(meter)
     n.get
+  }
+
+  /** The executed plan of every query `action` runs (writes included),
+    * from a QueryExecutionListener; like [[taskMetric]], the listener
+    * bus is polled until the capture is stable.
+    */
+  protected def executedPlans(action: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { action; settle(plans.size.toLong) }
+    finally spark.listenerManager.unregister(listener)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(plans).asScala.toSeq
+  }
+
+  /** Wait until `read` returns the same value three polls in a row (at
+    * most 8 s): the listener bus posts asynchronously.
+    */
+  private def settle(read: => Long): Unit = {
+    var prev = -1L; var stable = 0; var waited = 0
+    while (stable < 3 && waited < 8000) {
+      val cur = read
+      if (cur == prev) stable += 1 else { stable = 0; prev = cur }
+      Thread.sleep(250); waited += 250
+    }
   }
 
   /** Input records actually READ by `action` — the observable for
